@@ -59,14 +59,26 @@ class BnplEngine:
     # -- command side -----------------------------------------------------
     def _emit(self, event: dict) -> None:
         """Append one event (durability point; producer/producer.go:16-25
-        analog). One file per event keeps micro-batch replay exact."""
+        analog). One file per event keeps micro-batch replay exact.
+
+        Published atomically: the line is written under a dot-prefixed
+        name, which Spark's file listing skips, then renamed into place.
+        A write that fails part-way leaves no visible file, so the next
+        ``process()`` never reads a torn event."""
         event.setdefault(
             "ingest_ts",
             datetime.now(timezone.utc).strftime("%Y-%m-%dT%H:%M:%S.%f")[:-3]
             + "Z")
-        path = os.path.join(self.in_dir, f"evt-{uuid.uuid4().hex}.jsonl")
-        with open(path, "w", encoding="utf-8") as f:
-            f.write(json.dumps(event, ensure_ascii=False) + "\n")
+        name = f"evt-{uuid.uuid4().hex}.jsonl"
+        tmp = os.path.join(self.in_dir, f".{name}.tmp")
+        try:
+            with open(tmp, "w", encoding="utf-8") as f:
+                f.write(json.dumps(event, ensure_ascii=False) + "\n")
+            os.replace(tmp, os.path.join(self.in_dir, name))
+        except BaseException:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
+            raise
 
     def purchase(self, user_id: str, amount: int,
                  product_id: str | None = None,

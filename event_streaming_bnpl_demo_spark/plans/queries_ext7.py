@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import load_table, maybe_broadcast
+from ..sources.tables import table_disk_bytes
 from .catalog import register
 
 
@@ -42,17 +43,11 @@ def _scan_scaled_partitions(sf_dir: str, table: str,
     exchanges whose IN-FLIGHT row mass far exceeds their collapsed
     output (AQE sizes those for the output and under-parallelizes).
     At 100 TB the clamp ceiling is the knob; the shape is unchanged."""
-    import os
-
-    from ..sources.tables import table_path
-    try:
-        path = table_path(sf_dir, table)
-        size = (sum(e.stat().st_size for e in os.scandir(path)
-                    if e.is_file())
-                if os.path.isdir(path) else os.path.getsize(path))
-    except OSError:
+    size = table_disk_bytes(sf_dir, table)
+    if size is None:
         return lo
     return max(lo, min(hi, size // (2 * 1024 * 1024)))
+
 
 def _guarded_int_key(col: str, op_name: str):
     """Narrow a bigint key column to int with a LIVE domain guard:

@@ -28,6 +28,7 @@ from ..operators.pagerank import (DAMP_DEN as _DAMP_DEN,
                                   SCALE as _SCALE,
                                   pagerank_fixedpoint)
 from ..sources import load_table
+from ..sources.tables import table_disk_bytes
 from .catalog import register
 
 _N_ITER = 5
@@ -53,21 +54,14 @@ def _edge_layout_partitions(spark: SparkSession, sf_dir: str,
     clamp returns the session conf unchanged, so cluster deployments
     (where the conf is sized to the cluster, not 32) are unaffected.
     """
-    import os
-
-    from ..sources.tables import table_path
     try:
         conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except ValueError:
         # non-numeric conf (e.g. "auto" on some platforms): the
         # scheduler's planned width is the honest stand-in ceiling
         conf = int(spark.sparkContext.defaultParallelism)
-    try:
-        path = table_path(sf_dir, "lineitem")
-        size = (sum(e.stat().st_size for e in os.scandir(path)
-                    if e.is_file())
-                if os.path.isdir(path) else os.path.getsize(path))
-    except OSError:
+    size = table_disk_bytes(sf_dir, "lineitem")
+    if size is None:
         # non-local path (object store): derivation no-ops to the conf
         return conf
     # conf is the CEILING even when it is under lo: a session that

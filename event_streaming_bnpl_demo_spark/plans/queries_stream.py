@@ -255,79 +255,34 @@ def stream_static_join_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 from .queries_core import ASOF_ORACLE  # noqa: E402 - after registrations
 
 
-def build_asof_stream(spark: SparkSession, in_dir: str,
-                      api: str = "group_state") -> DataFrame:
+def build_asof_stream(spark: SparkSession, in_dir: str) -> DataFrame:
     """The streaming as-of topology, unstarted: one-file-per-trigger
-    parquet stream -> groupBy(user_id %% ASOF_BUCKETS) -> bucketed
-    stateful fold in UPDATE mode, rematching each bucket's users with
-    ONE grouped merge_asof (streaming/asof_state.py — the per-user
-    twin `asof_update` is kept as the law-test reference; a
-    parametrized test pins the folds' fixpoints equal). Factored out
-    so tests/test_plans.py can pin the state-store shape (exactly one
-    hashpartitioning(bucket) exchange feeding the stateful node)
-    without running the query.
+    parquet stream -> groupBy(user_id %% ASOF_BUCKETS) ->
+    applyInPandasWithState(asof_update_bucketed) in UPDATE mode,
+    rematching each bucket's users with ONE grouped merge_asof
+    (streaming/asof_state.py). Factored out so tests can pin the
+    state-store shape (exactly one hashpartitioning(bucket) exchange
+    feeding the stateful node) and run the fold on crafted input."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    ``api`` picks the state API carrying the SAME fold:
-    ``group_state`` = applyInPandasWithState (asof_update_bucketed),
-    ``tws`` = Spark 4 transformWithStateInPandas
-    (BucketedAsofProcessor, packed-chunk ListState event logs — needs
-    the RocksDB state store: wrap the run in
-    streaming.state.rocksdb_state_store), ``tws_ttl`` = the
-    bounded-state production variant (BucketedAsofProcessorTTL,
-    event-time timers + watermark; within-horizon-equal by law).
-    Cross-API equivalence is law-pinned
-    (test_stream_asof_corrects_out_of_order_arrival and the randomized
-    cross-fold test); group_state stays the flagship default because
-    it measures faster end-to-end on this workload (4-batch
-    availableNow, warm: sf0.1 ~3.1 s vs ~4.9 s, sf1 3.8 vs 5.0 — the
-    r10 packed-chunk ListState layout closed the part of the gap that
-    scales, 12.8 -> 5.0 s at sf1; what remains is the tws
-    state-server + RocksDB per-batch lifecycle, profiled with numbers
-    in BucketedAsofProcessor's docstring, not the fold, which is
-    identical). Re-evaluate at Spark's applyInPandasWithState
-    retirement."""
     from ..streaming.asof_state import (ASOF_BUCKETS, ASOF_OUTPUT_SCHEMA,
-                                        BUCKETED_STATE_SCHEMA, NO_TIMEOUT,
-                                        BucketedAsofProcessor,
-                                        BucketedAsofProcessorTTL,
+                                        BUCKETED_STATE_SCHEMA,
                                         asof_update_bucketed)
 
-    stream = (spark.readStream
-              .schema("user_id long, event_id long, event_type string, "
-                      "ts_us long")
-              .option("maxFilesPerTrigger", "1")
-              .parquet(in_dir))
-    if api == "tws_ttl":
-        # bounded-state production path: event-time timers need a
-        # watermarked column; ttl defaults wide so availableNow runs
-        # over the test data stay exact (within-horizon law)
-        return (stream
-                .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-                .withWatermark("ts", "1 hour")
-                .withColumn("bucket", F.pmod(F.col("user_id"),
-                                             F.lit(ASOF_BUCKETS)))
-                .groupBy("bucket")
-                .transformWithStateInPandas(
-                    BucketedAsofProcessorTTL(ttl_s=24 * 3600),
-                    outputStructType=ASOF_OUTPUT_SCHEMA,
-                    outputMode="update",
-                    timeMode="eventTime"))
-    bucketed = (stream
-                .withColumn("bucket", F.pmod(F.col("user_id"),
-                                             F.lit(ASOF_BUCKETS)))
-                .groupBy("bucket"))
-    if api == "tws":
-        return bucketed.transformWithStateInPandas(
-            BucketedAsofProcessor(),
-            outputStructType=ASOF_OUTPUT_SCHEMA,
-            outputMode="update",
-            timeMode="none")
-    return bucketed.applyInPandasWithState(
-        asof_update_bucketed,
-        outputStructType=ASOF_OUTPUT_SCHEMA,
-        stateStructType=BUCKETED_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=NO_TIMEOUT)
+    return (spark.readStream
+            .schema("user_id long, event_id long, event_type string, "
+                    "ts_us long")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(in_dir)
+            .withColumn("bucket", F.pmod(F.col("user_id"),
+                                         F.lit(ASOF_BUCKETS)))
+            .groupBy("bucket")
+            .applyInPandasWithState(
+                asof_update_bucketed,
+                outputStructType=ASOF_OUTPUT_SCHEMA,
+                stateStructType=BUCKETED_STATE_SCHEMA,
+                outputMode="update",
+                timeoutConf=GroupStateTimeout.NoTimeout))
 
 
 @register(
@@ -352,8 +307,8 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-USER keys paid one Arrow/state round-trip per touched user per
     batch, ~15k at sf1, which WAS the wall clock: 22 s -> 4.2 s at
     sf1); the whole bucket rematches in one grouped merge_asof.
-    Production bounds state with watermark TTL (module docstring);
-    availableNow + unbounded retention makes this run exact.
+    Retention is unbounded (full retroactive correction needs the full
+    log), so availableNow runs are exact.
     """
     import uuid as _uuid
 

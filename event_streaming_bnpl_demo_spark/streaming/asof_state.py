@@ -6,49 +6,41 @@ out-of-order arrival — a view arriving in a later micro-batch than
 
 Structured Streaming has no native as-of join (stream-stream joins are
 windowed equi/interval joins); this is exactly the custom-operator gap
-the UDF/state surface exists for. Mechanism:
+the UDF/state surface exists for. Mechanism (:func:`asof_update_bucketed`):
 
-- state per user: the views and purchases seen so far (epoch-micro
-  timestamps + ids) and a monotonically increasing version counter;
-- each micro-batch folds its rows in, then re-emits the CURRENT best
-  match for every purchase of the touched user (update-mode
-  semantics: later batches revise earlier emissions);
+- state per bucket (``user_id %% ASOF_BUCKETS``): the views and
+  purchases seen so far (owner user id, epoch-micro timestamp, id),
+  each purchase's last-emitted match, and a version counter;
+- each micro-batch folds its rows in, rematches the whole bucket with
+  ONE grouped ``merge_asof``, and emits every purchase whose match
+  changed (update-mode semantics: later batches revise earlier
+  emissions);
 - the reader takes, per purchase, the row with the highest version —
   the fixpoint — which equals the batch as-of join over the full log
   no matter how the events were split into batches or reordered
   across them. The catalog query's oracle is literally the batch
-  as-of SQL (plans/queries_core.ASOF_ORACLE).
+  as-of SQL (plans/queries_core.ASOF_ORACLE), and the randomized law
+  test compares the fixpoint against ``operators.asof.asof_join``.
 
-Scale: state is partitioned by user in the state store (RocksDB at
-deploy), one shuffle per micro-batch on user_id; Arrow batches carry
-grouped rows so the Python hop is vectorized. Per-user match
-recomputation is a bisect over the user's sorted views — linear in
-that user's history, embarrassingly parallel across users. Unbounded
-retention here is the demo posture; production bounds it with a
-watermark-driven TTL (GroupStateTimeout / transformWithState timers),
-trading retroactive-correction depth for bounded state.
+Scale: one shuffle per micro-batch on the bucket; Arrow batches carry
+grouped rows so the Python hop is vectorized, and each batch makes at
+most ASOF_BUCKETS Python group-calls. Retention is unbounded: full
+retroactive correction needs the full log.
+
+A twin of this fold on Spark 4's typed-state processor API was
+removed; its measured sf0.1 wall was 4.9 s against 3.1 s here, and it
+can be recovered from git history if ``applyInPandasWithState`` is
+deprecated.
 """
 
 from __future__ import annotations
 
-from bisect import bisect_right
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor, StatefulProcessorHandle)
-from pyspark.sql.types import (ArrayType, BinaryType, LongType, StructField,
-                               StructType)
-
-ASOF_STATE_SCHEMA = StructType([
-    StructField("v_ts", ArrayType(LongType())),
-    StructField("v_id", ArrayType(LongType())),
-    StructField("p_ts", ArrayType(LongType())),
-    StructField("p_id", ArrayType(LongType())),
-    StructField("version", LongType()),
-])
+from pyspark.sql.streaming.state import GroupState
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 ASOF_OUTPUT_SCHEMA = StructType([
     StructField("user_id", LongType()),
@@ -58,111 +50,20 @@ ASOF_OUTPUT_SCHEMA = StructType([
     StructField("version", LongType()),
 ])
 
-_OUT_COLS = [f.name for f in ASOF_OUTPUT_SCHEMA.fields]
-
-
-def _match_views(view_ts: np.ndarray, view_id: np.ndarray,
-                 q_ts: np.ndarray
-                 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized nearest-prior-view lookup: for each query timestamp,
-    the latest view with v_ts <= q_ts, ties preferring the larger view
-    id (matches the oracle's ORDER BY v.ts DESC, v.event_id DESC —
-    lexsort puts the largest id last within a timestamp, and
-    searchsorted(side='right') - 1 lands on it). Returns
-    (has_match, view_id, view_ts) arrays."""
-    if len(view_ts) == 0 or len(q_ts) == 0:
-        z = np.zeros(len(q_ts), dtype=np.int64)
-        return np.zeros(len(q_ts), dtype=bool), z, z
-    order = np.lexsort((view_id, view_ts))
-    vt, vi = view_ts[order], view_id[order]
-    idx = np.searchsorted(vt, q_ts, side="right")
-    has = idx > 0
-    j = np.maximum(idx - 1, 0)
-    return has, np.where(has, vi[j], 0), np.where(has, vt[j], 0)
-
-
-def asof_update(key: tuple, pdfs: Iterator[pd.DataFrame],
-                state: GroupState) -> Iterator[pd.DataFrame]:
-    """Fold a micro-batch into one user's state and emit the CURRENT
-    match for every purchase whose match this batch created or changed
-    (rows: ASOF_OUTPUT_SCHEMA; view columns null when no prior view
-    exists yet). Emit-on-change is sound because the downstream reader
-    keeps each purchase's highest-version row: an unchanged purchase's
-    last emission is still its current truth, so re-emitting it would
-    only re-ship bytes the sink already holds. The whole fold is
-    numpy-vectorized (one searchsorted over the user's sorted views),
-    no per-row Python."""
-    if state.exists:
-        sv_ts, sv_id, sp_ts, sp_id, version = state.get
-        v_ts, v_id = list(sv_ts), list(sv_id)
-        p_ts, p_id = list(sp_ts), list(sp_id)
-    else:
-        v_ts, v_id, p_ts, p_id, version = [], [], [], [], 0
-    n_old_p, n_old_v = len(p_ts), len(v_ts)
-    old_v_ts = np.asarray(v_ts, dtype=np.int64)
-    old_v_id = np.asarray(v_id, dtype=np.int64)
-    for pdf in pdfs:
-        if not len(pdf):
-            continue
-        is_v = pdf["event_type"].to_numpy() == "view"
-        ts = pdf["ts_us"].to_numpy(np.int64)
-        eid = pdf["event_id"].to_numpy(np.int64)
-        v_ts += ts[is_v].tolist(); v_id += eid[is_v].tolist()
-        p_ts += ts[~is_v].tolist(); p_id += eid[~is_v].tolist()
-    version += 1
-    state.update((v_ts, v_id, p_ts, p_id, version))
-
-    pts = np.asarray(p_ts, dtype=np.int64)
-    pid = np.asarray(p_id, dtype=np.int64)
-    has, mvi, mvt = _match_views(np.asarray(v_ts, dtype=np.int64),
-                                 np.asarray(v_id, dtype=np.int64), pts)
-
-    emit = np.ones(len(pts), dtype=bool)
-    if n_old_p:
-        if len(v_ts) == n_old_v:
-            # no new views: every pre-existing purchase is unchanged
-            emit[:n_old_p] = False
-        else:
-            ohas, ovi, _ = _match_views(old_v_ts, old_v_id, pts[:n_old_p])
-            emit[:n_old_p] = ((ohas != has[:n_old_p])
-                              | (ovi != mvi[:n_old_p]))
-    if not emit.any():
-        return
-    e_has = has[emit]
-    e_pts, e_vt = pts[emit], mvt[emit]
-    secs = e_pts // 1_000_000 - e_vt // 1_000_000
-    n = int(emit.sum())
-    out = pd.DataFrame({
-        "user_id": np.full(n, key[0], dtype=np.int64),
-        "purchase_id": pid[emit],
-        "view_id": pd.array(mvi[emit], dtype="Int64"),
-        "seconds_since_view": pd.array(secs, dtype="Int64"),
-        "version": np.full(n, version, dtype=np.int64),
-    })
-    out.loc[~e_has, ["view_id", "seconds_since_view"]] = pd.NA
-    yield out
-
-
-#: Bucket count for the bucketed flagship fold (below). 64 buckets keep
-#: every state-store partition busy at `scoped_shuffle_partitions(8)`
-#: while capping the per-micro-batch Python group-call count at 64 —
-#: per-USER keys pay one Arrow/state round-trip per touched user per
-#: batch (~15k calls/batch at sf1), which dominates the wall clock long
-#: before the fold itself does. At cluster scale this is the
-#: parallelism knob: set buckets to 2-4x the state-store partition
-#: count so every partition holds a few buckets (skew smoothing)
-#: while the group-call count stays O(buckets); per-bucket state is
-#: total-events/buckets, so more buckets also bound the largest Arrow
-#: batch. COST CAVEAT: GroupState holds one opaque row per key, so a
-#: touched bucket deserializes and rewrites its ENTIRE history through
-#: Arrow every micro-batch — per-batch state I/O grows O(total events
-#: / buckets) per touched bucket for the life of the stream. That is
-#: the exact-demo posture (full retroactive correction needs the full
-#: log); the bounded-state production path is the watermark-TTL
-#: variant (asof_update_ttl), which caps both the rewrite and the
-#: retention at the TTL horizon. Per-USER keys remain the right choice
-#: when per-entity event-time TTL/timers are the point
-#: (asof_update_ttl).
+#: Bucket count for the state key. 64 buckets keep every state-store
+#: partition busy at `scoped_shuffle_partitions(8)` while capping the
+#: per-micro-batch Python group-call count at 64 — per-USER keys pay one
+#: Arrow/state round-trip per touched user per batch (~15k calls/batch
+#: at sf1), which dominates the wall clock long before the fold itself
+#: does. At cluster scale this is the parallelism knob: set buckets to
+#: 2-4x the state-store partition count so every partition holds a few
+#: buckets (skew smoothing) while the group-call count stays
+#: O(buckets); per-bucket state is total-events/buckets, so more
+#: buckets also bound the largest Arrow batch. COST CAVEAT: GroupState
+#: holds one opaque row per key, so a touched bucket deserializes and
+#: rewrites its ENTIRE history through Arrow every micro-batch —
+#: per-batch state I/O grows O(total events / buckets) per touched
+#: bucket for the life of the stream.
 ASOF_BUCKETS = 64
 
 BUCKETED_STATE_SCHEMA = StructType([
@@ -183,10 +84,10 @@ def _bucket_match(u_v: np.ndarray, v_ts: np.ndarray, v_id: np.ndarray,
     """Vectorized multi-user nearest-prior-view over a whole bucket:
     one ``pd.merge_asof(by=user)`` call (C-implemented grouped
     backward as-of). Views sorted by (ts, id) so the backward match
-    lands on the largest id among equal timestamps — the same
-    tie-break as :func:`_match_views` and the batch oracle's
-    ``ORDER BY v.ts DESC, v.event_id DESC``. Returns per-purchase
-    (matched_view_id or -1, matched_view_ts or 0), in input order.
+    lands on the largest id among equal timestamps — the batch
+    oracle's ``ORDER BY v.ts DESC, v.event_id DESC``. Returns
+    per-purchase (matched_view_id or -1, matched_view_ts or 0), in
+    input order.
 
     The matched columns ride through the merge as nullable Int64
     extension arrays, NOT float64: merge_asof marks unmatched rows
@@ -221,16 +122,13 @@ def _bucket_match(u_v: np.ndarray, v_ts: np.ndarray, v_id: np.ndarray,
 
 def asof_update_bucketed(key: tuple, pdfs: Iterator[pd.DataFrame],
                          state: GroupState) -> Iterator[pd.DataFrame]:
-    """The flagship's production fold: state keyed by
-    ``user_id %% ASOF_BUCKETS`` instead of per user. Semantically
-    identical to :func:`asof_update` (law-pinned by the parametrized
-    arrival-order test and by the catalog query's batch-SQL oracle);
-    physically it trades per-user state granularity for a bounded
-    Python-call count — each micro-batch makes at most ASOF_BUCKETS
-    Arrow round-trips, and the whole bucket's rematch is ONE grouped
-    ``merge_asof``. Emit-on-change is tracked explicitly (``m_vid``:
-    each purchase's last-emitted match), so untouched users inside a
-    touched bucket re-emit nothing."""
+    """The streaming as-of fold: state keyed by
+    ``user_id %% ASOF_BUCKETS``. Each micro-batch makes at most
+    ASOF_BUCKETS Arrow round-trips, and the whole bucket's rematch is
+    ONE grouped ``merge_asof``. Emit-on-change is tracked explicitly
+    (``m_vid``: each purchase's last-emitted match), so untouched users
+    inside a touched bucket re-emit nothing — sound because the reader
+    keeps each purchase's highest-version row."""
     if state.exists:
         (su_v, sv_ts, sv_id, su_p, sp_ts, sp_id,
          sm_vid, version) = state.get
@@ -282,417 +180,3 @@ def asof_update_bucketed(key: tuple, pdfs: Iterator[pd.DataFrame],
     })
     out.loc[~e_has, ["view_id", "seconds_since_view"]] = pd.NA
     yield out
-
-
-#: re-export for callers wiring the stream
-NO_TIMEOUT = GroupStateTimeout.NoTimeout
-
-EVENT_TIME_TIMEOUT = GroupStateTimeout.EventTimeTimeout
-
-
-def asof_update_ttl(ttl_s: int):
-    """Bounded-state variant of :func:`asof_update`: the production
-    path the module docstring promises. Requires the input stream to
-    carry a ``withWatermark``'d ``ts`` column; each update arms an
-    event-time timeout at (user's max event time + ttl); when the
-    watermark passes it, the user's buffers are dropped.
-
-    The trade is explicit and testable: a view arriving after its
-    user's state was evicted (or behind the watermark, which drops it
-    before the operator) can no longer upgrade an old purchase's
-    match — retroactive-correction depth is bounded by the TTL in
-    exchange for bounded state. See
-    test_stream_asof_ttl_bounds_correction.
-    """
-    ttl_us = ttl_s * 1_000_000
-
-    def update(key: tuple, pdfs: Iterator[pd.DataFrame],
-               state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame([], columns=_OUT_COLS)
-            return
-        if state.exists:
-            v_ts, v_id, p_ts, p_id, version = state.get
-            v_ts, v_id, p_ts, p_id = (list(v_ts), list(v_id),
-                                      list(p_ts), list(p_id))
-        else:
-            v_ts, v_id, p_ts, p_id, version = [], [], [], [], 0
-        # flatMapGroupsWithState delivers late rows unfiltered — the
-        # bounded operator drops them itself (the same discipline the
-        # built-in stateful operators apply): a row behind the
-        # watermark is outside the correction window by definition.
-        wm_ms = state.getCurrentWatermarkMs()
-        for pdf in pdfs:
-            for r in pdf.itertuples(index=False):
-                if int(r.ts_us) // 1000 < wm_ms:
-                    continue
-                if r.event_type == "view":
-                    v_ts.append(int(r.ts_us)); v_id.append(int(r.event_id))
-                else:
-                    p_ts.append(int(r.ts_us)); p_id.append(int(r.event_id))
-        if not (v_ts or p_ts):
-            state.remove()
-            yield pd.DataFrame([], columns=_OUT_COLS)
-            return
-        version += 1
-        # flatMapGroupsWithState does NOT pre-filter late rows, so the
-        # TTL has to self-enforce: if this user's freshest event is
-        # already older than watermark - ttl, the state is born expired
-        # — drop it now instead of arming an un-armable timeout (Spark
-        # rejects timeout timestamps behind the watermark).
-        latest_us = max(v_ts + p_ts)
-        expiry_ms = (latest_us + ttl_us) // 1000
-        if expiry_ms <= state.getCurrentWatermarkMs():
-            state.remove()
-        else:
-            state.update((v_ts, v_id, p_ts, p_id, version))
-            state.setTimeoutTimestamp(expiry_ms)
-
-        views = sorted(zip(v_ts, v_id))
-        user = key[0]
-        rows = []
-        for pts, pid in zip(p_ts, p_id):
-            i = bisect_right(views, (pts, float("inf")))
-            if i:
-                vt, vi = views[i - 1]
-                rows.append((user, pid, vi,
-                             pts // 1_000_000 - vt // 1_000_000, version))
-            else:
-                rows.append((user, pid, None, None, version))
-        yield pd.DataFrame(rows, columns=_OUT_COLS)
-
-    return update
-
-
-_EVENT_ROW_SCHEMA = StructType([
-    StructField("ts_us", LongType()),
-    StructField("event_id", LongType()),
-])
-
-_VERSION_SCHEMA = StructType([StructField("version", LongType())])
-
-
-#: One ListState element = one PACKED micro-batch of bucket events
-#: (np.int64 [u, ts_us, event_id] triplets, C-order .tobytes()). The
-#: tws state-server protocol serializes every state ROW individually
-#: through Row construction + schema.toInternal + pickle on write and
-#: pickle-loads per row on read (list_state_client.py) — at ~e events
-#: per bucket that is O(e) Python-object work per micro-batch just to
-#: re-read the logs. Packing makes the unit of state I/O the CHUNK:
-#: per batch each touched bucket appends ONE element and reads
-#: ~n_batches elements, each a single memcpy-ish pickle of a bytes
-#: blob decoded with np.frombuffer. Measured (4-batch availableNow,
-#: warm best-of-3, both layouts in one session): at sf0.1 a wash
-#: (~4.9 s — the wall is per-batch machinery there, see
-#: BucketedAsofProcessor), at sf1 12.8 -> 5.0 s, identical 287k-row
-#: output — per-row state serialization scales with log size, packed
-#: stays flat (sf0.1 -> sf1 is ~10x the rows for ~flat wall).
-_CHUNK_SCHEMA = StructType([StructField("chunk", BinaryType())])
-
-
-def _load_packed(list_state) -> np.ndarray:
-    """Concatenate a ListState of packed chunks into an (n, 3) int64
-    array in append order (RocksDB ListState preserves it)."""
-    chunks = [np.frombuffer(t[0], dtype=np.int64).reshape(-1, 3)
-              for t in list_state.get()]
-    if not chunks:
-        return np.empty((0, 3), dtype=np.int64)
-    return np.concatenate(chunks) if len(chunks) > 1 else chunks[0]
-
-
-class BucketedAsofProcessor(StatefulProcessor):
-    """The BUCKETED flagship fold on the Spark 4
-    ``transformWithStateInPandas`` API — the non-deprecated successor
-    to :func:`asof_update_bucketed` (applyInPandasWithState), pinned
-    equal to it and to the per-user reference fold by the
-    parametrized arrival-order and randomized cross-fold law tests.
-
-    The typed-state composition directly fixes the GroupState shape's
-    biggest cost (see the ASOF_BUCKETS caveat): the view/purchase
-    event logs are ListState — per micro-batch each touched bucket
-    APPENDS its new rows instead of deserializing and rewriting its
-    entire history through one opaque state row. Only the per-purchase
-    last-emitted-match ledger (the emit-on-change column, aligned with
-    the append-ordered purchase log) and the version counter are
-    rewritten per batch — O(purchases in bucket) bytes in ONE value,
-    not O(all events in bucket). The rematch itself is the same ONE
-    grouped ``merge_asof`` per touched bucket (:func:`_bucket_match`).
-
-    State layout is PACKED (see ``_CHUNK_SCHEMA``): the r9 layout kept
-    one typed state row per event, and the r10 profiling pass showed
-    per-row pickle/Row/toInternal work in the state-server protocol
-    client is the term that SCALES (the logs are re-read whole every
-    batch): at sf1 the per-row layout measured 12.8 s vs 5.0 s packed,
-    identical output. One chunk per (batch, kind) caps state
-    round-trips AND serialization at O(n_batches) per bucket;
-    production pairs it with TTL compaction (:func:`asof_update_ttl`
-    documents the horizon contract) so n_batches stays bounded.
-
-    What remains of the gap to the GroupState twin at sf0.1 (~4.9 s vs
-    ~3.1 s warm) is per-batch MACHINERY, profiled on record: user code
-    inside handleInputRows is ~0.13 s/batch (8-way parallel); addBatch
-    runs ~0.68 s/batch, and the RocksDB commit uploads a full snapshot
-    every batch (rocksdbCommitFileSyncLatencyMs ~0.65 s/batch summed
-    over 8 partitions, parallel). Enabling RocksDB changelog
-    checkpointing measured NO change (5.02 vs 5.04 s); the partition
-    sweep (4/8/16/32 -> 5.8/5.8/7.1/10.7 s) shows per-task fixed cost
-    dominating, so 8 state partitions is the knob's floor. The floor
-    is the tws state-server + RocksDB lifecycle itself; the fold is
-    machinery-bound at both SFs (sf0.1 ~4.9 s -> sf1 ~5.0 s on 10x
-    the rows).
-
-    CHECKPOINT COMPATIBILITY: the packed layout (one ``_CHUNK_SCHEMA``
-    binary element per batch, plus ``m_vid`` moving from ListState to
-    a single packed ValueState) CHANGES the tws state-store schema vs
-    the r9 per-row layout. A streaming checkpoint written by the old
-    layout cannot be resumed — state schema validation fails on
-    restart. Operators upgrading across the layout change must start
-    from a fresh checkpoint directory (replay the source; the fold is
-    deterministic, so the fixpoint is identical).
-
-    DEFAULT-API DECISION RULE (not a vibe): the GroupState twin
-    (:func:`asof_update_bucketed` via applyInPandasWithState) stays
-    the catalog default while BOTH hold: (1) its warm wall is lower at
-    the bench SFs (sf0.1 ~3.1 s vs ~4.9 s; sf1 ~4.95 vs ~5.0 s — the
-    gap is the tws per-batch machinery floor, ~0.68 s/batch addBatch +
-    per-batch RocksDB snapshot upload, profiled above), and (2) Spark
-    still ships applyInPandasWithState non-deprecated. Flip the
-    default to this class when EITHER per-batch tws machinery drops
-    below ~0.2 s/batch at 8 state partitions (parity at 4-batch
-    bench runs), or applyInPandasWithState is deprecated/removed, or
-    the deployment needs tws-only features (event-time timers/TTL on
-    the supported API, state schema evolution). At sf10 the two are
-    already at parity (12.2 vs 11.8 s) because the machinery floor
-    amortizes — on a real cluster with large micro-batches the tws
-    path is the right one; the law tests pin the twins equal either
-    way.
-    """
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._views = handle.getListState("views", _CHUNK_SCHEMA)
-        self._purchases = handle.getListState("purchases", _CHUNK_SCHEMA)
-        self._matches = handle.getValueState("m_vid", _CHUNK_SCHEMA)
-        self._version = handle.getValueState("version", _VERSION_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues
-                        ) -> Iterator[pd.DataFrame]:
-        new_v: list[np.ndarray] = []
-        new_p: list[np.ndarray] = []
-        for pdf in rows:
-            if not len(pdf):
-                continue
-            is_v = pdf["event_type"].to_numpy() == "view"
-            arr = np.column_stack([pdf["user_id"].to_numpy(np.int64),
-                                   pdf["ts_us"].to_numpy(np.int64),
-                                   pdf["event_id"].to_numpy(np.int64)])
-            if is_v.any():
-                new_v.append(arr[is_v])
-            if not is_v.all():
-                new_p.append(arr[~is_v])
-        if new_v:
-            self._views.appendList(
-                [(np.ascontiguousarray(np.concatenate(new_v)).tobytes(),)])
-        if new_p:
-            self._purchases.appendList(
-                [(np.ascontiguousarray(np.concatenate(new_p)).tobytes(),)])
-        ver = self._version.get()
-        version = (ver[0] if ver else 0) + 1
-        self._version.update((version,))
-
-        views = _load_packed(self._views)
-        purchases = _load_packed(self._purchases)
-        prev = self._matches.get()
-        old_m = (np.frombuffer(prev[0], dtype=np.int64) if prev
-                 else np.empty(0, dtype=np.int64))
-        n_old_p = len(old_m)
-
-        u_v, v_ts, v_id = views[:, 0], views[:, 1], views[:, 2]
-        upn, ptn, pin = purchases[:, 0], purchases[:, 1], purchases[:, 2]
-        mvi, mvt = _bucket_match(u_v, v_ts, v_id, upn, ptn)
-
-        self._matches.update((mvi.tobytes(),))
-        emit = np.ones(len(ptn), dtype=bool)
-        emit[:n_old_p] = mvi[:n_old_p] != old_m
-        if not emit.any():
-            return
-        e_has = mvi[emit] >= 0
-        secs = ptn[emit] // 1_000_000 - mvt[emit] // 1_000_000
-        n = int(emit.sum())
-        out = pd.DataFrame({
-            "user_id": upn[emit],
-            "purchase_id": pin[emit],
-            "view_id": pd.array(mvi[emit], dtype="Int64"),
-            "seconds_since_view": pd.array(secs, dtype="Int64"),
-            "version": np.full(n, version, dtype=np.int64),
-        })
-        out.loc[~e_has, ["view_id", "seconds_since_view"]] = pd.NA
-        yield out
-
-    def close(self) -> None:
-        pass
-
-
-class BucketedAsofProcessorTTL(BucketedAsofProcessor):
-    """Event-time-TTL twin of :class:`BucketedAsofProcessor` — the
-    bounded-state production path on the transformWithState API,
-    completing the TTL matrix (:func:`asof_update_ttl` is the
-    GroupState member; the within-horizon law pins both to the
-    unbounded fixpoint). Contract mirrored at BUCKET granularity:
-    every batch re-arms one event-time timer at (bucket's freshest
-    event ts + ttl); when the WATERMARK passes it, the expired-timer
-    callback drops the bucket's buffers. Rows behind the watermark are
-    dropped by the processor (tws delivers them unfiltered, same as
-    flatMapGroupsWithState), and a bucket whose freshest event is
-    already beyond the horizon is born expired — state cleared
-    immediately rather than arming an un-armable timer. Requires
-    ``timeMode="eventTime"`` and a ``withWatermark``'d ``ts`` column
-    on the input (see queries_stream.build_asof_stream api="tws_ttl").
-
-    The trade is the same as the GroupState twin's and is the law
-    tested in test_stream_asof_ttl_bounds_correction: retroactive
-    correction depth bounded by the TTL, in exchange for bounded
-    state — here it is the TTL that bounds ``n_batches`` in the
-    packed-chunk layout's O(n_batches) read cost.
-    """
-
-    def __init__(self, ttl_s: int) -> None:
-        self._ttl_ms = ttl_s * 1000
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        super().init(handle)
-        self._h = handle
-        self._timer = handle.getValueState("timer_ms", _VERSION_SCHEMA)
-
-    def _clear_all(self) -> None:
-        """Drop the bucket's buffers AND any armed event-time timer.
-
-        Deleting the registered timer (not just the tracking
-        ValueState) closes the orphaned-timer hole: an eviction that
-        left the timer armed could fire in a LATER batch after fresh
-        within-horizon events repopulated the bucket (timer-vs-input
-        processing order is batch dependent) and drop the new buffers
-        early, breaking the within-horizon equivalence law.
-        """
-        prev = self._timer.get()
-        if prev is not None:
-            self._h.deleteTimer(prev[0])
-        self._views.clear()
-        self._purchases.clear()
-        self._matches.clear()
-        self._version.clear()
-        self._timer.clear()
-
-    def handleInputRows(self, key, rows, timerValues
-                        ) -> Iterator[pd.DataFrame]:
-        wm_ms = timerValues.getCurrentWatermarkInMs()
-
-        def live(pdfs):
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                keep = (pdf["ts_us"].to_numpy(np.int64) // 1000) >= wm_ms
-                if keep.all():
-                    yield pdf
-                elif keep.any():
-                    yield pdf[keep]
-
-        out = list(super().handleInputRows(key, live(rows), timerValues))
-
-        views = _load_packed(self._views)
-        purchases = _load_packed(self._purchases)
-        if not (len(views) or len(purchases)):
-            # no live rows ever reached the fold: with no purchases the
-            # emit mask in super() is empty — make the "out is empty
-            # here" invariant explicit instead of silently dropping it.
-            # A real raise, not assert: assert strips under python -O,
-            # and if this ever fires the failure must be the deliberate,
-            # named invariant — not a bare AssertionError from a code
-            # path the operator thought it had disabled.
-            if out:
-                raise RuntimeError(
-                    "BucketedAsofProcessor invariant violated: "
-                    "empty-buffer eviction with pending output "
-                    f"(key={key!r}, {len(out)} pending frames)")
-            self._clear_all()
-            return
-        latest_us = max(
-            int(views[:, 1].max()) if len(views) else 0,
-            int(purchases[:, 1].max()) if len(purchases) else 0)
-        expiry_ms = latest_us // 1000 + self._ttl_ms
-        if expiry_ms <= wm_ms:
-            # born expired (mirror the GroupState twin asof_update_ttl,
-            # which also emits before removing just-expired state)
-            yield from out
-            self._clear_all()
-            return
-        prev = self._timer.get()
-        if prev is not None and prev[0] != expiry_ms:
-            self._h.deleteTimer(prev[0])
-        if prev is None or prev[0] != expiry_ms:
-            self._h.registerTimer(expiry_ms)
-            self._timer.update((expiry_ms,))
-        yield from out
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo
-                           ) -> Iterator[pd.DataFrame]:
-        # horizon passed with no fresher arrival: the whole bucket's
-        # correction window is closed — drop the buffers (bounded
-        # state), emit nothing (matches already emitted on change).
-        # Guard: only act when the fired timer IS the tracked one —
-        # a stale timer (deleted tracking state, or superseded by a
-        # later re-arm) must not evict buffers that fresher events
-        # have since repopulated.
-        tracked = self._timer.get()
-        if (tracked is not None
-                and expiredTimerInfo.getExpiryTimeInMs() == tracked[0]):
-            self._clear_all()
-        yield pd.DataFrame([], columns=_OUT_COLS)
-
-
-class AsofProcessor(StatefulProcessor):
-    """The same streaming as-of fold on the Spark 4
-    ``transformWithStateInPandas`` API — and a better fit than the
-    opaque GroupState row: the view/purchase buffers are ListState
-    (append-only, no read-modify-write of one big array row) and the
-    version counter is its own ValueState. Semantically identical to
-    :func:`asof_update`; a test pins the two APIs equal on the same
-    input.
-    """
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._views = handle.getListState("views", _EVENT_ROW_SCHEMA)
-        self._purchases = handle.getListState("purchases", _EVENT_ROW_SCHEMA)
-        self._version = handle.getValueState("version", _VERSION_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues
-                        ) -> Iterator[pd.DataFrame]:
-        new_v, new_p = [], []
-        for pdf in rows:
-            for r in pdf.itertuples(index=False):
-                (new_v if r.event_type == "view" else new_p).append(
-                    (int(r.ts_us), int(r.event_id)))
-        if new_v:
-            self._views.appendList(new_v)
-        if new_p:
-            self._purchases.appendList(new_p)
-        ver = self._version.get()
-        version = (ver[0] if ver else 0) + 1
-        self._version.update((version,))
-
-        views = sorted(tuple(t) for t in self._views.get())
-        user = key[0]
-        rows_out = []
-        for pts, pid in (tuple(t) for t in self._purchases.get()):
-            i = bisect_right(views, (pts, float("inf")))
-            if i:
-                vt, vi = views[i - 1]
-                rows_out.append((user, pid, vi,
-                                 pts // 1_000_000 - vt // 1_000_000,
-                                 version))
-            else:
-                rows_out.append((user, pid, None, None, version))
-        yield pd.DataFrame(rows_out, columns=_OUT_COLS)
-
-    def close(self) -> None:
-        pass

@@ -1,25 +1,8 @@
 from __future__ import annotations
 
-import importlib.util
 import os
-import sys
 
 import pytest
-
-# Protobuf runtime shim (see _pb_shim/sitecustomize.py): activate in
-# THIS process for the driver side of transformWithState, and export
-# via PYTHONPATH so Spark's Python workers auto-import it through the
-# sitecustomize mechanism. Must happen before the session fixture
-# starts the JVM (workers inherit the JVM's environment). No-op
-# wherever a real protobuf is installed.
-_PB_SHIM_DIR = os.path.join(os.path.dirname(__file__), "_pb_shim")
-_spec = importlib.util.spec_from_file_location(
-    "_pb_shim_sitecustomize", os.path.join(_PB_SHIM_DIR, "sitecustomize.py"))
-_shim = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(_shim)
-if _shim.activate():
-    os.environ["PYTHONPATH"] = (
-        _PB_SHIM_DIR + os.pathsep + os.environ.get("PYTHONPATH", ""))
 
 from event_streaming_bnpl_demo_spark.session import get_spark
 

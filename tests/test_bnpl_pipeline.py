@@ -9,7 +9,6 @@ from __future__ import annotations
 import json
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from event_streaming_bnpl_demo_spark.streaming.pipeline import BnplPipeline
@@ -186,59 +185,6 @@ def test_incremental_equals_recompute(spark, tmp_path):
     assert b3["status"] == "unpaid" and b3["amount"] == 250
 
 
-def _has_protobuf() -> bool:
-    try:
-        import importlib.util
-        return importlib.util.find_spec("google.protobuf") is not None
-    except (ImportError, ModuleNotFoundError):
-        return False
-
-
-@pytest.mark.parametrize("reorder", [False, True])
-@pytest.mark.parametrize("api", [
-    "group_state",
-    pytest.param("transform_with_state", marks=pytest.mark.skipif(
-        not _has_protobuf(),
-        reason="transformWithState's driver worker imports google.protobuf "
-               "(state-server protocol); conftest's _pb_shim normally "
-               "provides it — skip only if even the shim is unavailable")),
-])
-def test_state_machine_stream(spark, tmp_path, reorder, api):
-    """Bill lifecycle over a file stream on BOTH stateful APIs
-    (applyInPandasWithState and Spark 4 transformWithStateInPandas):
-    create→pay (and pay→create reordered) both end 'paid'."""
-    import contextlib
-
-    from event_streaming_bnpl_demo_spark.sources.events import read_event_stream
-    from event_streaming_bnpl_demo_spark.streaming.state import (
-        bill_state_stream, bill_state_stream_tws, rocksdb_state_store)
-
-    impl = bill_state_stream if api == "group_state" else bill_state_stream_tws
-    events = GOLDEN[2:4]
-    if reorder:
-        events = list(reversed(events))
-    in_dir = str(tmp_path / "in")
-    out = str(tmp_path / "state_out")
-    write_events(in_dir, events)
-    stream = read_event_stream(spark, in_dir)
-    # transformWithState requires the RocksDB provider — scoped to this
-    # query start so the session default is untouched afterwards
-    provider = (rocksdb_state_store(spark) if api == "transform_with_state"
-                else contextlib.nullcontext())
-    with provider:
-        q = (impl(stream).writeStream
-             .format("memory").queryName(f"bill_state_{api}")
-             .outputMode("update")
-             .option("checkpointLocation", out)
-             .trigger(availableNow=True).start())
-    q.awaitTermination()
-    rows = {r["bill_id"]: r.asDict()
-            for r in spark.sql(f"select * from bill_state_{api}").collect()}
-    assert rows["b-001"]["status"] == "paid"
-    assert rows["b-001"]["paid_date"] == "2026-01-02"
-    assert rows["b-001"]["amount"] == 5000
-
-
 def _purchase(uid: str, amount: int, ts: str) -> dict:
     return {"event_type": "PurchaseCompletedEvent",
             "order_id": f"order-{uid}", "user_id": uid,
@@ -294,62 +240,3 @@ def test_observe_quality_metrics(spark, tmp_path):
     assert got["n_rows"] == 3
     assert got["n_missing_type"] == 1
     assert got["n_negative_amount"] == 1
-
-
-def test_tws_initial_state_bootstraps_batch_history(spark, tmp_path):
-    """Warm-start migration path: the batch last-event-wins state is
-    handed to the streaming query as transformWithState initialState;
-    the stream then processes ONLY a payment event, and the output
-    carries the promise/issue fields that existed solely in the batch
-    bootstrap — backfill once, stream forever, no replay."""
-    if not _has_protobuf():
-        pytest.skip("transformWithState needs the protobuf shim")
-    from event_streaming_bnpl_demo_spark.sources.events import (
-        read_event_stream,
-    )
-    from event_streaming_bnpl_demo_spark.streaming.state import (
-        bill_state_stream_tws, rocksdb_state_store,
-    )
-
-    from event_streaming_bnpl_demo_spark.sources.events import (
-        read_event_batch,
-    )
-    from event_streaming_bnpl_demo_spark.streaming.state import (
-        bill_bootstrap_frame,
-    )
-    from event_streaming_bnpl_demo_spark.streaming.transforms import (
-        project_bills,
-    )
-
-    # batch phase: the REAL history projection (not a hand-built
-    # frame) adapted through the production bootstrap glue
-    hist_dir = str(tmp_path / "hist")
-    write_events(hist_dir, [
-        {"event_type": "MemberBillCreatedEvent", "bill_id": "b-009",
-         "promise_id": "pr-009", "user_id": "u09", "amount": 1200,
-         "issued_date": "2026-01-01",
-         "ingest_ts": "2026-01-01T00:00:00.000Z"},
-    ])
-    boot = bill_bootstrap_frame(
-        project_bills(read_event_batch(spark, hist_dir)))
-    in_dir = str(tmp_path / "in")
-    write_events(in_dir, [
-        {"event_type": "PaymentCompletedEvent", "bill_id": "b-009",
-         "user_id": "u09", "amount": 1200, "paid_date": "2026-01-05",
-         "ingest_ts": "2026-01-05T00:00:00.000Z"},
-    ])
-    stream = read_event_stream(spark, in_dir)
-    with rocksdb_state_store(spark):
-        q = (bill_state_stream_tws(stream, initial_state=boot)
-             .writeStream.format("memory").queryName("tws_boot")
-             .outputMode("update")
-             .option("checkpointLocation", str(tmp_path / "ck"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    row = {r["bill_id"]: r.asDict()
-           for r in spark.sql("select * from tws_boot").collect()}["b-009"]
-    assert row["status"] == "paid" and row["paid_date"] == "2026-01-05"
-    # these fields never appeared in the stream — bootstrap knowledge
-    assert row["promise_id"] == "pr-009"
-    assert row["issued_date"] == "2026-01-01"
-    assert row["amount"] == 1200

@@ -45,6 +45,62 @@ def test_readme_flow_a_b_c(spark, tmp_path):
     assert pr_other.count() == 0 and bl_other.count() == 0
 
 
+
+class _TornWriter:
+    """File handle whose first write lands half its data, then fails —
+    a disk-full or crash in the middle of publishing an event."""
+
+    def __init__(self, f):
+        self._f = f
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        self._f.close()
+        return False
+
+    def write(self, s: str) -> int:
+        self._f.write(s[:len(s) // 2])
+        self._f.flush()
+        raise OSError("injected failure mid-write")
+
+
+def test_emit_failure_leaves_no_visible_event(spark, tmp_path, monkeypatch):
+    """A command whose event write fails part-way must leave nothing the
+    file source can pick up: no torn ``evt-*.jsonl`` (and no leftover
+    temp file), and the next ``process()`` archives neither a new row
+    nor a malformed one (null ``event_type``)."""
+    import builtins
+    import os
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from event_streaming_bnpl_demo_spark import engine as engine_mod
+
+    eng = BnplEngine(spark, str(tmp_path))
+    eng.purchase("u1", 100)
+    eng.process()
+    before = sorted(os.listdir(eng.in_dir))
+    n_log = eng.pipeline.read_log().count()
+
+    monkeypatch.setattr(
+        engine_mod, "open",
+        lambda path, *a, **k: _TornWriter(builtins.open(path, *a, **k)),
+        raising=False)
+    with pytest.raises(OSError, match="injected"):
+        eng.purchase("u2", 200)
+    monkeypatch.undo()
+
+    assert sorted(os.listdir(eng.in_dir)) == before
+    eng.process()
+    log = eng.pipeline.read_log()
+    assert log.count() == n_log
+    assert log.filter(F.col("event_type").isNull()).count() == 0
+    promises, _ = eng.user_status("u2")
+    assert promises.count() == 0
+
 def test_coverage_doc_lists_every_query():
     """COVERAGE.md is the SURVEY §2 -> implementation map the grader
     reads; every registered catalog query must appear in it by name."""

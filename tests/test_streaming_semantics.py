@@ -411,146 +411,79 @@ def test_two_hop_streaming_dag(spark, tmp_path):
     assert got2 == {"view": 4, "purchase": 2, "refund": 1}
 
 
-import pytest
+def _run_asof_stream(spark, tmp_path, batches: list[list[tuple]],
+                     name: str):
+    """Write each batch of (user_id, event_id, event_type, ts_us) rows
+    as its own parquet file, with modification times in list order (the
+    file source's batch order), and drain them through the production
+    as-of topology (queries_stream.build_asof_stream). Returns the
+    emitted update-mode table."""
+    from event_streaming_bnpl_demo_spark.plans.queries_stream import \
+        build_asof_stream
+
+    in_dir = str(tmp_path / "in")
+    cols = ["user_id", "event_id", "event_type", "ts_us"]
+    now = time.time()
+    for i, b in enumerate(batches):
+        sub = f"{in_dir}/f{i}"
+        spark.createDataFrame(b, cols).coalesce(1).write.parquet(sub)
+        for f in os.listdir(sub):
+            os.utime(os.path.join(sub, f), (now - 60 + i, now - 60 + i))
+    q = (build_asof_stream(spark, in_dir + "/f*")
+         .writeStream.format("memory").queryName(name)
+         .outputMode("update")
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    return spark.table(name)
 
 
-_TWS_SKIP = pytest.mark.skipif(
-    __import__("tests.test_bnpl_pipeline", fromlist=["_has_protobuf"])
-    ._has_protobuf() is False,
-    reason="transformWithState needs google.protobuf (or the shim)")
+def _asof_fixpoint(emitted) -> dict:
+    """Each purchase's highest-version emission:
+    {purchase_id: (user_id, view_id, seconds_since_view)}."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("purchase_id").orderBy(F.desc("version"))
+    return {r["purchase_id"]: (r["user_id"], r["view_id"],
+                               r["seconds_since_view"])
+            for r in (emitted.withColumn("rn", F.row_number().over(w))
+                      .filter(F.col("rn") == 1).collect())}
 
 
-@pytest.mark.parametrize("api", [
-    "group_state",
-    "bucketed",
-    pytest.param("transform_with_state", marks=_TWS_SKIP),
-    pytest.param("tws_bucketed", marks=_TWS_SKIP),
-])
-def test_stream_asof_corrects_out_of_order_arrival(spark, tmp_path, api):
-    """The stateful as-of operator's defining property, on all FOUR
-    folds (per-user applyInPandasWithState, the bucketed flagship fold,
-    and both on Spark 4 transformWithStateInPandas/ListState): a view
+def test_stream_asof_corrects_out_of_order_arrival(spark, tmp_path):
+    """The stateful as-of operator's defining property: a view
     arriving a micro-batch AFTER its purchase retroactively upgrades
     the match. Batch 1 delivers the purchase (and an older view);
     batch 2 delivers a better (later, still-prior) view; the fixpoint
     must match the batch-2 view."""
-    import contextlib
-    import os
-    import time
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from event_streaming_bnpl_demo_spark.streaming.asof_state import (
-        ASOF_BUCKETS, ASOF_OUTPUT_SCHEMA, ASOF_STATE_SCHEMA,
-        BUCKETED_STATE_SCHEMA, NO_TIMEOUT, AsofProcessor,
-        BucketedAsofProcessor, asof_update, asof_update_bucketed)
-    from event_streaming_bnpl_demo_spark.streaming.state import \
-        rocksdb_state_store
-
-    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ck")
-    os.makedirs(in_dir)
-    cols = ["user_id", "event_id", "event_type", "ts_us"]
     b1 = [(1, 100, "purchase", 1_000_000_000),
           (1, 10, "view", 100_000_000)]
     b2 = [(1, 20, "view", 900_000_000),    # later prior view -> must win
           (1, 30, "view", 2_000_000_000)]  # AFTER the purchase -> ignored
-    spark.createDataFrame(b1, cols).coalesce(1).write.parquet(in_dir + "/f1")
-    spark.createDataFrame(b2, cols).coalesce(1).write.parquet(in_dir + "/f2")
-    # file-source batches order by modification time: force f1 first
-    now = time.time()
-    for sub, mt in (("f1", now - 60), ("f2", now)):
-        d = os.path.join(in_dir, sub)
-        for f in os.listdir(d):
-            os.utime(os.path.join(d, f), (mt, mt))
+    emitted = _run_asof_stream(spark, tmp_path, [b1, b2], "sasof_ooo")
 
-    stream = (spark.readStream
-              .schema("user_id long, event_id long, event_type string, "
-                      "ts_us long")
-              .option("maxFilesPerTrigger", "1")
-              .parquet(in_dir + "/f*"))
-    grouped = stream.groupBy("user_id")
-    if api == "group_state":
-        matched = grouped.applyInPandasWithState(
-            asof_update, outputStructType=ASOF_OUTPUT_SCHEMA,
-            stateStructType=ASOF_STATE_SCHEMA, outputMode="update",
-            timeoutConf=NO_TIMEOUT)
-        provider = contextlib.nullcontext()
-    elif api == "bucketed":
-        matched = (stream
-                   .withColumn("bucket", F.pmod(F.col("user_id"),
-                                                F.lit(ASOF_BUCKETS)))
-                   .groupBy("bucket")
-                   .applyInPandasWithState(
-                       asof_update_bucketed,
-                       outputStructType=ASOF_OUTPUT_SCHEMA,
-                       stateStructType=BUCKETED_STATE_SCHEMA,
-                       outputMode="update", timeoutConf=NO_TIMEOUT))
-        provider = contextlib.nullcontext()
-    elif api == "tws_bucketed":
-        matched = (stream
-                   .withColumn("bucket", F.pmod(F.col("user_id"),
-                                                F.lit(ASOF_BUCKETS)))
-                   .groupBy("bucket")
-                   .transformWithStateInPandas(
-                       BucketedAsofProcessor(),
-                       outputStructType=ASOF_OUTPUT_SCHEMA,
-                       outputMode="update", timeMode="none"))
-        provider = rocksdb_state_store(spark)
-    else:
-        matched = grouped.transformWithStateInPandas(
-            AsofProcessor(), outputStructType=ASOF_OUTPUT_SCHEMA,
-            outputMode="update", timeMode="none")
-        provider = rocksdb_state_store(spark)
-    with provider:
-        q = (matched
-             .writeStream.format("memory").queryName(f"sasof_ooo_{api}")
-             .outputMode("update").option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    emitted = spark.table(f"sasof_ooo_{api}")
     assert emitted.count() >= 2, "expected one emission per batch"
-    w = Window.partitionBy("purchase_id").orderBy(F.desc("version"))
-    final = (emitted.withColumn("rn", F.row_number().over(w))
-             .filter(F.col("rn") == 1).collect())
-    assert len(final) == 1
-    assert final[0]["purchase_id"] == 100
-    assert final[0]["view_id"] == 20          # upgraded by batch 2
-    assert final[0]["seconds_since_view"] == 100   # 1000 s - 900 s
+    # 1000 s - 900 s, upgraded by batch 2
+    assert _asof_fixpoint(emitted) == {100: (1, 20, 100)}
     # and the batch-1 emission really did carry the stale match
-    first = (emitted.withColumn(
-        "rn", F.row_number().over(
-            Window.partitionBy("purchase_id").orderBy(F.asc("version"))))
-        .filter(F.col("rn") == 1).collect())
-    assert first[0]["view_id"] == 10
+    first = emitted.orderBy("version").first()
+    assert first["view_id"] == 10
 
 
 def test_stream_asof_bucketed_ties_and_cobucket(spark, tmp_path):
     """Adversarial edges of the bucketed fold, the exact places a
-    grouped merge_asof could diverge from the per-user searchsorted
-    reference: (a) two views with IDENTICAL timestamps — the larger
-    event_id must win (the oracle's ORDER BY ts DESC, event_id DESC);
-    (b) a view at exactly the purchase timestamp — inclusive match;
-    (c) two users in the SAME bucket (ids ≡ mod ASOF_BUCKETS) with
-    interleaved timestamps — no cross-user leakage; (d) a view in a
-    later batch retro-upgrading only the affected user's purchase
-    while the co-bucketed user's match must NOT be re-emitted. The
-    fixpoint is asserted against the per-user fold run on the same
-    two-batch input."""
-    import os
-    import time
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from event_streaming_bnpl_demo_spark.streaming.asof_state import (
-        ASOF_BUCKETS, ASOF_OUTPUT_SCHEMA, ASOF_STATE_SCHEMA,
-        BUCKETED_STATE_SCHEMA, NO_TIMEOUT, asof_update,
-        asof_update_bucketed)
+    grouped merge_asof could diverge from the batch as-of join: (a) two
+    views with IDENTICAL timestamps — the larger event_id must win (the
+    oracle's ORDER BY ts DESC, event_id DESC); (b) a view at exactly the
+    purchase timestamp — inclusive match; (c) two users in the SAME
+    bucket (ids ≡ mod ASOF_BUCKETS) with interleaved timestamps — no
+    cross-user leakage; (d) a view in a later batch retro-upgrading
+    only the affected user's purchase while the co-bucketed user's
+    match must NOT be re-emitted."""
+    from event_streaming_bnpl_demo_spark.streaming.asof_state import \
+        ASOF_BUCKETS
 
     u1, u2 = 7, 7 + ASOF_BUCKETS          # same bucket by construction
-    cols = ["user_id", "event_id", "event_type", "ts_us"]
     b1 = [
         # (a) duplicate-ts views: ids 5 and 9 at ts=100 -> 9 must win
         (u1, 5, "view", 100), (u1, 9, "view", 100),
@@ -565,91 +498,36 @@ def test_stream_asof_bucketed_ties_and_cobucket(spark, tmp_path):
         # (d) retro view for u2's early purchase; u1 untouched
         (u2, 12, "view", 40),
     ]
-    in_dir = str(tmp_path / "in")
-    spark.createDataFrame(b1, cols).coalesce(1).write.parquet(in_dir + "/f1")
-    spark.createDataFrame(b2, cols).coalesce(1).write.parquet(in_dir + "/f2")
-    now = time.time()
-    for sub, mt in (("f1", now - 60), ("f2", now)):
-        d = os.path.join(in_dir, sub)
-        for f in os.listdir(d):
-            os.utime(os.path.join(d, f), (mt, mt))
-
-    def run(mode: str):
-        stream = (spark.readStream
-                  .schema("user_id long, event_id long, "
-                          "event_type string, ts_us long")
-                  .option("maxFilesPerTrigger", "1")
-                  .parquet(in_dir + "/f*"))
-        if mode == "bucketed":
-            matched = (stream
-                       .withColumn("bucket",
-                                   F.pmod(F.col("user_id"),
-                                          F.lit(ASOF_BUCKETS)))
-                       .groupBy("bucket")
-                       .applyInPandasWithState(
-                           asof_update_bucketed,
-                           outputStructType=ASOF_OUTPUT_SCHEMA,
-                           stateStructType=BUCKETED_STATE_SCHEMA,
-                           outputMode="update", timeoutConf=NO_TIMEOUT))
-        else:
-            matched = stream.groupBy("user_id").applyInPandasWithState(
-                asof_update, outputStructType=ASOF_OUTPUT_SCHEMA,
-                stateStructType=ASOF_STATE_SCHEMA, outputMode="update",
-                timeoutConf=NO_TIMEOUT)
-        name = f"sasof_ties_{mode}"
-        q = (matched.writeStream.format("memory").queryName(name)
-             .outputMode("update")
-             .option("checkpointLocation", str(tmp_path / f"ck_{mode}"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        emitted = spark.table(name)
-        w = Window.partitionBy("purchase_id").orderBy(F.desc("version"))
-        fix = (emitted.withColumn("rn", F.row_number().over(w))
-               .filter(F.col("rn") == 1)
-               .select("user_id", "purchase_id", "view_id",
-                       "seconds_since_view"))
-        return emitted, {r["purchase_id"]: (r["user_id"], r["view_id"],
-                                            r["seconds_since_view"])
-                         for r in fix.collect()}
-
-    emitted_b, fix_b = run("bucketed")
-    _, fix_u = run("per_user")
+    emitted = _run_asof_stream(spark, tmp_path, [b1, b2], "sasof_ties")
     expected = {
         100: (u1, 9, 0),      # tie -> larger id, inclusive, 0 seconds
         200: (u2, 11, 0),     # 150us and 90us are the same second
         201: (u2, 12, 0),     # retro-matched by batch 2
     }
-    assert fix_b == expected
-    assert fix_u == expected
+    assert _asof_fixpoint(emitted) == expected
     # (d) emit-on-change: batch 2 touches only purchase 201 — exactly
     # one emission may carry the final bucket version
     per_purchase = {r["purchase_id"]: r["cnt"] for r in
-                    emitted_b.groupBy("purchase_id")
+                    emitted.groupBy("purchase_id")
                     .agg(F.count(F.lit(1)).alias("cnt")).collect()}
     assert per_purchase == {100: 1, 200: 1, 201: 2}, per_purchase
 
 
-def test_stream_asof_bucketed_equals_per_user_randomized(spark, tmp_path):
-    """Seeded randomized cross-fold law: on 300 events over 12 users
-    (four co-bucketed pairs), timestamps drawn from a tiny range so
+def test_stream_asof_bucketed_equals_batch_asof_randomized(spark, tmp_path):
+    """Seeded randomized law: on 300 events over 12 users (four
+    co-bucketed pairs), timestamps drawn from a tiny range so
     duplicate-ts ties are COMMON, scrambled into 3 arrival batches —
-    the bucketed fold's fixpoint must equal the per-user reference
-    fold's, purchase for purchase. This is the fuzzing complement to
-    the crafted-edge test above: ties, co-bucket interleave, and
-    retro-correction all occur many times at random positions."""
-    import os
+    the streaming fold's fixpoint must equal the batch
+    ``operators.asof.asof_join(direction="backward")`` over the same
+    rows, purchase for purchase (ties to the larger view id, as in
+    ASOF_ORACLE). This is the fuzzing complement to the crafted-edge
+    test above: ties, co-bucket interleave, and retro-correction all
+    occur many times at random positions."""
     import random
-    import time
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from event_streaming_bnpl_demo_spark.streaming.asof_state import (
-        ASOF_BUCKETS, ASOF_OUTPUT_SCHEMA, ASOF_STATE_SCHEMA,
-        BUCKETED_STATE_SCHEMA, NO_TIMEOUT, BucketedAsofProcessor,
-        asof_update, asof_update_bucketed)
-    from event_streaming_bnpl_demo_spark.streaming.state import \
-        rocksdb_state_store
+    from event_streaming_bnpl_demo_spark.operators.asof import asof_join
+    from event_streaming_bnpl_demo_spark.streaming.asof_state import \
+        ASOF_BUCKETS
 
     rng = random.Random(42)
     users = [1, 2, 3, 4, 1 + ASOF_BUCKETS, 2 + ASOF_BUCKETS,
@@ -661,74 +539,28 @@ def test_stream_asof_bucketed_equals_per_user_randomized(spark, tmp_path):
                      "view" if rng.random() < 0.7 else "purchase",
                      rng.randrange(0, 40) * 1_000_000))  # heavy ts ties
     rng.shuffle(rows)
-    batches = [rows[0:100], rows[100:200], rows[200:300]]
-    in_dir = str(tmp_path / "in")
-    cols = ["user_id", "event_id", "event_type", "ts_us"]
-    now = time.time()
-    for i, b in enumerate(batches):
-        sub = f"{in_dir}/f{i}"
-        spark.createDataFrame(b, cols).coalesce(1).write.parquet(sub)
-        for f in os.listdir(sub):
-            os.utime(os.path.join(sub, f), (now - 60 + i, now - 60 + i))
+    emitted = _run_asof_stream(
+        spark, tmp_path, [rows[0:100], rows[100:200], rows[200:300]],
+        "sasof_rand")
 
-    def fixpoint(mode: str) -> dict:
-        import contextlib
-
-        stream = (spark.readStream
-                  .schema("user_id long, event_id long, "
-                          "event_type string, ts_us long")
-                  .option("maxFilesPerTrigger", "1")
-                  .parquet(in_dir + "/f*"))
-        provider = contextlib.nullcontext()
-        if mode == "bucketed":
-            matched = (stream
-                       .withColumn("bucket",
-                                   F.pmod(F.col("user_id"),
-                                          F.lit(ASOF_BUCKETS)))
-                       .groupBy("bucket")
-                       .applyInPandasWithState(
-                           asof_update_bucketed,
-                           outputStructType=ASOF_OUTPUT_SCHEMA,
-                           stateStructType=BUCKETED_STATE_SCHEMA,
-                           outputMode="update", timeoutConf=NO_TIMEOUT))
-        elif mode == "tws_bucketed":
-            matched = (stream
-                       .withColumn("bucket",
-                                   F.pmod(F.col("user_id"),
-                                          F.lit(ASOF_BUCKETS)))
-                       .groupBy("bucket")
-                       .transformWithStateInPandas(
-                           BucketedAsofProcessor(),
-                           outputStructType=ASOF_OUTPUT_SCHEMA,
-                           outputMode="update", timeMode="none"))
-            provider = rocksdb_state_store(spark)
-        else:
-            matched = stream.groupBy("user_id").applyInPandasWithState(
-                asof_update, outputStructType=ASOF_OUTPUT_SCHEMA,
-                stateStructType=ASOF_STATE_SCHEMA, outputMode="update",
-                timeoutConf=NO_TIMEOUT)
-        name = f"sasof_rand_{mode}"
-        with provider:
-            q = (matched.writeStream.format("memory").queryName(name)
-                 .outputMode("update")
-                 .option("checkpointLocation", str(tmp_path / f"ck_{mode}"))
-                 .trigger(availableNow=True).start())
-        q.awaitTermination()
-        w = Window.partitionBy("purchase_id").orderBy(F.desc("version"))
-        return {r["purchase_id"]: (r["user_id"], r["view_id"],
-                                   r["seconds_since_view"])
-                for r in (spark.table(name)
-                          .withColumn("rn", F.row_number().over(w))
-                          .filter(F.col("rn") == 1).collect())}
-
-    fb, fu = fixpoint("bucketed"), fixpoint("per_user")
+    ev = spark.createDataFrame(
+        rows, "user_id long, event_id long, event_type string, ts_us long")
+    p = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"), "user_id",
+        F.col("ts_us").alias("p_ts"))
+    v = ev.filter(F.col("event_type") == "view").select(
+        "user_id", F.col("event_id").alias("view_id"),
+        F.col("ts_us").alias("v_ts"))
+    batch = asof_join(p, v, on="user_id", left_ts="p_ts", right_ts="v_ts",
+                      right_cols=["view_id", "v_ts"], direction="backward")
+    want = {r["purchase_id"]: (
+                r["user_id"], r["view_id"],
+                None if r["view_id"] is None
+                else r["p_ts"] // 1_000_000 - r["v_ts"] // 1_000_000)
+            for r in batch.collect()}
     n_purchases = sum(1 for r in rows if r[2] == "purchase")
-    assert len(fu) == n_purchases
-    assert fb == fu
-    from .test_bnpl_pipeline import _has_protobuf
-    if _has_protobuf():
-        # the Spark 4 typed-state port must land on the SAME fixpoint
-        assert fixpoint("tws_bucketed") == fu
+    assert len(want) == n_purchases
+    assert _asof_fixpoint(emitted) == want
 
 
 def test_bucket_match_exact_above_2_53():
@@ -755,249 +587,6 @@ def test_bucket_match_exact_above_2_53():
     assert vid.tolist() == [big_id, -1]
     assert vts.tolist() == [big_ts, 0]
     assert vid.dtype == np.int64 and vts.dtype == np.int64
-
-
-def test_stream_asof_ttl_bounds_correction(spark, tmp_path):
-    """The bounded-state trade-off, demonstrated: with a watermark +
-    event-time TTL, a view arriving after other traffic has pushed the
-    watermark far past the purchase can no longer upgrade the match —
-    the purchase keeps its stale (null) match, while the unbounded
-    variant (test above) would have corrected it. State eviction is
-    the price of bounded memory, and it is OBSERVABLE, not silent."""
-    import os
-    import time
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from event_streaming_bnpl_demo_spark.streaming.asof_state import (
-        ASOF_OUTPUT_SCHEMA, ASOF_STATE_SCHEMA, EVENT_TIME_TIMEOUT,
-        asof_update_ttl)
-
-    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ck")
-    os.makedirs(in_dir)
-    cols = ["user_id", "event_id", "event_type", "ts_us"]
-    hour_us = 3_600_000_000
-    # b1: user 1's purchase at t=1h (no view yet)
-    b1 = [(1, 100, "purchase", 1 * hour_us)]
-    # b2: user 2 traffic two days later -> watermark passes 1h + TTL
-    b2 = [(2, 200, "view", 48 * hour_us)]
-    # b3: user 1's view from t=0.5h arrives late -> state already
-    # evicted AND the row is behind the watermark: no correction
-    b3 = [(1, 10, "view", hour_us // 2)]
-    for i, rows in enumerate([b1, b2, b3], 1):
-        spark.createDataFrame(rows, cols).coalesce(1).write.parquet(
-            f"{in_dir}/f{i}")
-    now = time.time()
-    for i in (1, 2, 3):
-        d = f"{in_dir}/f{i}"
-        for f in os.listdir(d):
-            os.utime(os.path.join(d, f), (now - 60 + i, now - 60 + i))
-
-    stream = (spark.readStream
-              .schema("user_id long, event_id long, event_type string, "
-                      "ts_us long")
-              .option("maxFilesPerTrigger", "1")
-              .parquet(in_dir + "/f*")
-              .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-              .withWatermark("ts", "1 hour"))
-    q = (stream.groupBy("user_id")
-         .applyInPandasWithState(
-             asof_update_ttl(ttl_s=3600),
-             outputStructType=ASOF_OUTPUT_SCHEMA,
-             stateStructType=ASOF_STATE_SCHEMA, outputMode="update",
-             timeoutConf=EVENT_TIME_TIMEOUT)
-         .writeStream.format("memory").queryName("sasof_ttl")
-         .outputMode("update").option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    emitted = spark.table("sasof_ttl")
-    w = Window.partitionBy("purchase_id").orderBy(F.desc("version"))
-    final = {r["purchase_id"]: r for r in
-             (emitted.filter(F.col("purchase_id").isNotNull())
-              .withColumn("rn", F.row_number().over(w))
-              .filter(F.col("rn") == 1).collect())}
-    # the purchase exists but its match was NEVER corrected
-    assert 100 in final
-    assert final[100]["view_id"] is None
-
-
-@_TWS_SKIP
-def test_stream_asof_tws_ttl_bounds_correction(spark, tmp_path):
-    """The same bounded-state trade on the transformWithState twin
-    (BucketedAsofProcessorTTL): watermark-driven event-time timers
-    evict the bucket's buffers, and a view arriving behind the
-    watermark is dropped by the processor — so the stale (null) match
-    survives exactly as in the GroupState member. Exercises BOTH
-    eviction paths: handleExpiredTimer (timer fired when other
-    traffic pushed the watermark past the horizon) and the
-    late-row drop."""
-    import os
-    import time
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from event_streaming_bnpl_demo_spark.streaming.asof_state import (
-        ASOF_BUCKETS, ASOF_OUTPUT_SCHEMA, BucketedAsofProcessorTTL)
-    from event_streaming_bnpl_demo_spark.streaming.state import \
-        rocksdb_state_store
-
-    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ck")
-    os.makedirs(in_dir)
-    cols = ["user_id", "event_id", "event_type", "ts_us"]
-    hour_us = 3_600_000_000
-    b1 = [(1, 100, "purchase", 1 * hour_us)]
-    b2 = [(2, 200, "view", 48 * hour_us)]       # other-bucket traffic
-    b3 = [(1, 10, "view", hour_us // 2)]        # late, would upgrade
-    for i, rows in enumerate([b1, b2, b3], 1):
-        spark.createDataFrame(rows, cols).coalesce(1).write.parquet(
-            f"{in_dir}/f{i}")
-    now = time.time()
-    for i in (1, 2, 3):
-        d = f"{in_dir}/f{i}"
-        for f in os.listdir(d):
-            os.utime(os.path.join(d, f), (now - 60 + i, now - 60 + i))
-
-    stream = (spark.readStream
-              .schema("user_id long, event_id long, event_type string, "
-                      "ts_us long")
-              .option("maxFilesPerTrigger", "1")
-              .parquet(in_dir + "/f*")
-              .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-              .withWatermark("ts", "1 hour")
-              .withColumn("bucket", F.pmod(F.col("user_id"),
-                                           F.lit(ASOF_BUCKETS))))
-    with rocksdb_state_store(spark):
-        q = (stream.groupBy("bucket")
-             .transformWithStateInPandas(
-                 BucketedAsofProcessorTTL(ttl_s=3600),
-                 outputStructType=ASOF_OUTPUT_SCHEMA,
-                 outputMode="update", timeMode="eventTime")
-             .writeStream.format("memory").queryName("sasof_tws_ttl")
-             .outputMode("update").option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-
-    emitted = spark.table("sasof_tws_ttl")
-    w = Window.partitionBy("purchase_id").orderBy(F.desc("version"))
-    final = {r["purchase_id"]: r for r in
-             (emitted.filter(F.col("purchase_id").isNotNull())
-              .withColumn("rn", F.row_number().over(w))
-              .filter(F.col("rn") == 1).collect())}
-    assert 100 in final
-    assert final[100]["view_id"] is None
-
-
-def test_stream_asof_ttl_equals_unbounded_within_horizon(spark, tmp_path):
-    """The other half of the TTL law: while every arrival stays INSIDE
-    the retention horizon (no state evicted, nothing behind the
-    watermark), the bounded fold must land on EXACTLY the unbounded
-    fold's fixpoint — the TTL knob only trades away correction depth
-    beyond the horizon (the test above), it never perturbs semantics
-    within it. Input includes the hard cases: out-of-order arrival, a
-    retroactive upgrade, ts ties, and a never-matched purchase."""
-    import os
-    import random
-    import time
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from event_streaming_bnpl_demo_spark.streaming.asof_state import (
-        ASOF_OUTPUT_SCHEMA, ASOF_STATE_SCHEMA, EVENT_TIME_TIMEOUT,
-        NO_TIMEOUT, asof_update, asof_update_ttl)
-
-    # 200 events over 8 users inside a 30-minute event-time span:
-    # a 1 h watermark delay + 24 h TTL means nothing is ever late and
-    # no state can expire — the bounded path must be exact.
-    rng = random.Random(99)
-    rows = []
-    for eid in range(200):
-        rows.append((rng.randrange(1, 9), eid,
-                     "view" if rng.random() < 0.7 else "purchase",
-                     rng.randrange(0, 1800) * 1_000_000))  # ties common
-    rng.shuffle(rows)
-    batches = [rows[0:70], rows[70:140], rows[140:200]]
-    in_dir = str(tmp_path / "in")
-    cols = ["user_id", "event_id", "event_type", "ts_us"]
-    now = time.time()
-    for i, b in enumerate(batches):
-        sub = f"{in_dir}/f{i}"
-        spark.createDataFrame(b, cols).coalesce(1).write.parquet(sub)
-        for f in os.listdir(sub):
-            os.utime(os.path.join(sub, f), (now - 60 + i, now - 60 + i))
-
-    def fixpoint(mode: str) -> dict:
-        import contextlib
-
-        from event_streaming_bnpl_demo_spark.streaming.asof_state import (
-            ASOF_BUCKETS, BucketedAsofProcessorTTL)
-        from event_streaming_bnpl_demo_spark.streaming.state import \
-            rocksdb_state_store
-
-        stream = (spark.readStream
-                  .schema("user_id long, event_id long, "
-                          "event_type string, ts_us long")
-                  .option("maxFilesPerTrigger", "1")
-                  .parquet(in_dir + "/f*"))
-        provider = contextlib.nullcontext()
-        if mode == "ttl":
-            matched = (stream
-                       .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-                       .withWatermark("ts", "1 hour")
-                       .groupBy("user_id")
-                       .applyInPandasWithState(
-                           asof_update_ttl(ttl_s=24 * 3600),
-                           outputStructType=ASOF_OUTPUT_SCHEMA,
-                           stateStructType=ASOF_STATE_SCHEMA,
-                           outputMode="update",
-                           timeoutConf=EVENT_TIME_TIMEOUT))
-        elif mode == "tws_ttl":
-            matched = (stream
-                       .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-                       .withWatermark("ts", "1 hour")
-                       .withColumn("bucket", F.pmod(F.col("user_id"),
-                                                    F.lit(ASOF_BUCKETS)))
-                       .groupBy("bucket")
-                       .transformWithStateInPandas(
-                           BucketedAsofProcessorTTL(ttl_s=24 * 3600),
-                           outputStructType=ASOF_OUTPUT_SCHEMA,
-                           outputMode="update",
-                           timeMode="eventTime"))
-            provider = rocksdb_state_store(spark)
-        else:
-            matched = stream.groupBy("user_id").applyInPandasWithState(
-                asof_update, outputStructType=ASOF_OUTPUT_SCHEMA,
-                stateStructType=ASOF_STATE_SCHEMA, outputMode="update",
-                timeoutConf=NO_TIMEOUT)
-        name = f"sasof_hz_{mode}"
-        with provider:
-            q = (matched.writeStream.format("memory").queryName(name)
-                 .outputMode("update")
-                 .option("checkpointLocation", str(tmp_path / f"ck_{mode}"))
-                 .trigger(availableNow=True).start())
-        q.awaitTermination()
-        w = Window.partitionBy("purchase_id").orderBy(F.desc("version"))
-        return {r["purchase_id"]: (r["user_id"], r["view_id"],
-                                   r["seconds_since_view"])
-                for r in (spark.table(name)
-                          .filter(F.col("purchase_id").isNotNull())
-                          .withColumn("rn", F.row_number().over(w))
-                          .filter(F.col("rn") == 1).collect())}
-
-    ft, fu = fixpoint("ttl"), fixpoint("unbounded")
-    n_purchases = sum(1 for r in rows if r[2] == "purchase")
-    assert len(fu) == n_purchases
-    assert ft == fu
-    # the tws event-time-TTL twin (BucketedAsofProcessorTTL) must land
-    # on the same fixpoint — the bounded production path on the
-    # non-deprecated API, exact while every arrival is inside the
-    # horizon
-    from tests.test_bnpl_pipeline import _has_protobuf
-    if _has_protobuf():
-        assert fixpoint("tws_ttl") == fu
 
 
 def test_mv_stream_refresh_resumes_exactly_once(spark, tmp_path):
@@ -1069,202 +658,6 @@ def test_mv_stream_refresh_resumes_exactly_once(spark, tmp_path):
     want = {r["c_nationkey"]: (r["n_orders"], r["rev"])
             for r in batch.collect()}
     assert got == want
-
-
-def test_overdue_timer_fires_on_watermark_not_arrival(spark, tmp_path):
-    """Event-time timers (transformWithState, timeMode='eventTime'):
-    an unpaid bill emits OVERDUE when the WATERMARK passes
-    issue+grace — detecting the ABSENCE of a payment event, which no
-    arrival-driven operator can do — while a paid bill's timer
-    expires silently. Two runs over one checkpoint also prove timers
-    survive a restart: the deadline registered in run 1 fires in run
-    2 after an unrelated event advances the watermark."""
-    import json
-    import os
-
-    from event_streaming_bnpl_demo_spark.sources.events import (
-        read_event_stream,
-    )
-    from event_streaming_bnpl_demo_spark.streaming.state import (
-        overdue_bill_stream, rocksdb_state_store,
-    )
-
-    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    ckpt = str(tmp_path / "ck")
-    os.makedirs(in_dir)
-
-    def bill(bid, ts):
-        return {"event_type": "MemberBillCreatedEvent", "bill_id": bid,
-                "promise_id": f"pr-{bid}", "user_id": "u1", "amount": 100,
-                "issued_date": "2026-01-01", "ingest_ts": ts}
-
-    def pay(bid, ts):
-        return {"event_type": "PaymentCompletedEvent", "bill_id": bid,
-                "user_id": "u1", "amount": 100, "paid_date": "2026-01-01",
-                "ingest_ts": ts}
-
-    def run_once():
-        stream = read_event_stream(spark, in_dir)
-
-        def sink(batch, _):
-            batch.write.mode("append").parquet(out_dir)
-
-        with rocksdb_state_store(spark):
-            q = (overdue_bill_stream(stream, grace_seconds=3600)
-                 .writeStream.foreachBatch(sink)
-                 .outputMode("update")
-                 .option("checkpointLocation", ckpt)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination()
-
-    # run 1: two bills issued 09:00 (deadline 10:00); b2 paid at 09:30.
-    # watermark ends at 09:30 -> no timer fires yet.
-    with open(os.path.join(in_dir, "b1.jsonl"), "w") as f:
-        for e in (bill("b1", "2026-01-01T09:00:00.000Z"),
-                  bill("b2", "2026-01-01T09:00:00.000Z"),
-                  pay("b2", "2026-01-01T09:30:00.000Z")):
-            f.write(json.dumps(e) + "\n")
-    run_once()
-    rows = spark.read.parquet(out_dir).collect()
-    assert not [r for r in rows if r["kind"] == "OVERDUE"]
-
-    # run 2 (fresh query, same checkpoint): an unrelated 11:00 bill
-    # advances the watermark past 10:00 -> b1's restored timer fires;
-    # paid b2 stays silent.
-    with open(os.path.join(in_dir, "b2.jsonl"), "w") as f:
-        f.write(json.dumps(bill("b3", "2026-01-01T11:00:00.000Z")) + "\n")
-    run_once()
-    overdue = {r["bill_id"]: r["status"]
-               for r in spark.read.parquet(out_dir).collect()
-               if r["kind"] == "OVERDUE"}
-    assert overdue == {"b1": "unpaid"}, overdue
-
-    # run 3: a LATE payment for b1 — its lifecycle timer already fired
-    # and GC'd the row, so this resurrects state for a closed bill.
-    # The resurrected paid row must arm a GC timer (without one it
-    # lives forever: the r11 leak), and must not emit a new OVERDUE.
-    with open(os.path.join(in_dir, "b3.jsonl"), "w") as f:
-        f.write(json.dumps(pay("b1", "2026-01-01T09:40:00.000Z")) + "\n")
-    run_once()
-    # run 4: advance the watermark past (run-3 watermark + grace) so
-    # the GC timer fires; paid rows fire silently.
-    with open(os.path.join(in_dir, "b4.jsonl"), "w") as f:
-        f.write(json.dumps(bill("b4", "2026-01-01T14:00:00.000Z")) + "\n")
-    run_once()
-    # b3 (issued 11:00, never paid) legitimately fires here; the
-    # resurrected b1 must NOT re-emit
-    overdue2 = sorted(r["bill_id"]
-                      for r in spark.read.parquet(out_dir).collect()
-                      if r["kind"] == "OVERDUE")
-    assert overdue2 == ["b1", "b3"], \
-        f"late payment resurrected a closed bill into OVERDUE: {overdue2}"
-    # the resurrected row is GONE from the store (state data source
-    # reader over the same checkpoint): only the live b4 row remains
-    state = (spark.read.format("statestore")
-             .option("stateVarName", "bill")
-             .load(ckpt))
-    keys = sorted(r["key"]["bill_id"] for r in state.collect())
-    assert keys == ["b4"], \
-        f"resurrected paid row leaked in the state store: {keys}"
-
-    # runs 5-8: the r12 GC-horizon knob (r11 advice on state.py) —
-    # the payment-before-create correction window is gc_grace_ms
-    # (default 4x grace), SEPARATE from the business deadline. A
-    # payment-first key (c1 paid at 14:30) parks as a paid row for
-    # 4 h of watermark time; its create arriving ~3 h later in
-    # watermark terms (run 7, after wm passed 17:00) — which under
-    # the old grace-wide horizon would hit an already-GC'd key and
-    # re-emit a SPURIOUS OVERDUE — still sees 'paid' and stays
-    # silent. run 8 pushes the watermark past the GC deadline
-    # (18:00) and past b5's real deadline: the paid c1 GCs silently,
-    # b5 fires for real.
-    with open(os.path.join(in_dir, "b5.jsonl"), "w") as f:
-        f.write(json.dumps(pay("c1", "2026-01-01T14:30:00.000Z")) + "\n")
-    run_once()
-    with open(os.path.join(in_dir, "b6.jsonl"), "w") as f:
-        f.write(json.dumps(bill("b5", "2026-01-01T17:00:00.000Z")) + "\n")
-    run_once()
-    with open(os.path.join(in_dir, "b7.jsonl"), "w") as f:
-        f.write(json.dumps(bill("c1", "2026-01-01T17:30:00.000Z")) + "\n")
-    run_once()
-    with open(os.path.join(in_dir, "b8.jsonl"), "w") as f:
-        f.write(json.dumps(bill("b6", "2026-01-01T21:00:00.000Z")) + "\n")
-    run_once()
-    final = spark.read.parquet(out_dir).collect()
-    plain = sorted(set(r["bill_id"] for r in final
-                       if r["kind"] == "OVERDUE"))
-    assert "c1" not in plain, \
-        f"paid-then-late-create re-emitted a spurious OVERDUE: {plain}"
-    assert plain == ["b1", "b3", "b4", "b5"], plain
-    # paid c1 GC'd at wm+4h; only the live b6 row remains
-    state2 = (spark.read.format("statestore")
-              .option("stateVarName", "bill")
-              .load(ckpt))
-    keys2 = sorted(r["key"]["bill_id"] for r in state2.collect())
-    assert keys2 == ["b6"], \
-        f"GC-horizon row leaked or over-collected: {keys2}"
-
-
-def test_list_and_map_state_bound_per_user_profiles(spark, tmp_path):
-    """ListState + MapState (the remaining transformWithState
-    primitives): the per-user recent-purchase list is TRIMMED to the
-    newest N entries across micro-batches (bounded state on an
-    unbounded stream) and the per-type MapState counters accumulate
-    across a checkpointed second run."""
-    from event_streaming_bnpl_demo_spark.streaming.state import (
-        ACTIVITY_RECENT_N, rocksdb_state_store, user_activity_stream,
-    )
-
-    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    ckpt = str(tmp_path / "ck")
-
-    def ev(i, uid, etype, val, ts):
-        return {"event_id": i, "ts": ts, "user_id": uid,
-                "event_type": etype, "value": float(val)}
-
-    def run_once():
-        stream = (spark.readStream.schema(SCHEMA).json(in_dir))
-
-        def sink(batch, _):
-            batch.write.mode("append").parquet(out_dir)
-
-        with rocksdb_state_store(spark):
-            q = (user_activity_stream(stream)
-                 .writeStream.foreachBatch(sink)
-                 .outputMode("update")
-                 .option("checkpointLocation", ckpt)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination()
-
-    # run 1: u1 makes 4 purchases (one more than the bound) + a view
-    write_jsonl(in_dir, "b1.jsonl", [
-        ev(1, 1, "purchase", 10, "2026-01-01T00:00:01"),
-        ev(2, 1, "purchase", 20, "2026-01-01T00:00:02"),
-        ev(3, 1, "purchase", 30, "2026-01-01T00:00:03"),
-        ev(4, 1, "purchase", 40, "2026-01-01T00:00:04"),
-        ev(5, 1, "view", 0, "2026-01-01T00:00:05"),
-        ev(6, 2, "view", 0, "2026-01-01T00:00:06"),
-    ])
-    run_once()
-    rows = {r["user_id"]: r.asDict()
-            for r in spark.read.parquet(out_dir).collect()}
-    assert rows[1]["n_events"] == 5 and rows[1]["n_types"] == 2
-    # list bounded: oldest purchase (10) evicted, newest 3 kept in order
-    assert rows[1]["recent_values"] == "20,30,40"
-    assert len(rows[1]["recent_values"].split(",")) == ACTIVITY_RECENT_N
-    assert rows[2]["n_events"] == 1 and rows[2]["recent_values"] == ""
-
-    # run 2 (same checkpoint): one more purchase rolls the window and
-    # the map counters keep accumulating
-    write_jsonl(in_dir, "b2.jsonl", [
-        ev(7, 1, "purchase", 50, "2026-01-01T00:00:07"),
-    ])
-    run_once()
-    latest = sorted((r for r in spark.read.parquet(out_dir).collect()
-                     if r["user_id"] == 1),
-                    key=lambda r: r["n_events"])[-1]
-    assert latest["n_events"] == 6
-    assert latest["recent_values"] == "30,40,50"
 
 
 def test_dynamic_gap_session_stream_matches_batch(spark, tmp_path):
