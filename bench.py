@@ -355,8 +355,7 @@ def stream_throughput(spark: SparkSession, sf_dir: str,
             for i in range(3):
                 out_dir = os.path.join(work, f"out{i}")
                 t0 = time.perf_counter()
-                BnplPipeline(spark, in_dir, out_dir,
-                             projection_mode="incremental").run_stream(
+                BnplPipeline(spark, in_dir, out_dir).run_stream(
                     available_now=True)
                 walls.append(time.perf_counter() - t0)
         # the throughput number's own exoneration: one probe reading
@@ -376,8 +375,7 @@ def stream_throughput(spark: SparkSession, sf_dir: str,
             out_dir = os.path.join(work, "out_extra")
             with scoped_shuffle_partitions(spark, 8):
                 t0 = time.perf_counter()
-                BnplPipeline(spark, in_dir, out_dir,
-                             projection_mode="incremental").run_stream(
+                BnplPipeline(spark, in_dir, out_dir).run_stream(
                     available_now=True)
                 walls.append(time.perf_counter() - t0)
             extra["extra_run_sec"] = round(walls[-1], 2)

@@ -47,14 +47,12 @@ from .streaming.pipeline import BnplPipeline
 class BnplEngine:
     """Command/query facade over :class:`BnplPipeline`."""
 
-    def __init__(self, spark: SparkSession, data_dir: str,
-                 projection_mode: str = "recompute"):
+    def __init__(self, spark: SparkSession, data_dir: str):
         self.spark = spark
         self.in_dir = os.path.join(data_dir, "in")
         os.makedirs(self.in_dir, exist_ok=True)
         self.pipeline = BnplPipeline(
-            spark, self.in_dir, os.path.join(data_dir, "out"),
-            projection_mode=projection_mode)
+            spark, self.in_dir, os.path.join(data_dir, "out"))
 
     # -- command side -----------------------------------------------------
     def _emit(self, event: dict) -> None:

@@ -12,111 +12,123 @@ iterator restart loss, consumer/consumer.go:64), with:
   (SURVEY §4.2: a planning decision in our engine, not a second
   streaming hop) — promises are visible one poll-cycle earlier than
   the reference;
-- projections maintained in foreachBatch as idempotent recomputes
-  from the accumulated log (plain parquet has no MERGE; recompute-
-  from-log is exact, replayable event-sourcing doctrine — SURVEY §7
-  hard part (a)). At 100 TB the same foreachBatch body becomes a
-  keyed MERGE into a Delta/Iceberg table; the transform layer is
-  unchanged.
+- projections maintained in foreachBatch by folding each batch's
+  partial aggregate into the stored state (transforms.merge_promises /
+  merge_bills_state) — O(state + batch) per batch. Every combiner is
+  associative, commutative and idempotent, so replayed batches and
+  duplicate deliveries fold to the state a recompute over the whole
+  log would give (tests/test_bnpl_pipeline.py checks this against
+  transforms.project_*). At 100 TB the same fold becomes a keyed MERGE
+  into a Delta/Iceberg table; the transform layer is unchanged.
 
 Delivery: file source + checkpoint gives exactly-once source progress;
 the archive id is a content hash and projections dedup on natural keys,
 so end-to-end the pipeline is idempotent under at-least-once delivery —
-the two failure modes FIXTURES.md A3 v1/v2 test.
+the two failure modes FIXTURES.md A3 v1/v2 test. A fold is only
+idempotent if its prior state survives a crash, so every directory the
+pipeline rewrites is published by :func:`_swap_write` and repaired by
+:func:`_recover_swap` when a pipeline is constructed.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
-from ..sources.events import read_event_batch, read_event_stream
+from ..sources.events import read_event_stream
 from . import transforms
+
+
+def _swap_write(df: DataFrame, target: str,
+                partition_by: str | None = None) -> None:
+    """Overwrite a parquet dir that the plan may be reading from:
+    materialize to ``<target>.tmp``, then swap it into place. Spark
+    marks a completed write with ``_SUCCESS``, which is what
+    :func:`_recover_swap` keys on after a crash. (A lakehouse table
+    format replaces this with an atomic MERGE/commit.)"""
+    tmp = target + ".tmp"
+    writer = df.write.mode("overwrite")
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(tmp)
+    if os.path.isdir(target):
+        shutil.rmtree(target)
+    os.rename(tmp, target)
+
+
+def _recover_swap(target: str) -> None:
+    """Finish or discard a :func:`_swap_write` that a crash interrupted.
+    A complete ``.tmp`` (``_SUCCESS`` present) holds the newest state,
+    possibly with ``target`` already removed, so the swap is finished;
+    an incomplete one is deleted and ``target`` stays as it was."""
+    tmp = target + ".tmp"
+    if os.path.exists(os.path.join(tmp, "_SUCCESS")):
+        if os.path.isdir(target):
+            shutil.rmtree(target)
+        os.rename(tmp, target)
+    elif os.path.isdir(tmp):
+        shutil.rmtree(tmp)
 
 
 class BnplPipeline:
     """File-source streaming pipeline with parquet sinks.
 
     Layout under ``out_dir``: ``events_log/`` (append, partitioned by
-    event_type), ``payment_promises/``, ``member_bills/`` (recomputed
-    projections), ``_checkpoint/``.
+    event_type), ``payment_promises/`` (the folded promises projection),
+    ``_member_bills_state/`` (the folded per-bill partial aggregate,
+    finalized into member_bills by :meth:`bills`), ``_checkpoint/``.
     """
 
     def __init__(self, spark: SparkSession, in_dir: str, out_dir: str,
-                 derive_cascade: bool = True,
-                 projection_mode: str = "recompute"):
-        """``derive_cascade=True`` (default) flattens the purchase→promise
-        cascade into the same micro-batch — the mode for fresh command
-        streams, where OUR engine performs the derivation the reference's
-        consumer did (consumer/consumer.go:123-144). Pass ``False`` when
-        replaying a log that ALREADY contains the cascaded
-        PaymentPromiseCreatedEvent records (e.g. an archived reference
-        stream): deriving again would double-materialize promises, since
-        the reference's cascaded events carry fresh uuids that cannot be
-        linked back to their source purchase (order_id is per-user, not
-        per-purchase — main.go:90).
+                 projection_mode: str = "incremental"):
+        """``projection_mode`` has the one value ``'incremental'`` and is
+        accepted so callers that name it keep working.
 
-        ``projection_mode`` picks the maintenance strategy:
-
-        - ``'recompute'`` (default): projections are rebuilt from the
-          full accumulated log each batch — maximally simple and
-          self-healing, O(log) per batch. Right for moderate logs and
-          for backfills.
-        - ``'incremental'``: each batch's PARTIAL aggregate folds into
-          the stored state (transforms.merge_bills_state /
-          merge_promises) — O(state + batch) per batch, the shape that
-          survives a 100 TB log. Correct because every combiner is
-          associative, commutative, and idempotent, so replayed batches
-          and duplicate deliveries fold to the same state the recompute
-          would produce (equivalence is tested). On a lakehouse table
-          the same fold is a keyed MERGE INTO; plain parquet here uses
-          write-to-tmp + directory swap.
-        """
-        if projection_mode not in ("recompute", "incremental"):
+        Construction first recovers any directory swap a crash left
+        half done, so the next batch folds into the surviving state.
+        One pipeline writes an ``out_dir`` at a time: recovery would
+        delete another writer's in-progress ``.tmp``."""
+        if projection_mode != "incremental":
             raise ValueError(f"unknown projection_mode {projection_mode!r}")
         self.spark = spark
         self.in_dir = in_dir
         self.out_dir = out_dir
-        self.derive_cascade = derive_cascade
-        self.projection_mode = projection_mode
-        self.bills_state_dir = os.path.join(out_dir, "_member_bills_state")
         self.log_dir = os.path.join(out_dir, "events_log")
         self.promises_dir = os.path.join(out_dir, "payment_promises")
-        self.bills_dir = os.path.join(out_dir, "member_bills")
+        self.bills_state_dir = os.path.join(out_dir, "_member_bills_state")
         self.checkpoint = os.path.join(out_dir, "_checkpoint")
+        for d in (self.log_dir, self.promises_dir, self.bills_state_dir):
+            _recover_swap(d)
 
-    # -- batch replay (same transforms, spark.read) ----------------------
-    def replay_batch(self) -> None:
-        events = self._flatten(read_event_batch(self.spark, self.in_dir))
-        self._write_batch(events)
-
-    # -- streaming (same transforms, spark.readStream) -------------------
-    def run_stream(self, available_now: bool = True) -> None:
+    def run_stream(self, available_now: bool = True) -> StreamingQuery:
         """Process everything currently in in_dir through the streaming
         engine (availableNow trigger: real micro-batches + checkpoint,
-        terminates when caught up — the test/CI mode). Pass
-        ``available_now=False`` for a continuous 1 s-trigger service
-        matching the reference's poll cadence (BASELINE.md)."""
+        terminates when caught up — the test/CI mode) and return the
+        finished query. Pass ``available_now=False`` for a continuous
+        1 s-trigger service matching the reference's poll cadence
+        (BASELINE.md); the running query is returned for the caller to
+        inspect and ``stop()``."""
         stream = read_event_stream(self.spark, self.in_dir)
         writer = (
             stream.writeStream
             .foreachBatch(lambda df, epoch: self._process_batch(df))
             .option("checkpointLocation", self.checkpoint)
         )
-        if available_now:
-            q = writer.trigger(availableNow=True).start()
-            q.awaitTermination()
-        else:
-            writer.trigger(processingTime="1 second").start()
+        if not available_now:
+            return writer.trigger(processingTime="1 second").start()
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
+        return q
 
     # -- internals --------------------------------------------------------
-    def _flatten(self, events: DataFrame) -> DataFrame:
+    @staticmethod
+    def _flatten(events: DataFrame) -> DataFrame:
         """Cascade flattening: union derived promise events into the
         batch so they materialize in the same cycle."""
-        if not self.derive_cascade:
-            return events
         derived = transforms.derive_promises(events)
         derived = derived.select(
             F.to_json(F.struct([c for c in derived.columns
@@ -126,7 +138,27 @@ class BnplPipeline:
         return events.unionByName(derived)
 
     def _process_batch(self, micro_batch: DataFrame) -> None:
-        self._write_batch(self._flatten(micro_batch))
+        # archive + the two projection folds touch disjoint directories
+        # and share no ordering, so they run as CONCURRENT Spark jobs:
+        # per-batch latency is the max of the three job chains instead
+        # of their sum. The shared inputs are persisted for the fan-out:
+        # unpersisted, each job re-ran the source read, JSON parse and
+        # cascade derivation, and both folds re-ran the content-hash
+        # dedup. Both handles unpersist before the batch returns.
+        from concurrent.futures import ThreadPoolExecutor
+
+        events = self._flatten(micro_batch).persist()
+        batch = events.dropDuplicates(["event_data"]).persist()
+        try:
+            with ThreadPoolExecutor(max_workers=3) as ex:
+                futs = [ex.submit(self._archive, events),
+                        ex.submit(self._fold_promises, batch),
+                        ex.submit(self._fold_bills_state, batch)]
+                for f in futs:
+                    f.result()
+        finally:
+            batch.unpersist()
+            events.unpersist()
 
     def _archive(self, events: DataFrame) -> None:
         # R5/R6: append archive, partitioned by type
@@ -135,76 +167,22 @@ class BnplPipeline:
          .write.mode("append").partitionBy("event_type_part")
          .parquet(self.log_dir))
 
-    def _write_batch(self, events: DataFrame) -> None:
-        if self.projection_mode == "incremental":
-            # archive + the two projection folds touch disjoint
-            # directories and share no ordering, so they run as
-            # CONCURRENT Spark jobs: per-batch latency is the max of
-            # the three job chains instead of their sum (the scheduler
-            # interleaves their stages across the same executors).
-            # Persist the shared inputs for the fan-out (r13, the
-            # stream_fanout_cascade doctrine / guide §2.3): unpersisted,
-            # each of the three jobs re-ran the source read + JSON
-            # parse + cascade derivation, and both folds re-ran the
-            # content-hash dedup — 3x the per-batch CPU for identical
-            # rows. One cache fill serves all three; on an idle host
-            # the overlap hid the waste (measured wash), under
-            # concurrent load the single fill won the interleaved A/B
-            # — and at 100 TB executor-hours are the budget, not idle
-            # cores. Both handles unpersist before the batch returns.
-            from concurrent.futures import ThreadPoolExecutor
-
-            events = events.persist()
-            batch = events.dropDuplicates(["event_data"]).persist()
-            try:
-                with ThreadPoolExecutor(max_workers=3) as ex:
-                    futs = [ex.submit(self._archive, events),
-                            ex.submit(self._fold_promises, batch),
-                            ex.submit(self._fold_bills_state, batch)]
-                    for f in futs:
-                        f.result()
-            finally:
-                batch.unpersist()
-                events.unpersist()
-            return
-        # recompute mode reads the log AFTER archiving — ordered
-        self._archive(events)
-        log = self.read_log()
-        (transforms.project_promises(log)
-         .write.mode("overwrite").parquet(self.promises_dir))
-        (transforms.project_bills(log)
-         .write.mode("overwrite").parquet(self.bills_dir))
-
     def _fold_promises(self, batch: DataFrame) -> None:
         delta_p = transforms.project_promises(batch)
         if os.path.isdir(self.promises_dir):
             delta_p = transforms.merge_promises(
                 self.spark.read.parquet(self.promises_dir), delta_p)
-        self._swap_write(delta_p, self.promises_dir)
+        _swap_write(delta_p, self.promises_dir)
 
     def _fold_bills_state(self, batch: DataFrame) -> None:
         delta_b = transforms.bills_state(batch)
         if os.path.isdir(self.bills_state_dir):
             delta_b = transforms.merge_bills_state(
                 self.spark.read.parquet(self.bills_state_dir), delta_b)
-        self._swap_write(delta_b, self.bills_state_dir)
+        _swap_write(delta_b, self.bills_state_dir)
         # bills are DERIVED from the state table at read time (bills());
         # materializing them per batch was a third serialized write job
         # whose only reader can fold the same projection lazily
-
-    def _swap_write(self, df: DataFrame, target: str) -> None:
-        """Overwrite a parquet dir that the plan may be reading from:
-        materialize to a tmp dir, then swap. (A lakehouse table format
-        replaces this with an atomic MERGE/commit; the swap is the
-        plain-parquet stand-in and is crash-safe up to a re-run of the
-        idempotent batch.)"""
-        import shutil
-
-        tmp = target + ".tmp"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(target):
-            shutil.rmtree(target)
-        os.rename(tmp, target)
 
     def read_log(self) -> DataFrame:
         """Re-parse the archived event documents into the envelope."""
@@ -227,7 +205,8 @@ class BnplPipeline:
         operational cost of an append file sink at scale (every 1 s
         trigger writes ≥1 file per partition; a day is ~86k files).
         Rewrites the log at ``target_rows_per_file`` granularity,
-        preserving the event_type partitioning, then swaps directories.
+        preserving the event_type partitioning, and publishes it with
+        the same crash-recoverable swap as the projections.
 
         Single-writer maintenance op (run it between trigger windows —
         the swap is not transactional for concurrent readers; at 100 TB
@@ -237,7 +216,6 @@ class BnplPipeline:
         appends continue exactly where they left off.
         """
         import glob
-        import shutil
 
         def _files(d: str) -> int:
             return len(glob.glob(os.path.join(d, "**", "part-*"),
@@ -247,33 +225,17 @@ class BnplPipeline:
         n = raw.count()
         before = _files(self.log_dir)
         nfiles = max(1, -(-n // target_rows_per_file))
-        tmp, old = self.log_dir + ".compacting", self.log_dir + ".old"
-        (raw.repartition(nfiles)
-         .write.mode("overwrite").partitionBy("event_type_part")
-         .parquet(tmp))
-        os.rename(self.log_dir, old)
-        os.rename(tmp, self.log_dir)
-        shutil.rmtree(old)
+        _swap_write(raw.repartition(nfiles), self.log_dir,
+                    partition_by="event_type_part")
         return {"rows": n, "files_before": before,
                 "files_after": _files(self.log_dir)}
 
     def promises(self) -> DataFrame:
-        # Keyed on the configured mode — NOT on directory existence —
-        # so re-running the same out_dir with the mode switched never
-        # serves a projection the other mode left behind. In recompute
-        # mode the log is the source of truth and the projection is
-        # (lazily) recomputed from it at read time — exact even when a
-        # caught-up checkpoint meant this run wrote no batch at all;
-        # the per-batch materialized dir remains for external readers.
-        if self.projection_mode == "incremental":
-            return self.spark.read.parquet(self.promises_dir)
-        return transforms.project_promises(self.read_log())
+        """The payment_promises projection as of the last folded batch."""
+        return self.spark.read.parquet(self.promises_dir)
 
     def bills(self) -> DataFrame:
-        # incremental mode: the folded state table is the source of
-        # truth and the bill view is a cheap projection over it;
-        # recompute mode derives bills from the log (see promises()).
-        if self.projection_mode == "incremental":
-            return transforms.bills_from_state(
-                self.spark.read.parquet(self.bills_state_dir))
-        return transforms.project_bills(self.read_log())
+        """The member_bills projection, finalized from the folded bill
+        state."""
+        return transforms.bills_from_state(
+            self.spark.read.parquet(self.bills_state_dir))

@@ -89,8 +89,8 @@ def project_promises(events: DataFrame) -> DataFrame:
 #: bills partial-aggregate columns and their merge combiners. Every
 #: combiner is associative, commutative, AND idempotent (max/min), so
 #: partial states fold in any grouping/order and re-folding a replayed
-#: batch is a no-op — this is what makes the incremental projection
-#: mode exactly equal to the full recompute (tests/test_bnpl_pipeline).
+#: batch is a no-op — this is what makes the pipeline's per-batch fold
+#: equal to project_bills over the whole log (tests/test_bnpl_pipeline).
 _BILLS_COMBINE = {
     "promise_id": F.max, "user_id": F.max, "create_amount": F.max,
     "any_amount": F.max, "issued_date": F.max, "paid_date": F.max,

@@ -2,15 +2,18 @@
 steps A/B/C as a deterministic event sequence, plus the failure modes
 the reference gets wrong — duplicate delivery (v1), payment-before-bill
 reordering (v2), unpaid second user (v3) — and streaming parity with
-restart recovery (the consumer/consumer.go:64 fix)."""
+restart recovery (the consumer/consumer.go:64 fix), and a crash at
+every filesystem step of the sinks' directory swaps."""
 
 from __future__ import annotations
 
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from event_streaming_bnpl_demo_spark.streaming import transforms
 from event_streaming_bnpl_demo_spark.streaming.pipeline import BnplPipeline
 
 T0 = "2026-01-01T00:00:00.000Z"
@@ -63,11 +66,26 @@ def assert_golden_state(pipe: BnplPipeline):
     assert b["promise_id"] == "pr-001"
 
 
+def _rows(df) -> list[tuple]:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def assert_matches_log(pipe: BnplPipeline):
+    """Both folded projections equal the batch oracle — transforms'
+    project_promises / project_bills over the whole archived log — in
+    every column."""
+    log = pipe.read_log()
+    for got, want in ((pipe.promises(), transforms.project_promises(log)),
+                      (pipe.bills(), transforms.project_bills(log))):
+        assert got.columns == want.columns
+        assert _rows(got) == _rows(want)
+
+
 def test_batch_replay_golden(spark, tmp_path):
     in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
     write_events(in_dir, GOLDEN + EXTRA_USER)
     pipe = BnplPipeline(spark, in_dir, out_dir)
-    pipe.replay_batch()
+    pipe.run_stream(available_now=True)
     assert_golden_state(pipe)
     # v3: second user's bill stays unpaid, paid_date NULL
     b2 = [r for r in pipe.bills().collect() if r["id"] == "b-002"][0]
@@ -80,22 +98,9 @@ def test_duplicate_delivery_idempotent(spark, tmp_path):
     in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
     write_events(in_dir, GOLDEN + GOLDEN)
     pipe = BnplPipeline(spark, in_dir, out_dir)
-    pipe.replay_batch()
+    pipe.run_stream(available_now=True)
     assert_golden_state(pipe)
     assert pipe.promises().filter("id = 'pr-001'").count() == 1
-    assert pipe.bills().filter("id = 'b-001'").count() == 1
-
-
-def test_replay_parity_no_cascade(spark, tmp_path):
-    """derive_cascade=False: replaying a log that already contains the
-    cascaded promise event yields EXACTLY the reference's MySQL state —
-    one promise row (the explicit pr-001), no derived twin."""
-    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    write_events(in_dir, GOLDEN)
-    pipe = BnplPipeline(spark, in_dir, out_dir, derive_cascade=False)
-    pipe.replay_batch()
-    promises = pipe.promises().collect()
-    assert [r["id"] for r in promises] == ["pr-001"]
     assert pipe.bills().filter("id = 'b-001'").count() == 1
 
 
@@ -105,18 +110,37 @@ def test_payment_before_bill_converges(spark, tmp_path):
     in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
     write_events(in_dir, list(reversed(GOLDEN)))
     pipe = BnplPipeline(spark, in_dir, out_dir)
-    pipe.replay_batch()
+    pipe.run_stream(available_now=True)
     assert_golden_state(pipe)
 
 
 def test_streaming_matches_batch(spark, tmp_path):
-    """The same transforms under readStream + checkpoint produce the
-    same final projections as batch replay."""
+    """One event per file makes one micro-batch per event: folding them
+    one at a time gives the projections a batch pass over the log
+    gives."""
     in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    write_events(in_dir, GOLDEN)
+    for i, e in enumerate(GOLDEN):
+        write_events(in_dir, [e], f"e{i}.jsonl")
     pipe = BnplPipeline(spark, in_dir, out_dir)
     pipe.run_stream(available_now=True)
     assert_golden_state(pipe)
+    assert_matches_log(pipe)
+
+
+def test_continuous_run_returns_stoppable_query(spark, tmp_path):
+    """``run_stream(available_now=False)`` hands back the running query:
+    the caller can wait for a batch, read the projections, and stop it."""
+    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    write_events(in_dir, GOLDEN)
+    pipe = BnplPipeline(spark, in_dir, out_dir)
+    q = pipe.run_stream(available_now=False)
+    try:
+        assert q.isActive
+        q.processAllAvailable()
+        assert_golden_state(pipe)
+    finally:
+        q.stop()
+    assert not q.isActive
 
 
 def test_streaming_restart_no_loss(spark, tmp_path):
@@ -137,52 +161,136 @@ def test_streaming_restart_no_loss(spark, tmp_path):
     assert pipe2.read_log().count() == 5
 
 
-def _final_state(pipe: BnplPipeline):
-    promises = sorted(
-        (r["id"], r["order_id"], r["user_id"], r["amount"],
-         str(r["due_date"]), r["payment_mode"])
-        for r in pipe.promises().collect())
-    bills = sorted(
-        (r["id"], r["promise_id"], r["user_id"], r["amount"], r["status"],
-         str(r["issued_date"]), str(r["paid_date"]))
-        for r in pipe.bills().collect())
-    return promises, bills
-
-
 def test_incremental_equals_recompute(spark, tmp_path):
-    """The incremental (fold-partial-aggregates) projection mode must
-    produce exactly the recompute-from-log state — including under
-    duplicate delivery, reordering, and a checkpointed restart — since
-    every combiner is associative, commutative, and idempotent."""
+    """Law: the per-batch fold equals the batch oracle (the projections
+    recomputed from the whole archived log) under reordered delivery,
+    duplicate delivery and a checkpointed restart — every combiner is
+    associative, commutative and idempotent."""
     events = list(reversed(GOLDEN)) + EXTRA_USER + GOLDEN  # reorder + dupes
-    in_dir = str(tmp_path / "in")
+    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
     write_events(in_dir, events[:4], "a.jsonl")
     write_events(in_dir, events[4:], "b.jsonl")
+    pipe = BnplPipeline(spark, in_dir, out_dir)
+    pipe.run_stream(available_now=True)
+    assert_matches_log(pipe)
+    assert_golden_state(pipe)
 
-    pipes = {}
-    for mode in ("recompute", "incremental"):
-        out = str(tmp_path / f"out_{mode}")
-        pipe = BnplPipeline(spark, in_dir, out, projection_mode=mode)
-        pipe.run_stream(available_now=True)
-        pipes[mode] = pipe
-    assert _final_state(pipes["incremental"]) == _final_state(pipes["recompute"])
-    assert_golden_state(pipes["incremental"])
-
-    # restart: late third file, resume both from their checkpoints
+    # restart: late third file, resume from the checkpoint
     write_events(in_dir, [{
         "event_type": "MemberBillCreatedEvent", "bill_id": "b-003",
         "promise_id": "pr-001", "user_id": "u01", "amount": 250,
         "issued_date": "2026-01-05", "ingest_ts": "2026-01-05T00:00:00.000Z",
     }], "c.jsonl")
-    for mode in ("recompute", "incremental"):
-        pipe = BnplPipeline(spark, in_dir, str(tmp_path / f"out_{mode}"),
-                            projection_mode=mode)
-        pipe.run_stream(available_now=True)
-        pipes[mode] = pipe
-    assert _final_state(pipes["incremental"]) == _final_state(pipes["recompute"])
-    b3 = [r for r in pipes["incremental"].bills().collect()
-          if r["id"] == "b-003"][0]
+    pipe = BnplPipeline(spark, in_dir, out_dir)
+    pipe.run_stream(available_now=True)
+    assert_matches_log(pipe)
+    b3 = [r for r in pipe.bills().collect() if r["id"] == "b-003"][0]
     assert b3["status"] == "unpaid" and b3["amount"] == 250
+
+
+#: the filesystem steps of one directory swap: writing ``<dir>.tmp``,
+#: removing the old ``<dir>``, renaming ``.tmp`` into place
+CRASH_POINTS = ("write_tmp", "after_rmtree", "at_rename")
+
+
+def _inject_crash(monkeypatch, target: str, point: str) -> None:
+    """Make the next swap of ``target`` fail once at ``point``. A crash
+    mid-write leaves ``.tmp`` without its ``_SUCCESS`` marker and with a
+    truncated data file."""
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    tmp = target + ".tmp"
+    fired: list[bool] = []
+
+    def crash(what: str):
+        fired.append(True)
+        raise OSError(f"injected crash {what} {target}")
+
+    if point == "write_tmp":
+        real_parquet = DataFrameWriter.parquet
+
+        def parquet(self, path, *a, **k):
+            real_parquet(self, path, *a, **k)
+            if path == tmp and not fired:
+                os.remove(os.path.join(tmp, "_SUCCESS"))
+                for root, _, files in os.walk(tmp):
+                    for f in files:
+                        if f.startswith("part-"):
+                            full = os.path.join(root, f)
+                            os.truncate(full, os.path.getsize(full) // 2)
+                crash("writing")
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    elif point == "after_rmtree":
+        real_rmtree = shutil.rmtree
+
+        def rmtree(path, *a, **k):
+            real_rmtree(path, *a, **k)
+            if path == target and not fired:
+                crash("after removing")
+        monkeypatch.setattr(shutil, "rmtree", rmtree)
+    else:
+        real_rename = os.rename
+
+        def rename(src, dst, *a, **k):
+            if src == tmp and not fired:
+                crash("renaming into")
+            real_rename(src, dst, *a, **k)
+        monkeypatch.setattr(os, "rename", rename)
+
+
+@pytest.mark.parametrize("point", CRASH_POINTS)
+@pytest.mark.parametrize("sink", ["promises_dir", "bills_state_dir"])
+def test_fold_crash_then_restart_matches_log(spark, tmp_path, monkeypatch,
+                                             sink, point):
+    """Crash matrix for the folded projections: a batch that dies at any
+    step of a sink's directory swap is replayed from the checkpoint by a
+    new pipeline, and the projections still equal the batch oracle. The
+    replay must fold into the state from before the crash — folding into
+    empty state would drop b-001's promise_id and issued_date, which only
+    the first batch carried."""
+    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    write_events(in_dir, GOLDEN[:3], "a.jsonl")
+    pipe = BnplPipeline(spark, in_dir, out_dir)
+    pipe.run_stream(available_now=True)
+
+    _inject_crash(monkeypatch, getattr(pipe, sink), point)
+    write_events(in_dir, GOLDEN[3:] + EXTRA_USER, "b.jsonl")
+    with pytest.raises(Exception, match="injected crash"):
+        pipe.run_stream(available_now=True)
+    monkeypatch.undo()
+
+    pipe = BnplPipeline(spark, in_dir, out_dir)
+    pipe.run_stream(available_now=True)
+    assert_matches_log(pipe)
+    assert_golden_state(pipe)
+
+
+@pytest.mark.parametrize("point", CRASH_POINTS)
+def test_compaction_crash_then_restart_keeps_log(spark, tmp_path,
+                                                 monkeypatch, point):
+    """Crash matrix for ``compact_log``: the log survives a crash at any
+    step of its swap, and the pipeline resumes on it."""
+    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    write_events(in_dir, GOLDEN[:2], "a.jsonl")
+    write_events(in_dir, GOLDEN[2:], "b.jsonl")
+    pipe = BnplPipeline(spark, in_dir, out_dir)
+    pipe.run_stream(available_now=True)
+    before = _rows(pipe.read_log())
+
+    _inject_crash(monkeypatch, pipe.log_dir, point)
+    with pytest.raises(OSError, match="injected crash"):
+        pipe.compact_log()
+    monkeypatch.undo()
+
+    pipe = BnplPipeline(spark, in_dir, out_dir)
+    assert _rows(pipe.read_log()) == before
+    write_events(in_dir, EXTRA_USER, "c.jsonl")
+    pipe.run_stream(available_now=True)
+    assert pipe.read_log().count() == len(before) + 1
+    assert_matches_log(pipe)
+    assert_golden_state(pipe)
 
 
 def _purchase(uid: str, amount: int, ts: str) -> dict:

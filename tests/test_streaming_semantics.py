@@ -542,6 +542,12 @@ def test_stream_asof_bucketed_equals_batch_asof_randomized(spark, tmp_path):
     emitted = _run_asof_stream(
         spark, tmp_path, [rows[0:100], rows[100:200], rows[200:300]],
         "sasof_rand")
+    # the invariants the catalog's max_by readback relies on: max_by
+    # skips a null version, and a repeated (purchase, version) would
+    # make its pick arbitrary
+    assert emitted.filter(F.col("version").isNull()).count() == 0
+    assert (emitted.select("purchase_id", "version").distinct().count()
+            == emitted.count())
 
     ev = spark.createDataFrame(
         rows, "user_id long, event_id long, event_type string, ts_us long")
