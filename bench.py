@@ -311,9 +311,10 @@ def stream_throughput(spark: SparkSession, sf_dir: str,
     """End-to-end BNPL pipeline ingest rate: the sf events table mapped
     to purchase envelopes (inputs grounded in the driver testdata),
     streamed file-source -> parse -> archive -> cascade -> projections
-    under availableNow in 4 micro-batches. Three runs, best reported
-    (the first pays pipeline codegen — same min-of-N policy as the
-    headline queries; both walls are in the dict). Each run gets a
+    under availableNow, its 4 files folded as one micro-batch. Three
+    runs, best reported (the first pays pipeline codegen — same
+    min-of-N policy as the headline queries; both walls are in the
+    dict). Each run gets a
     fresh out_dir/checkpoint, so the per-query state-store sizing
     applies (session.scoped_shuffle_partitions — measured 56k -> 68k
     events/s at sf0.1 going 32 -> 8 partitions). The reference's

@@ -39,6 +39,7 @@ import uuid
 from datetime import date, datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 from .streaming import transforms
 from .streaming.pipeline import BnplPipeline
@@ -57,7 +58,9 @@ class BnplEngine:
     # -- command side -----------------------------------------------------
     def _emit(self, event: dict) -> None:
         """Append one event (durability point; producer/producer.go:16-25
-        analog). One file per event keeps micro-batch replay exact.
+        analog). The file is the atomic unit of publication; batching is
+        the source's concern, and the next ``process()`` folds every file
+        emitted since the last one as a single micro-batch.
 
         Published atomically: the line is written under a dot-prefixed
         name, which Spark's file listing skips, then renamed into place.
@@ -111,11 +114,13 @@ class BnplEngine:
                     "paid_date": date.today().isoformat()})
 
     # -- processing -------------------------------------------------------
-    def process(self) -> None:
+    def process(self) -> StreamingQuery:
         """Advance the pipeline over everything emitted so far (the
         consumer poll loop, consumer/consumer.go:75-96, as one
-        checkpointed availableNow pass)."""
-        self.pipeline.run_stream(available_now=True)
+        checkpointed availableNow pass, folded as one micro-batch) and
+        return the finished query, whose ``recentProgress`` records what
+        the pass did."""
+        return self.pipeline.run_stream(available_now=True)
 
     # -- query side -------------------------------------------------------
     def user_status(self, user_id: str) -> tuple[DataFrame, DataFrame]:

@@ -41,8 +41,7 @@ def _parse_envelope(raw: DataFrame) -> DataFrame:
 
 def read_event_batch(spark: SparkSession, path: str) -> DataFrame:
     """Batch replay of a JSON-lines event log (text -> envelope)."""
-    raw = spark.read.text(path).withColumnRenamed("value", "value")
-    return _parse_envelope(raw)
+    return _parse_envelope(spark.read.text(path))
 
 
 def kafka_source_options(bootstrap_servers: str, topic: str,
@@ -103,11 +102,17 @@ def read_kafka_stream(spark: SparkSession, bootstrap_servers: str,
 
 
 def read_event_stream(spark: SparkSession, path: str,
-                      max_files_per_trigger: int | None = 1) -> DataFrame:
+                      max_files_per_trigger: int | None = None) -> DataFrame:
     """Streaming read of a JSON-lines event directory.
 
-    ``maxFilesPerTrigger`` is the backpressure knob the reference lacked
-    (unbounded ``GetRecords``, consumer/consumer.go:76-78).
+    By default a trigger admits every file present when it fires, as
+    the reference's poll drains whatever ``GetRecords`` returns
+    (consumer/consumer.go:75-96): an ``availableNow`` pass folds its
+    whole backlog as one micro-batch, paying the per-batch WAL commit,
+    listing and sink writes once. ``max_files_per_trigger`` sets Spark's
+    ``maxFilesPerTrigger``, the backpressure bound the reference lacked
+    (unbounded ``GetRecords``, consumer/consumer.go:76-78), for a
+    deployment whose backlog can outgrow one batch.
     """
     reader = spark.readStream.format("text")
     if max_files_per_trigger is not None:

@@ -106,12 +106,15 @@ class BnplPipeline:
 
     def run_stream(self, available_now: bool = True) -> StreamingQuery:
         """Process everything currently in in_dir through the streaming
-        engine (availableNow trigger: real micro-batches + checkpoint,
-        terminates when caught up — the test/CI mode) and return the
-        finished query. Pass ``available_now=False`` for a continuous
-        1 s-trigger service matching the reference's poll cadence
-        (BASELINE.md); the running query is returned for the caller to
-        inspect and ``stop()``."""
+        engine (availableNow trigger + checkpoint, terminates when caught
+        up — the test/CI mode) and return the finished query. Every file
+        present when the pass starts folds as ONE micro-batch: one WAL
+        commit, one persisted fan-out and one swap per projection, however
+        many files arrived; ``recentProgress`` shows the batch. Pass
+        ``available_now=False`` for a continuous 1 s-trigger service
+        matching the reference's poll cadence (BASELINE.md), each trigger
+        draining what arrived since the last; the running query is
+        returned for the caller to inspect and ``stop()``."""
         stream = read_event_stream(self.spark, self.in_dir)
         writer = (
             stream.writeStream
@@ -142,12 +145,17 @@ class BnplPipeline:
         # and share no ordering, so they run as CONCURRENT Spark jobs:
         # per-batch latency is the max of the three job chains instead
         # of their sum. The shared inputs are persisted for the fan-out:
-        # unpersisted, each job re-ran the source read, JSON parse and
-        # cascade derivation, and both folds re-ran the content-hash
-        # dedup. Both handles unpersist before the batch returns.
+        # unpersisted, each job re-ran the source read and JSON parse,
+        # and both folds re-ran the cascade derivation and content-hash
+        # dedup. The parsed source is the cached handle, not its
+        # flattened union: each branch of the union scans its input, so
+        # filling a cache of the union would read and parse every file
+        # twice and make numInputRows count each line twice. Both
+        # handles unpersist before the batch returns.
         from concurrent.futures import ThreadPoolExecutor
 
-        events = self._flatten(micro_batch).persist()
+        source = micro_batch.persist()
+        events = self._flatten(source)
         batch = events.dropDuplicates(["event_data"]).persist()
         try:
             with ThreadPoolExecutor(max_workers=3) as ex:
@@ -158,7 +166,7 @@ class BnplPipeline:
                     f.result()
         finally:
             batch.unpersist()
-            events.unpersist()
+            source.unpersist()
 
     def _archive(self, events: DataFrame) -> None:
         # R5/R6: append archive, partitioned by type

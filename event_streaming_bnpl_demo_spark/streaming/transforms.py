@@ -66,24 +66,31 @@ def derive_promises(events: DataFrame, fidelity_3500: bool = False) -> DataFrame
     )
 
 
+def _first_seen_promise(rows: DataFrame) -> DataFrame:
+    """Keep one projected promise row per ``id``: the earliest
+    ``created_at``, ties broken by the remaining columns in order. Rows
+    stamped in one batch share a ``created_at``, so without the tie
+    break the winner would depend on how events fell into batches."""
+    order = ["created_at"] + [c for c in rows.columns
+                              if c not in ("id", "created_at")]
+    w = Window.partitionBy("id").orderBy(*order)
+    return (rows.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1).drop("rn"))
+
+
 def project_promises(events: DataFrame) -> DataFrame:
     """payment_promises projection (readme:73-81): one row per promise
     event; first-seen wins on redelivery (dedup on natural key)."""
     promises = events.filter(F.col("event_type") == "PaymentPromiseCreatedEvent")
-    w = Window.partitionBy("promise_id").orderBy("ingest_ts")
-    return (
-        promises.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("promise_id").alias("id"),
-            "order_id",
-            "user_id",
-            F.col("amount").cast("long").alias("amount"),
-            F.to_date("due_date").alias("due_date"),
-            "payment_mode",
-            F.col("ingest_ts").alias("created_at"),
-        )
-    )
+    return _first_seen_promise(promises.select(
+        F.col("promise_id").alias("id"),
+        "order_id",
+        "user_id",
+        F.col("amount").cast("long").alias("amount"),
+        F.to_date("due_date").alias("due_date"),
+        "payment_mode",
+        F.col("ingest_ts").alias("created_at"),
+    ))
 
 
 #: bills partial-aggregate columns and their merge combiners. Every
@@ -152,12 +159,9 @@ def project_bills(events: DataFrame) -> DataFrame:
 
 def merge_promises(existing: DataFrame, delta: DataFrame) -> DataFrame:
     """Fold new first-seen promise rows into the accumulated projection:
-    argmin over created_at is associative, so re-picking the earliest
+    argmin over a total order is associative, so re-picking the first
     row per id over (existing ∪ delta) equals the full recompute."""
-    merged = existing.unionByName(delta)
-    w = Window.partitionBy("id").orderBy("created_at")
-    return (merged.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1).drop("rn"))
+    return _first_seen_promise(existing.unionByName(delta))
 
 
 def user_status(promises: DataFrame, bills: DataFrame, user_id: str

@@ -114,15 +114,37 @@ def test_payment_before_bill_converges(spark, tmp_path):
     assert_golden_state(pipe)
 
 
+def batch_input_rows(*queries) -> list[int]:
+    """Input rows of every micro-batch the finished queries ran that
+    read anything."""
+    return [p.numInputRows for q in queries for p in q.recentProgress
+            if p.numInputRows > 0]
+
+
 def test_streaming_matches_batch(spark, tmp_path):
-    """One event per file makes one micro-batch per event: folding them
+    """One pass per event makes one micro-batch per event: folding them
     one at a time gives the projections a batch pass over the log
     gives."""
     in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    pipe = BnplPipeline(spark, in_dir, out_dir)
+    queries = []
     for i, e in enumerate(GOLDEN):
         write_events(in_dir, [e], f"e{i}.jsonl")
+        queries.append(pipe.run_stream(available_now=True))
+    assert batch_input_rows(*queries) == [1] * len(GOLDEN)
+    assert_golden_state(pipe)
+    assert_matches_log(pipe)
+
+
+def test_pass_folds_all_files_as_one_batch(spark, tmp_path):
+    """Files dropped before a pass fold as one micro-batch holding every
+    line of every file, not one batch per file."""
+    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    for i, events in enumerate((GOLDEN[:2], GOLDEN[2:], EXTRA_USER)):
+        write_events(in_dir, events, f"f{i}.jsonl")
     pipe = BnplPipeline(spark, in_dir, out_dir)
-    pipe.run_stream(available_now=True)
+    q = pipe.run_stream(available_now=True)
+    assert batch_input_rows(q) == [len(GOLDEN + EXTRA_USER)]
     assert_golden_state(pipe)
     assert_matches_log(pipe)
 
@@ -304,12 +326,14 @@ def test_compact_log_preserves_rows(spark, tmp_path):
     few, preserves the exact event multiset, and streaming appends keep
     working afterwards (the source checkpoint is untouched)."""
     in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    for f in range(3):   # 3 files -> 3 micro-batches of small writes
+    pipe = BnplPipeline(spark, in_dir, out_dir)
+    queries = []
+    for f in range(3):   # 3 passes -> 3 micro-batches of small writes
         write_events(in_dir, [
             _purchase(f"u{f}-{i}", 100 + i, ts=f"2026-01-01T00:0{f}:{i:02d}Z")
             for i in range(5)], name=f"f{f}.jsonl")
-    pipe = BnplPipeline(spark, in_dir, out_dir)
-    pipe.run_stream(available_now=True)
+        queries.append(pipe.run_stream(available_now=True))
+    assert batch_input_rows(*queries) == [5, 5, 5]
     before = sorted(r["event_data"]
                     for r in pipe.read_log().select("event_data").collect())
 
@@ -327,6 +351,33 @@ def test_compact_log_preserves_rows(spark, tmp_path):
     assert final.filter(F.col("user_id") == "u9").count() > 0
     # +2: the new purchase archives itself AND its flattened derived promise
     assert final.select("event_data").distinct().count() == len(before) + 2
+
+
+@pytest.mark.parametrize("delivery", ["one_file", "two_passes",
+                                      "two_passes_reversed"])
+def test_promise_tie_on_timestamp_is_deterministic(spark, tmp_path,
+                                                   delivery):
+    """Two purchases of one order stamped with the same ``ingest_ts``
+    derive two promises with one id and one ``created_at``. However they
+    are delivered, the same row wins, and it is the one the batch oracle
+    picks over the archived log."""
+    ts = "2026-01-01T00:00:00.000Z"
+    first, second = _purchase("u1", 100, ts), _purchase("u1", 200, ts)
+    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    pipe = BnplPipeline(spark, in_dir, out_dir)
+    if delivery == "one_file":
+        write_events(in_dir, [first, second])
+        pipe.run_stream(available_now=True)
+    else:
+        pair = [first, second]
+        if delivery == "two_passes_reversed":
+            pair.reverse()
+        for i, e in enumerate(pair):
+            write_events(in_dir, [e], f"e{i}.jsonl")
+            pipe.run_stream(available_now=True)
+    rows = pipe.promises().collect()
+    assert len(rows) == 1 and rows[0]["amount"] == 100
+    assert_matches_log(pipe)
 
 
 def test_observe_quality_metrics(spark, tmp_path):

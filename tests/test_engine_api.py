@@ -45,6 +45,24 @@ def test_readme_flow_a_b_c(spark, tmp_path):
     assert pr_other.count() == 0 and bl_other.count() == 0
 
 
+def test_process_folds_a_burst_as_one_batch(spark, tmp_path):
+    """A purchase, its bill and the payment emitted before one
+    ``process()`` fold as one micro-batch of three input rows, reported
+    by the query it returns, and all three are visible afterwards."""
+    eng = BnplEngine(spark, str(tmp_path))
+    eng.purchase("u7", 900)
+    bill_id = eng.create_bill("pr-u7", "u7", 900)
+    eng.payment_completed(bill_id, "u7", 900)
+    q = eng.process()
+    assert [p.numInputRows for p in q.recentProgress
+            if p.numInputRows > 0] == [3]
+    promises, bills = eng.user_status("u7")
+    p = promises.collect()
+    assert len(p) == 1 and p[0]["amount"] == 900
+    b = bills.collect()
+    assert len(b) == 1 and b[0]["id"] == bill_id
+    assert b[0]["status"] == "paid" and b[0]["paid_date"] is not None
+
 
 class _TornWriter:
     """File handle whose first write lands half its data, then fails —
