@@ -43,15 +43,13 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 _DATA, _LOG = "data", "_log"
+_EMPTY = {"version": -1, "files": [], "delete_files": [], "delete_key": []}
 
 
-def _stats_of(path: str, cols: tuple[str, ...]) -> dict:
-    """Per-file [min, max] for ``cols`` from the parquet FOOTER (no
-    data scan). Dates/timestamps serialize as ISO strings — they
+def _stats_of(md, cols: tuple[str, ...]) -> dict:
+    """Per-file [min, max] for ``cols`` from a parquet FOOTER's metadata
+    (no data scan). Dates/timestamps serialize as ISO strings — they
     compare lexicographically consistent with their natural order."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
     names = {md.schema.column(i).name: i for i in range(md.num_columns)}
     out: dict[str, list] = {}
     for col in cols:
@@ -106,6 +104,13 @@ class LakeTable:
         with open(path) as fh:
             return json.load(fh)
 
+    def _head(self) -> dict:
+        """The latest manifest; on a table with no commit yet, an empty
+        one at version -1, so every write commits ``version + 1`` and
+        the first commit of any kind is v0."""
+        vs = self.versions()
+        return self.manifest(vs[-1]) if vs else _EMPTY
+
     def _commit(self, m: dict) -> int:
         v = m["version"]
         path = os.path.join(self.root, _LOG, f"v{v:05d}.json")
@@ -117,9 +122,11 @@ class LakeTable:
 
     # -- writes ------------------------------------------------------------
 
-    def _write_files(self, df: DataFrame, version: int, n_files: int,
+    def _write_files(self, df: DataFrame, version: int,
+                     n_files: int | None = None,
                      cluster_by: list[str] | None = None) -> list[dict]:
-        """Materialize ``df`` as ``n_files`` parquet files named into
+        """Materialize ``df`` as ``n_files`` parquet files (or as many as
+        the plan has partitions, when ``n_files`` is None) named into
         data/ and return their manifest entries (path, rows, stats)."""
         import pyarrow.parquet as pq
 
@@ -127,7 +134,7 @@ class LakeTable:
         if cluster_by:
             df = (df.repartitionByRange(n_files, *cluster_by)
                   .sortWithinPartitions(*cluster_by))
-        else:
+        elif n_files is not None:
             df = df.repartition(n_files)
         df.write.mode("overwrite").parquet(tmp)
         entries = []
@@ -136,22 +143,31 @@ class LakeTable:
             name = f"v{version:05d}-{i:03d}.parquet"
             dst = os.path.join(self.root, _DATA, name)
             os.rename(os.path.join(tmp, part), dst)
-            entries.append({
-                "path": f"{_DATA}/{name}",
-                "rows": pq.ParquetFile(dst).metadata.num_rows,
-                "stats": _stats_of(dst, self.stat_cols),
-            })
+            md = pq.read_metadata(dst)
+            entries.append({"path": f"{_DATA}/{name}", "rows": md.num_rows,
+                            "stats": _stats_of(md, self.stat_cols)})
         shutil.rmtree(tmp, ignore_errors=True)
         return entries
 
-    def create(self, df: DataFrame, n_files: int = 4) -> int:
-        return self._commit({"version": 0, "op": "create",
-                             "files": self._write_files(df, 0, n_files),
-                             "delete_files": [], "delete_key": []})
+    def rewrite(self, df: DataFrame, n_files: int | None = None,
+                op: str = "rewrite",
+                cluster_by: list[str] | None = None) -> int:
+        """Commit ``df`` as the table's whole content: new files, one new
+        manifest. Readers of older snapshots keep their own files, and a
+        write that dies before its manifest lands leaves only files no
+        manifest lists, which :meth:`expire` deletes."""
+        v = self._head()["version"] + 1
+        return self._commit({
+            "version": v, "op": op,
+            "files": self._write_files(df, v, n_files, cluster_by),
+            "delete_files": [], "delete_key": []})
 
-    def append(self, df: DataFrame, n_files: int = 4) -> int:
-        v = self.latest() + 1
-        parent = self.manifest()
+    def create(self, df: DataFrame, n_files: int | None = None) -> int:
+        return self.rewrite(df, n_files, op="create")
+
+    def append(self, df: DataFrame, n_files: int | None = None) -> int:
+        parent = self._head()
+        v = parent["version"] + 1
         return self._commit({
             "version": v, "op": "append",
             "files": parent["files"] + self._write_files(df, v, n_files),
@@ -163,8 +179,8 @@ class LakeTable:
         readers anti-join it. No data file is rewritten — the 100 TB
         delete path (a copy-on-write delete would rewrite every file a
         key touches)."""
-        v = self.latest() + 1
-        parent = self.manifest()
+        parent = self._head()
+        v = parent["version"] + 1
         tmp = os.path.join(self.root, f"_tmp-del-v{v:05d}")
         keys.select(*key_cols).distinct().coalesce(1) \
             .write.mode("overwrite").parquet(tmp)
@@ -185,23 +201,15 @@ class LakeTable:
         ``n_files`` — the small-file maintenance pass that keeps a
         streaming sink's fragmented output queryable. Data-invariant
         by construction; older snapshots keep their own files."""
-        v = self.latest() + 1
-        return self._commit({
-            "version": v, "op": "compact",
-            "files": self._write_files(self.read(), v, n_files),
-            "delete_files": [], "delete_key": []})
+        return self.rewrite(self.read(), n_files, op="compact")
 
     def cluster(self, by: list[str], n_files: int) -> int:
         """Clustering rewrite (Z-order-lite): range-partition by the
         cluster keys and sort within files, so per-file min/max stats
         become DISJOINT along ``by`` and a range predicate prunes to
         the few files that can match."""
-        v = self.latest() + 1
-        return self._commit({
-            "version": v, "op": "cluster",
-            "files": self._write_files(self.read(), v, n_files,
-                                       cluster_by=by),
-            "delete_files": [], "delete_key": []})
+        return self.rewrite(self.read(), n_files, op="cluster",
+                            cluster_by=by)
 
     # -- reads -------------------------------------------------------------
 
@@ -282,8 +290,11 @@ class LakeTable:
 
     def expire(self, keep_last: int) -> dict:
         """Retention/VACUUM: drop all but the last ``keep_last``
-        snapshots and physically delete data files no surviving
-        manifest references. Returns counts for auditability."""
+        snapshots and physically delete every data file no surviving
+        manifest references, with the scratch ``_tmp-*`` output of any
+        write that never committed. Manifests go first, so a crash at
+        any step leaves no retained snapshot listing a deleted file.
+        Returns counts for auditability."""
         vs = self.versions()
         drop, keep = vs[:-keep_last], vs[-keep_last:]
         live: set[str] = set()
@@ -291,14 +302,16 @@ class LakeTable:
             m = self.manifest(v)
             live |= {f["path"] for f in m["files"]}
             live |= set(m["delete_files"])
-        removed = 0
-        for name in sorted(os.listdir(os.path.join(self.root, _DATA))):
-            rel = f"{_DATA}/{name}"
-            if rel not in live:
-                os.remove(os.path.join(self.root, _DATA, name))
-                removed += 1
         for v in drop:
             os.remove(os.path.join(self.root, _LOG, f"v{v:05d}.json"))
+        removed = 0
+        for name in sorted(os.listdir(os.path.join(self.root, _DATA))):
+            if f"{_DATA}/{name}" not in live:
+                os.remove(os.path.join(self.root, _DATA, name))
+                removed += 1
+        for name in os.listdir(self.root):
+            if name.startswith("_tmp-"):
+                shutil.rmtree(os.path.join(self.root, name))
         return {"expired_snapshots": len(drop), "files_removed": removed,
                 "live_files": len(live)}
 

@@ -13,9 +13,10 @@ Structured Streaming replaces all of that machinery:
   envelope StructType (§1 of SURVEY.md), absent fields NULL.
 
 Sources are file-based (JSON-lines / parquet directories) because no
-broker exists in this environment; the read is format-parameterized so a
-Kafka source (``format("kafka")`` + identical ``from_json`` parse) drops
-in without touching downstream transforms.
+broker exists in this environment. A Kafka source drops in without
+touching downstream transforms: ``spark.readStream.format("kafka")``
+with ``kafka_source_options``, then ``kafka_records_to_envelope`` for
+the identical ``from_json`` parse.
 """
 
 from __future__ import annotations
@@ -80,25 +81,6 @@ def kafka_records_to_envelope(raw: DataFrame) -> DataFrame:
     """
     return _parse_envelope(
         raw.select(F.col("value").cast("string").alias("value")))
-
-
-def read_kafka_stream(spark: SparkSession, bootstrap_servers: str,
-                      topic: str, starting_offsets: str = "earliest",
-                      max_offsets_per_trigger: int | None = None) -> DataFrame:
-    """Kafka event source (SURVEY §2.2 'Kafka source'): identical
-    downstream envelope to the file source — swap the reader, keep every
-    transform. Requires the spark-sql-kafka package jar at submit time;
-    no broker exists in this environment, so ``load()`` itself is
-    exercised only by construction — but the reader options
-    (``kafka_source_options``) and the post-load parse
-    (``kafka_records_to_envelope``) are both pinned by contract tests.
-    """
-    reader = spark.readStream.format("kafka")
-    for k, v in kafka_source_options(
-            bootstrap_servers, topic, starting_offsets,
-            max_offsets_per_trigger).items():
-        reader = reader.option(k, v)
-    return kafka_records_to_envelope(reader.load())
 
 
 def read_event_stream(spark: SparkSession, path: str,

@@ -5,9 +5,7 @@ The reference (consumer/consumer.go): poll Kinesis every 1 s -> archive
 stream. Here: ONE streaming read, checkpointed (fixes the Latest-
 iterator restart loss, consumer/consumer.go:64), with:
 
-- the event-log archive as an append parquet sink partitioned by
-  event_type (R5 + R6's router as a partition column — queries on one
-  type prune partitions);
+- the event-log archive as an append-only table (R5);
 - the purchase→promise cascade FLATTENED into the same micro-batch
   (SURVEY §4.2: a planning decision in our engine, not a second
   streaming hop) — promises are visible one poll-cycle earlier than
@@ -18,69 +16,47 @@ iterator restart loss, consumer/consumer.go:64), with:
   associative, commutative and idempotent, so replayed batches and
   duplicate deliveries fold to the state a recompute over the whole
   log would give (tests/test_bnpl_pipeline.py checks this against
-  transforms.project_*). At 100 TB the same fold becomes a keyed MERGE
-  into a Delta/Iceberg table; the transform layer is unchanged.
+  transforms.project_*), and commits the merged state as a whole-table
+  rewrite. At 100 TB the same fold becomes a keyed MERGE that rewrites
+  only the touched files; the transform layer is unchanged.
 
 Delivery: file source + checkpoint gives exactly-once source progress;
 the archive id is a content hash and projections dedup on natural keys,
 so end-to-end the pipeline is idempotent under at-least-once delivery —
 the two failure modes FIXTURES.md A3 v1/v2 test. A fold is only
-idempotent if its prior state survives a crash, so every directory the
-pipeline rewrites is published by :func:`_swap_write` and repaired by
-:func:`_recover_swap` when a pipeline is constructed.
+idempotent if its prior state survives a crash, so every table the
+pipeline writes is a :class:`LakeTable` and each write publishes by one
+atomic manifest commit: a crash before the commit leaves the prior
+snapshot intact and only files no manifest lists, which
+:meth:`LakeTable.expire` deletes.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators.laketable import LakeTable
 from ..sources.events import read_event_stream
 from . import transforms
 
-
-def _swap_write(df: DataFrame, target: str,
-                partition_by: str | None = None) -> None:
-    """Overwrite a parquet dir that the plan may be reading from:
-    materialize to ``<target>.tmp``, then swap it into place. Spark
-    marks a completed write with ``_SUCCESS``, which is what
-    :func:`_recover_swap` keys on after a crash. (A lakehouse table
-    format replaces this with an atomic MERGE/commit.)"""
-    tmp = target + ".tmp"
-    writer = df.write.mode("overwrite")
-    if partition_by is not None:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(tmp)
-    if os.path.isdir(target):
-        shutil.rmtree(target)
-    os.rename(tmp, target)
-
-
-def _recover_swap(target: str) -> None:
-    """Finish or discard a :func:`_swap_write` that a crash interrupted.
-    A complete ``.tmp`` (``_SUCCESS`` present) holds the newest state,
-    possibly with ``target`` already removed, so the swap is finished;
-    an incomplete one is deleted and ``target`` stays as it was."""
-    tmp = target + ".tmp"
-    if os.path.exists(os.path.join(tmp, "_SUCCESS")):
-        if os.path.isdir(target):
-            shutil.rmtree(target)
-        os.rename(tmp, target)
-    elif os.path.isdir(tmp):
-        shutil.rmtree(tmp)
+#: snapshots each table retains: the latest, and the one before it, so a
+#: DataFrame resolved before a batch still reads after that batch commits
+_KEEP_SNAPSHOTS = 2
 
 
 class BnplPipeline:
-    """File-source streaming pipeline with parquet sinks.
+    """File-source streaming pipeline with :class:`LakeTable` sinks.
 
-    Layout under ``out_dir``: ``events_log/`` (append, partitioned by
-    event_type), ``payment_promises/`` (the folded promises projection),
+    Layout under ``out_dir``: ``events_log/`` (the append-only archive),
+    ``payment_promises/`` (the folded promises projection),
     ``_member_bills_state/`` (the folded per-bill partial aggregate,
     finalized into member_bills by :meth:`bills`), ``_checkpoint/``.
+    Readers resolve a table's latest manifest, so a DataFrame keeps
+    reading its snapshot while later batches commit.
     """
 
     def __init__(self, spark: SparkSession, in_dir: str, out_dir: str,
@@ -88,10 +64,10 @@ class BnplPipeline:
         """``projection_mode`` has the one value ``'incremental'`` and is
         accepted so callers that name it keep working.
 
-        Construction first recovers any directory swap a crash left
-        half done, so the next batch folds into the surviving state.
-        One pipeline writes an ``out_dir`` at a time: recovery would
-        delete another writer's in-progress ``.tmp``."""
+        Construction first expires each table, deleting the files of any
+        write a crash left uncommitted, so the next batch folds into the
+        last committed state. One pipeline writes an ``out_dir`` at a
+        time: expiring would delete another writer's uncommitted files."""
         if projection_mode != "incremental":
             raise ValueError(f"unknown projection_mode {projection_mode!r}")
         self.spark = spark
@@ -101,15 +77,19 @@ class BnplPipeline:
         self.promises_dir = os.path.join(out_dir, "payment_promises")
         self.bills_state_dir = os.path.join(out_dir, "_member_bills_state")
         self.checkpoint = os.path.join(out_dir, "_checkpoint")
-        for d in (self.log_dir, self.promises_dir, self.bills_state_dir):
-            _recover_swap(d)
+        self.log_table = LakeTable(spark, self.log_dir)
+        self.promises_table = LakeTable(spark, self.promises_dir)
+        self.bills_state_table = LakeTable(spark, self.bills_state_dir)
+        for t in (self.log_table, self.promises_table,
+                  self.bills_state_table):
+            t.expire(keep_last=_KEEP_SNAPSHOTS)
 
     def run_stream(self, available_now: bool = True) -> StreamingQuery:
         """Process everything currently in in_dir through the streaming
         engine (availableNow trigger + checkpoint, terminates when caught
         up — the test/CI mode) and return the finished query. Every file
         present when the pass starts folds as ONE micro-batch: one WAL
-        commit, one persisted fan-out and one swap per projection, however
+        commit, one persisted fan-out and one commit per table, however
         many files arrived; ``recentProgress`` shows the batch. Pass
         ``available_now=False`` for a continuous 1 s-trigger service
         matching the reference's poll cadence (BASELINE.md), each trigger
@@ -160,8 +140,12 @@ class BnplPipeline:
         try:
             with ThreadPoolExecutor(max_workers=3) as ex:
                 futs = [ex.submit(self._archive, events),
-                        ex.submit(self._fold_promises, batch),
-                        ex.submit(self._fold_bills_state, batch)]
+                        ex.submit(self._fold, self.promises_table,
+                                  transforms.project_promises(batch),
+                                  transforms.merge_promises),
+                        ex.submit(self._fold, self.bills_state_table,
+                                  transforms.bills_state(batch),
+                                  transforms.merge_bills_state)]
                 for f in futs:
                     f.result()
         finally:
@@ -169,33 +153,24 @@ class BnplPipeline:
             source.unpersist()
 
     def _archive(self, events: DataFrame) -> None:
-        # R5/R6: append archive, partitioned by type
-        (transforms.archive_rows(events)
-         .withColumn("event_type_part", F.col("event_type"))
-         .write.mode("append").partitionBy("event_type_part")
-         .parquet(self.log_dir))
+        # R5: append-only archive
+        self.log_table.append(transforms.archive_rows(events))
+        self.log_table.expire(keep_last=_KEEP_SNAPSHOTS)
 
-    def _fold_promises(self, batch: DataFrame) -> None:
-        delta_p = transforms.project_promises(batch)
-        if os.path.isdir(self.promises_dir):
-            delta_p = transforms.merge_promises(
-                self.spark.read.parquet(self.promises_dir), delta_p)
-        _swap_write(delta_p, self.promises_dir)
-
-    def _fold_bills_state(self, batch: DataFrame) -> None:
-        delta_b = transforms.bills_state(batch)
-        if os.path.isdir(self.bills_state_dir):
-            delta_b = transforms.merge_bills_state(
-                self.spark.read.parquet(self.bills_state_dir), delta_b)
-        _swap_write(delta_b, self.bills_state_dir)
-        # bills are DERIVED from the state table at read time (bills());
-        # materializing them per batch was a third serialized write job
-        # whose only reader can fold the same projection lazily
+    @staticmethod
+    def _fold(table: LakeTable, delta: DataFrame, merge) -> None:
+        """Fold a batch's partial aggregate into a projection's state and
+        commit the merged state as a whole-table rewrite. Bills are
+        DERIVED from their state table at read time (:meth:`bills`)."""
+        if table.versions():
+            delta = merge(table.read(), delta)
+        table.rewrite(delta)
+        table.expire(keep_last=_KEEP_SNAPSHOTS)
 
     def read_log(self) -> DataFrame:
         """Re-parse the archived event documents into the envelope."""
         from ..schemas import BNPL_ENVELOPE
-        raw = self.spark.read.parquet(self.log_dir)
+        raw = self.log_table.read()
         return (
             raw.select("event_data", "created_at",
                        F.from_json("event_data", BNPL_ENVELOPE).alias("e"))
@@ -211,39 +186,26 @@ class BnplPipeline:
     def compact_log(self, target_rows_per_file: int = 1_000_000) -> dict:
         """Compact the archive's per-micro-batch small files — THE
         operational cost of an append file sink at scale (every 1 s
-        trigger writes ≥1 file per partition; a day is ~86k files).
-        Rewrites the log at ``target_rows_per_file`` granularity,
-        preserving the event_type partitioning, and publishes it with
-        the same crash-recoverable swap as the projections.
-
-        Single-writer maintenance op (run it between trigger windows —
-        the swap is not transactional for concurrent readers; at 100 TB
-        this job is a table-format responsibility, e.g. Delta/Iceberg
-        OPTIMIZE, with the same rewrite shape). The source checkpoint
-        is untouched: compaction rewrites sink files only, so streaming
-        appends continue exactly where they left off.
+        trigger writes ≥1 file; a day is ~86k files). Rewrites the log
+        at ``target_rows_per_file`` granularity as one
+        :meth:`LakeTable.compact` commit, so a concurrent reader keeps
+        its snapshot (at 100 TB: Delta/Iceberg OPTIMIZE, same shape).
+        Row and file counts come from the manifests. The source
+        checkpoint is untouched: compaction rewrites sink files only,
+        so streaming appends continue exactly where they left off.
         """
-        import glob
-
-        def _files(d: str) -> int:
-            return len(glob.glob(os.path.join(d, "**", "part-*"),
-                                 recursive=True))
-
-        raw = self.spark.read.parquet(self.log_dir)
-        n = raw.count()
-        before = _files(self.log_dir)
-        nfiles = max(1, -(-n // target_rows_per_file))
-        _swap_write(raw.repartition(nfiles), self.log_dir,
-                    partition_by="event_type_part")
-        return {"rows": n, "files_before": before,
-                "files_after": _files(self.log_dir)}
+        before = self.log_table.manifest()["files"]
+        n = sum(f["rows"] for f in before)
+        self.log_table.compact(max(1, -(-n // target_rows_per_file)))
+        self.log_table.expire(keep_last=_KEEP_SNAPSHOTS)
+        return {"rows": n, "files_before": len(before),
+                "files_after": self.log_table.file_count()}
 
     def promises(self) -> DataFrame:
         """The payment_promises projection as of the last folded batch."""
-        return self.spark.read.parquet(self.promises_dir)
+        return self.promises_table.read()
 
     def bills(self) -> DataFrame:
         """The member_bills projection, finalized from the folded bill
         state."""
-        return transforms.bills_from_state(
-            self.spark.read.parquet(self.bills_state_dir))
+        return transforms.bills_from_state(self.bills_state_table.read())

@@ -3,7 +3,7 @@ steps A/B/C as a deterministic event sequence, plus the failure modes
 the reference gets wrong — duplicate delivery (v1), payment-before-bill
 reordering (v2), unpaid second user (v3) — and streaming parity with
 restart recovery (the consumer/consumer.go:64 fix), and a crash at
-every filesystem step of the sinks' directory swaps."""
+every filesystem step of the sinks' manifest commits."""
 
 from __future__ import annotations
 
@@ -210,56 +210,74 @@ def test_incremental_equals_recompute(spark, tmp_path):
     assert b3["status"] == "unpaid" and b3["amount"] == 250
 
 
-#: the filesystem steps of one directory swap: writing ``<dir>.tmp``,
-#: removing the old ``<dir>``, renaming ``.tmp`` into place
-CRASH_POINTS = ("write_tmp", "after_rmtree", "at_rename")
+#: the filesystem steps of one LakeTable commit: Spark writing the
+#: table's ``_tmp-vNNNNN``, renaming the data files into ``data/``, the
+#: manifest rename into ``_log/`` that commits, and the ``expire`` after
+CRASH_POINTS = ("write_tmp", "after_data_rename", "at_rename", "in_expire")
 
 
-def _inject_crash(monkeypatch, target: str, point: str) -> None:
-    """Make the next swap of ``target`` fail once at ``point``. A crash
-    mid-write leaves ``.tmp`` without its ``_SUCCESS`` marker and with a
-    truncated data file."""
-    import shutil
-
+def _inject_crash(monkeypatch, root: str, point: str) -> None:
+    """Make the next commit to the table at ``root`` fail once at
+    ``point``. A torn write leaves ``_tmp-vNNNNN`` without Spark's
+    ``_SUCCESS`` marker and with truncated data files."""
     from pyspark.sql.readwriter import DataFrameWriter
 
-    tmp = target + ".tmp"
     fired: list[bool] = []
 
     def crash(what: str):
         fired.append(True)
-        raise OSError(f"injected crash {what} {target}")
+        raise OSError(f"injected crash {what} {root}")
+
+    def under(path: str, sub: str) -> bool:
+        return os.path.dirname(path) == os.path.join(root, sub)
 
     if point == "write_tmp":
         real_parquet = DataFrameWriter.parquet
 
         def parquet(self, path, *a, **k):
             real_parquet(self, path, *a, **k)
-            if path == tmp and not fired:
-                os.remove(os.path.join(tmp, "_SUCCESS"))
-                for root, _, files in os.walk(tmp):
-                    for f in files:
-                        if f.startswith("part-"):
-                            full = os.path.join(root, f)
-                            os.truncate(full, os.path.getsize(full) // 2)
+            if (os.path.dirname(path) == root
+                    and os.path.basename(path).startswith("_tmp-v")
+                    and not fired):
+                os.remove(os.path.join(path, "_SUCCESS"))
+                for f in os.listdir(path):
+                    if f.startswith("part-"):
+                        full = os.path.join(path, f)
+                        os.truncate(full, os.path.getsize(full) // 2)
                 crash("writing")
         monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
-    elif point == "after_rmtree":
-        real_rmtree = shutil.rmtree
+    elif point == "in_expire":
+        real_remove = os.remove
 
-        def rmtree(path, *a, **k):
-            real_rmtree(path, *a, **k)
-            if path == target and not fired:
-                crash("after removing")
-        monkeypatch.setattr(shutil, "rmtree", rmtree)
+        def remove(path, *a, **k):
+            real_remove(path, *a, **k)
+            if path.startswith(root + os.sep) and not fired:
+                crash("expiring")
+        monkeypatch.setattr(os, "remove", remove)
     else:
         real_rename = os.rename
 
         def rename(src, dst, *a, **k):
-            if src == tmp and not fired:
-                crash("renaming into")
+            if (point == "at_rename" and under(dst, "_log")
+                    and not fired):
+                crash("committing")
             real_rename(src, dst, *a, **k)
+            if (point == "after_data_rename" and under(dst, "data")
+                    and not fired):
+                crash("after renaming into")
         monkeypatch.setattr(os, "rename", rename)
+
+
+def assert_no_orphans(pipe: BnplPipeline):
+    """Each table's ``data/`` holds exactly the files its retained
+    manifests list, and no uncommitted ``_tmp-*`` output is left."""
+    for t in (pipe.log_table, pipe.promises_table, pipe.bills_state_table):
+        listed = {f["path"] for v in t.versions()
+                  for f in t.manifest(v)["files"]}
+        present = {f"data/{n}" for n in os.listdir(os.path.join(t.root,
+                                                                "data"))}
+        assert present == listed, t.root
+        assert not [n for n in os.listdir(t.root) if n.startswith("_tmp-")]
 
 
 @pytest.mark.parametrize("point", CRASH_POINTS)
@@ -267,15 +285,17 @@ def _inject_crash(monkeypatch, target: str, point: str) -> None:
 def test_fold_crash_then_restart_matches_log(spark, tmp_path, monkeypatch,
                                              sink, point):
     """Crash matrix for the folded projections: a batch that dies at any
-    step of a sink's directory swap is replayed from the checkpoint by a
-    new pipeline, and the projections still equal the batch oracle. The
-    replay must fold into the state from before the crash — folding into
-    empty state would drop b-001's promise_id and issued_date, which only
-    the first batch carried."""
+    step of a sink's manifest commit is replayed from the checkpoint by
+    a new pipeline, and the projections still equal the batch oracle.
+    The replay must fold into the state from before the crash — folding
+    into empty state would drop b-001's promise_id and issued_date,
+    which only an earlier batch carried. Two batches precede the crash,
+    so its ``expire`` has a snapshot to drop."""
     in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    write_events(in_dir, GOLDEN[:3], "a.jsonl")
     pipe = BnplPipeline(spark, in_dir, out_dir)
-    pipe.run_stream(available_now=True)
+    for i, events in enumerate((GOLDEN[:2], GOLDEN[2:3])):
+        write_events(in_dir, events, f"a{i}.jsonl")
+        pipe.run_stream(available_now=True)
 
     _inject_crash(monkeypatch, getattr(pipe, sink), point)
     write_events(in_dir, GOLDEN[3:] + EXTRA_USER, "b.jsonl")
@@ -284,21 +304,23 @@ def test_fold_crash_then_restart_matches_log(spark, tmp_path, monkeypatch,
     monkeypatch.undo()
 
     pipe = BnplPipeline(spark, in_dir, out_dir)
+    assert_no_orphans(pipe)
     pipe.run_stream(available_now=True)
     assert_matches_log(pipe)
     assert_golden_state(pipe)
+    assert_no_orphans(pipe)
 
 
 @pytest.mark.parametrize("point", CRASH_POINTS)
 def test_compaction_crash_then_restart_keeps_log(spark, tmp_path,
                                                  monkeypatch, point):
     """Crash matrix for ``compact_log``: the log survives a crash at any
-    step of its swap, and the pipeline resumes on it."""
+    step of its commit, and the pipeline resumes on it."""
     in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    write_events(in_dir, GOLDEN[:2], "a.jsonl")
-    write_events(in_dir, GOLDEN[2:], "b.jsonl")
     pipe = BnplPipeline(spark, in_dir, out_dir)
-    pipe.run_stream(available_now=True)
+    for i, events in enumerate((GOLDEN[:2], GOLDEN[2:])):
+        write_events(in_dir, events, f"a{i}.jsonl")
+        pipe.run_stream(available_now=True)
     before = _rows(pipe.read_log())
 
     _inject_crash(monkeypatch, pipe.log_dir, point)
@@ -307,12 +329,32 @@ def test_compaction_crash_then_restart_keeps_log(spark, tmp_path,
     monkeypatch.undo()
 
     pipe = BnplPipeline(spark, in_dir, out_dir)
+    assert_no_orphans(pipe)
     assert _rows(pipe.read_log()) == before
     write_events(in_dir, EXTRA_USER, "c.jsonl")
     pipe.run_stream(available_now=True)
     assert pipe.read_log().count() == len(before) + 1
     assert_matches_log(pipe)
     assert_golden_state(pipe)
+    assert_no_orphans(pipe)
+
+
+def test_reader_keeps_its_snapshot_across_a_batch(spark, tmp_path):
+    """A DataFrame resolved before a batch returns the same rows after
+    that batch commits: the batch publishes a new manifest, and the
+    snapshot the reader resolved keeps its files."""
+    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
+    write_events(in_dir, GOLDEN[:2], "a.jsonl")
+    pipe = BnplPipeline(spark, in_dir, out_dir)
+    pipe.run_stream(available_now=True)
+    df = pipe.promises()
+    before = _rows(df)
+
+    write_events(in_dir, [_purchase("u2", 300, "2026-01-02T00:00:00Z")],
+                 "b.jsonl")
+    pipe.run_stream(available_now=True)
+    assert _rows(df) == before
+    assert len(_rows(pipe.promises())) == len(before) + 1
 
 
 def _purchase(uid: str, amount: int, ts: str) -> dict:

@@ -37,8 +37,8 @@ def test_compaction_reduces_files_and_scan_partitions(spark, tmp_path):
     assert t.file_count(1) == 4
     # same rows, and the compacted scan plans over 8x fewer files
     assert _counts(t.read(0)) == _counts(t.read(1))
-    assert (t.read(1).rdd.getNumPartitions()
-            < t.read(0).rdd.getNumPartitions())
+    assert len(t.read(0).inputFiles()) == 32
+    assert len(t.read(1).inputFiles()) == 4
 
 
 def test_vacuum_deletes_bytes_and_breaks_expired_reads(spark, tmp_path):
