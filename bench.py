@@ -316,7 +316,7 @@ def stream_throughput(spark: SparkSession, sf_dir: str,
     min-of-N policy as the headline queries; both walls are in the
     dict). Each run gets a
     fresh out_dir/checkpoint, so the per-query state-store sizing
-    applies (session.scoped_shuffle_partitions — measured 56k -> 68k
+    applies (session.scoped_conf — measured 56k -> 68k
     events/s at sf0.1 going 32 -> 8 partitions). The reference's
     structural ceiling is ~1k events/s written / ~10k read
     (BASELINE.md: single Kinesis shard, constant partition key, 1 s
@@ -326,8 +326,7 @@ def stream_throughput(spark: SparkSession, sf_dir: str,
 
     from pyspark.sql import functions as F
 
-    from event_streaming_bnpl_demo_spark.session import \
-        scoped_shuffle_partitions
+    from event_streaming_bnpl_demo_spark.session import scoped_conf
     from event_streaming_bnpl_demo_spark.sources import load_table
     from event_streaming_bnpl_demo_spark.streaming.pipeline import BnplPipeline
 
@@ -347,7 +346,7 @@ def stream_throughput(spark: SparkSession, sf_dir: str,
          .select(F.to_json(F.struct("*")).alias("value"))
          .coalesce(4).write.mode("overwrite").text(in_dir))
         walls = []
-        with scoped_shuffle_partitions(spark, 8):
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
             # best-of-3: the steady-state wall is ~1.5 s for 100k
             # events, so one +-0.4 s scheduler hiccup swings the rate
             # 45k<->65k ev/s; a third run keeps the reported number a
@@ -374,7 +373,7 @@ def stream_throughput(spark: SparkSession, sf_dir: str,
         if calib_before and probe > 1.5 * calib_before:
             extra["min_without_extra_sec"] = round(min(walls), 2)
             out_dir = os.path.join(work, "out_extra")
-            with scoped_shuffle_partitions(spark, 8):
+            with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
                 t0 = time.perf_counter()
                 BnplPipeline(spark, in_dir, out_dir).run_stream(
                     available_now=True)

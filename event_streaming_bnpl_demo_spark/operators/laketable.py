@@ -214,13 +214,19 @@ class LakeTable:
     # -- reads -------------------------------------------------------------
 
     def _read_paths(self, paths: list[str], m: dict) -> DataFrame:
+        """Read ``paths`` of snapshot ``m`` with its deletes applied. A
+        pruned scan that keeps no file reads the snapshot's schema with
+        no rows."""
+        empty = not paths
+        if empty:
+            paths = [f["path"] for f in m["files"]]
         df = (self.spark.read.option("mergeSchema", "true")
               .parquet(*(os.path.join(self.root, p) for p in paths)))
         if m["delete_files"]:
             dels = self.spark.read.parquet(
                 *(os.path.join(self.root, p) for p in m["delete_files"]))
             df = df.join(dels, on=m["delete_key"], how="left_anti")
-        return df
+        return df.limit(0) if empty else df
 
     def read(self, version: int | None = None) -> DataFrame:
         m = self.manifest(version)
@@ -234,57 +240,35 @@ class LakeTable:
         m = self.manifest(version)
         old = {f["path"] for f in self.manifest(since)["files"]}
         new = [f["path"] for f in m["files"] if f["path"] not in old]
-        return self._read_paths(new, m) if new else \
-            self.read(version).limit(0)
+        return self._read_paths(new, m)
 
-    def prune_files(self, col: str, lo, hi,
-                    version: int | None = None) -> tuple[list[str], int]:
-        """Manifest-level scan planning: the file paths whose [min,max]
-        for ``col`` intersects [lo, hi], plus the total file count.
-        Driver cost is the manifest JSON — no data bytes touched."""
+    def prune_files(self, preds: dict, version: int | None = None
+                    ) -> tuple[list[str], int]:
+        """Manifest-level scan planning over a conjunctive box: the file
+        paths, in manifest order, whose [min, max] intersects [lo, hi]
+        for EVERY column of ``preds`` (col -> (lo, hi)), plus the total
+        file count. A file without stats for a column is kept. Several
+        columns prune multiplicatively once Z-order clustering keeps
+        their per-file ranges narrow together. Driver cost is the
+        manifest JSON — no data bytes touched."""
+        def conv(v):
+            return v.isoformat() if hasattr(v, "isoformat") else v
+
+        box = {c: (conv(lo), conv(hi)) for c, (lo, hi) in preds.items()}
         m = self.manifest(version)
-        conv = (lambda v: v.isoformat()) if hasattr(lo, "isoformat") \
-            else (lambda v: v)
-        lo, hi = conv(lo), conv(hi)
         keep = []
         for f in m["files"]:
-            st = f["stats"].get(col)
-            if st is None or not (st[1] < lo or st[0] > hi):
+            stats = f["stats"]
+            if all(stats.get(c) is None
+                   or not (stats[c][1] < lo or stats[c][0] > hi)
+                   for c, (lo, hi) in box.items()):
                 keep.append(f["path"])
         return keep, len(m["files"])
 
-    def read_pruned(self, col: str, lo, hi,
+    def read_pruned(self, preds: dict,
                     version: int | None = None) -> DataFrame:
-        paths, _ = self.prune_files(col, lo, hi, version)
-        m = self.manifest(version)
-        if not paths:
-            return self.read(version).limit(0)
-        return self._read_paths(paths, m)
-
-    def prune_files_box(self, preds: dict,
-                        version: int | None = None) -> tuple[list[str], int]:
-        """Multi-column (conjunctive box) scan planning: a file
-        survives only if EVERY predicate column's [min, max] intersects
-        its [lo, hi] — the planning rule that makes Z-order clustering
-        pay off, since interleaving keeps several columns' per-file
-        ranges narrow simultaneously. ``preds`` maps col -> (lo, hi)."""
-        keep: set[str] | None = None
-        total = 0
-        for col, (lo, hi) in preds.items():
-            paths, total = self.prune_files(col, lo, hi, version)
-            keep = set(paths) if keep is None else keep & set(paths)
-        m = self.manifest(version)
-        ordered = [f["path"] for f in m["files"]
-                   if keep is not None and f["path"] in keep]
-        return ordered, total
-
-    def read_pruned_box(self, preds: dict,
-                        version: int | None = None) -> DataFrame:
-        paths, _ = self.prune_files_box(preds, version)
-        m = self.manifest(version)
-        if not paths:
-            return self.read(version).limit(0)
-        return self._read_paths(paths, m)
+        paths, _ = self.prune_files(preds, version)
+        return self._read_paths(paths, self.manifest(version))
 
     # -- maintenance -------------------------------------------------------
 
@@ -425,10 +409,8 @@ class LakeTable:
         from pyspark.sql import functions as F
 
         paths, _ = self.bloom_candidates(col, value, version)
-        m = self.manifest(version)
-        base = (self._read_paths(paths, m) if paths
-                else self.read(version).limit(0))
-        return base.filter(F.col(col) == value)
+        return (self._read_paths(paths, self.manifest(version))
+                .filter(F.col(col) == value))
 
 
 def _bloom_bucket_sql(key: str, row: str, m_bits: int) -> str:

@@ -87,81 +87,12 @@ def _decode_payload(payload: bytes, modality: str) -> list[float]:
     return [b / 256.0 for b in digest[:8]]
 
 
-RESIZED_SCHEMA = T.StructType([
-    T.StructField("asset_id", T.LongType(), False),
-    T.StructField("modality", T.StringType(), False),
-    T.StructField("payload", T.BinaryType(), True),
-    T.StructField("byte_len", T.LongType(), True),
-    T.StructField("width", T.IntegerType(), True),
-    T.StructField("height", T.IntegerType(), True),
-    T.StructField("resize_ok", T.BooleanType(), False),
-])
-
 FRAME_SCHEMA = T.StructType([
     T.StructField("asset_id", T.LongType(), False),
     T.StructField("frame_idx", T.IntegerType(), False),
     T.StructField("frame", T.BinaryType(), True),
     T.StructField("frame_len", T.LongType(), True),
 ])
-
-
-def _resize_payload(payload: bytes, modality: str,
-                    width: int, height: int) -> bytes:
-    """Resize dispatch. ``image`` decodes REAL PPM bytes, resamples to
-    (width, height) by nearest-neighbor index mapping, re-encodes a
-    valid PPM (see the image tier below); ``video`` demuxes REAL Y4M
-    bytes, NN-resamples every frame spatially, re-encodes a valid Y4M
-    (see the video tier below). For ``text`` the deterministic fake
-    truncates/pads the byte stream to width*height bytes so the Arrow
-    round-trip and output schema are exercised."""
-    if modality == "image":
-        _, _, arr = _decode_ppm(payload)
-        return _encode_ppm(_nn_resize(arr, width, height))
-    if modality == "video":
-        import numpy as np
-
-        _, _, fps, frames = _decode_y4m(payload)
-        out = np.stack([_nn_resize(f, width, height) for f in frames])
-        return _encode_y4m(out, fps=fps)
-    if modality != "text":
-        raise NotImplementedError(
-            f"resize for modality {modality!r} needs codec libs not present "
-            "in this environment")
-    target = width * height
-    return payload[:target].ljust(target, b"\0")
-
-
-def resize_media(media: DataFrame, width: int = 16,
-                 height: int = 16) -> DataFrame:
-    """Batch resize via mapInPandas — the shape of every image
-    normalization pass. Scale: payload bytes stay inside Arrow batches;
-    rows whose codec is missing are flagged, not dropped, so a later
-    pass can re-run them once the codec lands."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_payload, ok = [], []
-            for payload, modality in zip(pdf["payload"], pdf["modality"]):
-                try:
-                    out_payload.append(
-                        _resize_payload(bytes(payload), modality, width, height))
-                    ok.append(True)
-                except (NotImplementedError, ValueError):
-                    # missing codec OR undecodable bytes: flag, don't drop
-                    out_payload.append(None)
-                    ok.append(False)
-            yield pd.DataFrame({
-                "asset_id": pdf["asset_id"],
-                "modality": pdf["modality"],
-                "payload": out_payload,
-                "byte_len": [len(p) if p is not None else None
-                             for p in out_payload],
-                "width": width,
-                "height": height,
-                "resize_ok": ok,
-            })
-
-    return media.mapInPandas(run, schema=RESIZED_SCHEMA)
 
 
 def sample_frames(media: DataFrame, every_n: int = 2,
@@ -439,17 +370,6 @@ def _decode_ppm(payload: bytes):
             f"pixel payload {len(pixels)} B != {w}x{h}x3")
     import numpy as np
     return w, h, np.frombuffer(pixels, dtype=np.uint8).reshape(h, w, 3)
-
-
-def _nn_resize(arr, width: int, height: int):
-    """Nearest-neighbor resample to (height, width) — index-mapped
-    gather, the textbook NN kernel (numpy advanced indexing)."""
-    import numpy as np
-
-    h, w = arr.shape[0], arr.shape[1]
-    ys = (np.arange(height) * h) // height
-    xs = (np.arange(width) * w) // width
-    return arr[ys][:, xs]
 
 
 def synth_image_media(docs: DataFrame) -> DataFrame:
@@ -773,40 +693,3 @@ def frame_luma_stats(frames: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return frames.mapInPandas(run, schema=FRAME_STATS_SCHEMA)
-
-
-CHECKSUM_SCHEMA = T.StructType([
-    T.StructField("asset_id", T.LongType(), False),
-    T.StructField("byte_len", T.LongType(), True),
-    T.StructField("crc32", T.LongType(), False),
-])
-
-
-def checksum_media(media: DataFrame) -> DataFrame:
-    """Integrity pass via ``mapInArrow`` — the lowest-level Python
-    tier: RecordBatches arrive as raw Arrow memory, the binary payload
-    column is CRC'd without ever materializing a pandas object per
-    row. This is the right tier for byte-oriented work (checksums,
-    magic-number sniffing, container demuxing) where pandas boxing of
-    ``bytes`` objects is pure overhead; resize/featurize stay on
-    mapInPandas where per-element Python logic is unavoidable.
-    """
-    import zlib
-
-    import pyarrow as pa
-
-    def run(batches):
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            ids = tbl.column("asset_id")
-            payloads = tbl.column("payload")
-            crcs = [zlib.crc32(p.as_py() or b"") for p in payloads]
-            lens = [len(p.as_py() or b"") for p in payloads]
-            yield pa.RecordBatch.from_arrays(
-                [ids.combine_chunks(), pa.array(lens, pa.int64()),
-                 pa.array(crcs, pa.int64())],
-                schema=pa.schema([("asset_id", pa.int64()),
-                                  ("byte_len", pa.int64()),
-                                  ("crc32", pa.int64())]))
-
-    return media.mapInArrow(run, schema=CHECKSUM_SCHEMA)

@@ -45,197 +45,14 @@ class Query:
 
 _REGISTRY: dict[str, Query] = {}
 
-# Catalog iteration order. The driver's correctness harness budgets ~50
-# queries per round, taken in dict order. The catalog CLOSED at the
-# round-8 rotation: all 352 oracled names carry a green driver row
-# (CORRECTNESS_r01..r08.json, zero standing failures across eight
-# rounds). From round 9 on, the steady state is the RE-VERIFICATION
-# rotation: with no never-checked names left, the whole budget drains
-# the stalest-checked names first (see ``_last_checked_rounds`` /
-# ``_ordered_names``), so the full catalog re-proves on a
-# ceil(352/50) = 8-round cycle and a silent regression cannot hide
-# longer than one cycle. _PRIORITY stays empty unless a genuine new
-# capability is registered; rotation remains a round-close invariant
-# guarded by tests/test_catalog_rotation.py.
-_PRIORITY: tuple[str, ...] = ()
-
-# Second tier: empty — every never-checked name is in tier 1 now.
-_PRIORITY2: tuple[str, ...] = ()
-
-# Names registered AFTER a round's check budget is already full: held at
-# the very end of the fresh ordering so they cannot evict a budgeted
-# name. Empty at the r8 rotation — the r7 deferrals were all promoted
-# into tier 1 (31 names < the ~50 budget). New round-8 registrations
-# land here only if tier 1 plus reruns would already exhaust the budget.
-_DEFERRED: tuple[str, ...] = ()
-
-# Names with a driver-side green row in CORRECTNESS_r01/r02/r03.json —
-# cumulative (122 currently-registered names, zero red; 121 oracled +
-# the rows-only agg_approx_distinct). These yield the tail of the
-# iteration order to queries the driver has never checked, so leftover
-# budget extends coverage instead of repeating it.
-_DRIVER_CHECKED: frozenset[str] = frozenset({
-    # round 1
-    "q1_pricing_summary", "agg_group_basic", "agg_distinct", "agg_rollup",
-    "agg_cube", "join_inner", "join_left_outer", "join_full_outer",
-    "join_semi", "join_anti", "q5_region_revenue", "join_range_theta",
-    "join_asof", "topk_global", "topk_per_group", "set_union_distinct",
-    "set_intersect", "set_except", "set_dropdup", "scalar_string",
-    "scalar_date", "scalar_math", "scalar_conditional", "json_extract",
-    "array_ops", "ref_filter_project", "ref_type_router",
-    "ref_purchase_to_promise", "ref_lastwin_state", "ref_event_log",
-    "window_rank", "window_lag_lead", "window_running_total",
-    "window_sliding_frame", "stream_tumbling_window",
-    "stream_sliding_window", "stream_session_window", "stream_dedup_keys",
-    "agg_approx_distinct", "stream_static_join", "llm_dedup_exact",
-    "llm_dedup_minhash", "llm_dedup_components", "llm_dedup_apply",
-    "llm_dedup_simhash",
-    "llm_simsearch_topk", "llm_simsearch_lsh", "llm_text_winnow",
-    # round 2 additions
-    "source_json_scan", "source_stream_replay", "source_python_datasource",
-    "join_right_outer", "join_cross_small", "join_salted_skew",
-    "join_interval_op", "join_interval_outer",
-    "q17_small_qty_revenue", "q21_waiting_suppliers",
-    "agg_grouping_sets", "agg_stats_moments",
-    "window_range_interval", "set_except_all", "map_ops",
-    "scalar_subquery", "sql_recursive_cte",
-    "llm_simsearch_ivf", "llm_text_quality", "llm_tfidf_top_terms",
-    "llm_multimodal_meta", "llm_multimodal_audio",
-    "udf_pandas_tokens", "udf_cogrouped_asof",
-    # round 3 additions (CORRECTNESS_r03.json: 50/50 green)
-    "llm_pack_sequences",
-    "q2_min_cost_supply", "q3_shipping_priority", "q4_priority_late_ship",
-    "q6_forecast_revenue", "q7_nation_volume", "q8_market_share",
-    "q9_product_type_profit", "q10_returned_items", "q11_important_parts",
-    "q12_ship_lateness", "q13_order_distribution", "q14_promo_share",
-    "q15_top_supplier", "q16_supplier_diversity", "q18_large_volume",
-    "q19_disjunctive_join", "q20_heavy_promo_suppliers", "q22_idle_balances",
-    "join_snowflake_dims",
-    "events_funnel", "events_retention_cohorts", "events_attribution",
-    "llm_curation_pipeline", "llm_chunk_overlap", "llm_ngram_stats",
-    "llm_prefix_boilerplate",
-    "agg_median_exact", "agg_minmax_by", "agg_stats_corr",
-    "subquery_exists", "join_lateral", "json_variant",
-    "llm_decontaminate", "llm_sample_stratified", "llm_split_train_eval",
-    "llm_sample_hash",
-    "llm_simsearch_batch", "udf_pandas_cosine", "udf_grouped_demean",
-    "udf_python_scalar",
-    "llm_dedup_ngram_jaccard", "llm_dedup_embedding",
-    "llm_multimodal_image", "llm_dedup_verified", "llm_corpus_stats",
-    "filter_predicates", "agg_pivot", "window_fill_forward",
-    "source_csv_scan",
-    # round 4 additions (CORRECTNESS_r04.json: 49/50 green; the one red,
-    # agg_collect_sorted, was a harness artifact — fixed + re-queued r5)
-    "stream_asof_join", "source_partitioned_scan", "source_schema_evolution",
-    "dq_referential_orphans", "dq_null_profile", "dq_key_uniqueness",
-    "dq_order_reconciliation", "dq_freshness",
-    "ts_bucket_rollup", "ts_ohlc", "ts_gap_fill", "ts_gap_fill_interp",
-    "ts_sessionize", "ts_top_movers", "ts_rolling_24h", "stream_ts_rollup",
-    "ts_scd2_states", "ts_time_weighted_avg", "ts_calendar_heatmap",
-    "ts_hourweek_anomaly",
-    "graph_degree_stats", "graph_pagerank",
-    "join_asof_forward", "join_asof_tolerance", "udf_python_udtf",
-    "llm_multimodal_video",
-    "llm_source_caps", "llm_token_budget_sample", "llm_global_shuffle",
-    "llm_cluster_quality_pick", "llm_length_histogram",
-    "llm_ann_recall_eval", "llm_ngram_novelty",
-    "events_type_transitions", "events_time_to_convert_hist",
-    "events_activity_gini",
-    "llm_text_tokens", "llm_text_fingerprint", "llm_text_langid",
-    "llm_text_repetition", "llm_text_scrub",
-    "agg_percentiles_disc", "agg_outlier_zscore", "agg_mode_exact",
-    "q_backlog_aging", "set_symmetric_diff", "window_value_share",
-    "source_xml_scan", "source_orc_scan",
-    # round 5 additions (CORRECTNESS_r05.json: 50/50 green — first
-    # perfect round; cumulative 220/225 oracled names, zero red ever)
-    "llm_dedup_ngram_jaccard_exact", "llm_dedup_embedding_exact",
-    "scalar_string2", "scalar_math2",
-    "scalar_date2", "array_posexplode", "array_explode_outer",
-    "array_higher_order",
-    "set_union_byname", "agg_grouping_id", "reshape_unpivot",
-    "agg_conditional",
-    "scalar_levenshtein", "window_distribution", "scalar_bitwise",
-    "window_running_distinct",
-    "join_null_safe", "ts_interval_coverage", "llm_priority_sample",
-    "stream_dedup_watermark",
-    "sketch_count_min_topk", "cdc_merge_upsert", "window_rank_normalize",
-    "events_path_topk",
-    "events_cooccurrence", "q_customer_rfm", "agg_collect_sorted",
-    "graph_triangle_count",
-    "graph_khop_reach", "join_fuzzy_blocked", "mv_join_agg_maintain",
-    "mv_cdc_maintain",
-    "mv_avg_rewrite", "mv_stream_join_agg", "stream_fanout_cascade",
-    "stream_scd2_enrich",
-    "mv_topk_maintain", "mv_incremental_distinct", "mv_quantile_sketch",
-    "cdc_emit_changes",
-    "mv_stream_topk", "llm_bpe_pair_counts", "llm_unigram_commonness",
-    "llm_simsearch_quantized",
-    "snapshot_time_travel", "llm_temperature_mix", "ts_anomaly_mad",
-    "llm_type_token_ratio",
-    "dq_benford_digits", "llm_split_cluster_safe",
-    # round 6 additions (CORRECTNESS_r06.json: 50/50 green — second
-    # consecutive perfect round; cumulative 270/323 oracled names)
-    "source_text_scan", "source_binaryfile_scan", "llm_ivf_train_kmeans",
-    "graph_sssp_weighted", "events_pattern_match",
-    "lake_snapshot_append_reads", "lake_compaction_preserves",
-    "lake_vacuum_retention", "lake_cluster_prune_scan",
-    "lake_merge_on_read_deletes", "lake_schema_evolution_read",
-    "lake_incremental_read",
-    "dq_column_profile", "agg_weighted_median", "graph_common_neighbors",
-    "events_sliding_conversion", "llm_text_bytes_ratio", "agg_hist2d",
-    "join_bloom_reduced", "join_preagg_pushdown", "join_corr_agg_rewrite",
-    "agg_union_partial", "agg_linear_trend", "agg_contingency_lift",
-    "graph_jaccard_links", "llm_dedup_incremental",
-    "llm_dup_rate_by_source", "llm_quality_gate_median", "llm_bigram_lift",
-    "events_markov_topnext", "join_range_banded", "join_dpp_partitioned",
-    "ts_rolling_cov", "window_topk_ties", "stream_session_dynamic_gap",
-    "join_map_literal_decode", "dq_distribution_drift", "scalar_try_ops",
-    "udf_arrow_scalar", "llm_dedup_recall_eval", "llm_source_diversity",
-    "dq_skew_profile", "ts_ewma_daily", "q_order_cadence",
-    "llm_dedup_prefix_filter", "ts_yoy_growth", "events_stickiness",
-    "dq_fd_violations", "scalar_business_days", "agg_bitmap_distinct",
-    # round 7 additions (CORRECTNESS_r07.json: 50/50 green — third
-    # consecutive perfect round; cumulative 321 currently-registered of
-    # 352 oracled names at the r8 close)
-    "window_streaks", "ts_dow_seasonal", "scalar_url_parse",
-    "mv_bitmap_distinct", "mv_stream_bitmap_distinct",
-    "sql_pipe_syntax", "sql_udf_scalar", "sql_session_variables",
-    "sql_exec_immediate", "scalar_collation", "llm_url_dedup_canonical",
-    "lake_zorder_prune", "join_count_product_rewrite",
-    "agg_percentile_cont", "ts_changepoint_cusum",
-    "agg_kendall_concordance", "llm_multimodal_dedup",
-    "sql_table_function", "ts_autocorr_lags", "join_asof_nearest",
-    "window_ntile", "geo_grid_knn", "geo_grid_blocked_join",
-    "agg_chi2_independence", "ts_cross_correlation",
-    "window_rolling_median", "sort_keyset_pagination",
-    "etl_surrogate_keys", "ts_bitemporal_pit", "llm_text_readability",
-    "dq_sequence_gaps", "agg_trimmed_winsorized", "scalar_jaro_winkler",
-    "ts_holt_linear", "graph_kcore", "stat_bootstrap_ci",
-    "dq_schema_drift", "er_resolve_pipeline", "agg_hhi_concentration",
-    "lake_bloom_point_lookup", "stat_cuped_adjustment",
-    "llm_hellinger_sources", "stream_interval_join",
-    "stream_interval_join_outer", "q_segment_migration",
-    "q_cohort_ltv_curve", "er_blocking_quality", "stat_mannwhitney_u",
-    "window_rolling_band", "q_pareto_concentration",
-    # round 8 additions (CORRECTNESS_r08.json: 50/50 green — fourth
-    # consecutive perfect round; closes the catalog at 352/352 oracled
-    # names driver-verified). 32 first-time names (the old tier-1 queue);
-    # the other 18 r08 rows were re-checks of round-1 greens.
-    "scalar_luhn_checksum", "q_market_basket_rules", "ts_theilsen_slope",
-    "events_growth_accounting", "events_active_days_hist",
-    "agg_survival_km", "llm_perplexity_filter", "llm_zipf_slope",
-    "mv_stream_growth_accounting", "ts_periodogram_dft",
-    "agg_entropy_mix", "stat_welch_ttest", "llm_token_entropy_by_source",
-    "join_bucketed_colocated", "etl_range_boundaries", "ts_downsample_m4",
-    "scalar_ip_cidr", "agg_ecdf_points", "llm_dataset_card",
-    "llm_bm25_topk", "dq_rule_engine", "agg_sampled_sum_error",
-    "ts_seasonal_decompose", "mv_stream_rule_engine",
-    "events_pit_features", "llm_mix_epochs_planner",
-    "mv_stream_pit_features", "llm_lsh_band_sweep",
-    "agg_covariance_matrix", "stat_diff_in_diff", "graph_hits_bipartite",
-    "llm_simsearch_ann_native",
-})
-
+# Catalog iteration order. The driver's correctness harness checks
+# ~50 queries per round, taken in dict order. The order is derived from
+# the driver's own output, never kept by hand: oracled names come
+# stalest-checked first by (last green round, name), where a name with
+# no green row in any CORRECTNESS_r*.json counts as round 0 and so
+# leads; rows-only names follow in registry order. Each new artifact
+# re-orders the catalog by itself, and the full catalog re-proves on a
+# ceil(352/50) = 8-round cycle (tests/test_catalog_rotation.py).
 
 _LAST_CHECKED_CACHE: dict[str, int] | None = None
 
@@ -247,10 +64,10 @@ def _last_checked_rounds() -> dict[str, int]:
     artifacts directly — rather than hard-coding a table — makes the
     re-verification rotation self-maintaining: the driver's own output
     is the ledger, so after each round the freshly-checked names sink to
-    the back of the rerun tier automatically. Missing/unreadable
-    artifacts degrade to an empty map (name-ordered rerun tier), never
-    an error — the driver may execute the package from a tree without
-    the artifacts."""
+    the back of the oracled order automatically. Missing/unreadable
+    artifacts degrade to an empty map (oracled names in name order),
+    never an error — the driver may execute the package from a tree
+    without the artifacts."""
     global _LAST_CHECKED_CACHE
     if _LAST_CHECKED_CACHE is not None:
         return _LAST_CHECKED_CACHE
@@ -285,32 +102,13 @@ def _last_checked_rounds() -> dict[str, int]:
 
 
 def _ordered_names() -> list[str]:
-    prio = [n for n in _PRIORITY if n in _REGISTRY]
-    seen = set(prio)
-    prio2 = [n for n in _PRIORITY2 if n in _REGISTRY and n not in seen]
-    seen.update(prio2)
-    rest = [n for n in _REGISTRY if n not in seen]
-    # rows-only queries (no oracle) can only produce err:no_oracle rows
-    # under the driver's budget — keep them dead last, always.
-    fresh = [n for n in rest
-             if n not in _DRIVER_CHECKED and _REGISTRY[n].oracle is not None
-             and n not in _DEFERRED]
-    # exclude already-checked names so a checked deferred name flows
-    # into the rerun tier like every other name (never emitted twice)
-    deferred = [n for n in _DEFERRED
-                if n in _REGISTRY and n not in _DRIVER_CHECKED]
-    # Re-verification tier: stalest-checked first (then name, for a
-    # total deterministic order). With the catalog closed at 352 oracled
-    # names and a ~50-slot budget, this re-proves every name on an
-    # 8-round cycle — the steady-state policy asked for by the round-8
-    # verdict.
     last = _last_checked_rounds()
-    rerun = sorted(
-        (n for n in rest
-         if n in _DRIVER_CHECKED and _REGISTRY[n].oracle is not None),
-        key=lambda n: (last.get(n, 0), n))
-    rows_only = [n for n in rest if _REGISTRY[n].oracle is None]
-    return prio + prio2 + fresh + deferred + rerun + rows_only
+    oracled = sorted((n for n, q in _REGISTRY.items() if q.oracle is not None),
+                     key=lambda n: (last.get(n, 0), n))
+    # rows-only queries can only produce err:no_oracle rows under the
+    # driver's budget, so they always come last
+    rows_only = [n for n, q in _REGISTRY.items() if q.oracle is None]
+    return oracled + rows_only
 
 
 def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):

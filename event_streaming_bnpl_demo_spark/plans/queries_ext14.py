@@ -337,11 +337,11 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("ts").alias("p_ts")))
     purch = (purch.withColumnRenamed("p_user", "user_id")
              .withWatermark("p_ts", "90 days"))
-    from ..session import scoped_shuffle_partitions
+    from ..session import scoped_conf
 
     # fresh-checkpoint stateful query: size the state store for the
-    # keyspace, not the batch default (session.scoped_shuffle_partitions)
-    with scoped_shuffle_partitions(spark, 8):
+    # keyspace, not the batch default (session.scoped_conf)
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         joined = interval_join(views, purch, "user_id", "v_ts", "p_ts",
                                "1 HOUR")
         q = (joined.writeStream.format("memory").queryName(name)
@@ -462,9 +462,9 @@ def stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("ts").alias("p_ts")))
     purch = (purch.withColumnRenamed("p_user", "user_id")
              .withWatermark("p_ts", "2 hours"))
-    from ..session import scoped_shuffle_partitions
+    from ..session import scoped_conf
 
-    with scoped_shuffle_partitions(spark, 8):
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         joined = interval_join(views, purch, "user_id", "v_ts", "p_ts",
                                "1 HOUR", how="left_outer")
         q = (joined.writeStream.format("memory").queryName(name)

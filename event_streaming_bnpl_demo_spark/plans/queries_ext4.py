@@ -216,11 +216,11 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = (spark.readStream
               .schema("event_id long, ts timestamp, event_type string")
               .parquet(in_dir))
-    from ..session import scoped_conf, scoped_shuffle_partitions
+    from ..session import scoped_conf
 
     # fresh-checkpoint stateful query: size the state store for the
     # keyspace, not the batch default (2.6 s -> 1.5 s warm at sf0.1;
-    # see session.scoped_shuffle_partitions). The trailing no-data
+    # see session.scoped_conf). The trailing no-data
     # micro-batch is skipped (r12): append-mode dedup emits every
     # first-seen row in its ARRIVAL batch — the watermark-advance
     # batch only evicts state, so the emitted rows are identical
@@ -230,8 +230,8 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (append-mode windows, outer stream-stream joins) must never do
     # this; see session.scoped_conf.
     with scoped_conf(spark, {
-            "spark.sql.streaming.noDataMicroBatches.enabled": "false"}), \
-         scoped_shuffle_partitions(spark, 8):
+            "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+            "spark.sql.shuffle.partitions": "8"}):
         deduped = (stream.withWatermark("ts", "1 hour")
                    .dropDuplicatesWithinWatermark(["event_id"]))
         q = (deduped.writeStream.format("memory").queryName(name)

@@ -213,7 +213,7 @@ def lake_cluster_prune_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # half-open [1997, 1998): the prune window's hi is inclusive at
     # stat granularity, the residual filter applies the exact bound
     lo, hi = _dt.datetime(1997, 1, 1), _dt.datetime(1998, 1, 1)
-    return (t.read_pruned("o_orderdate", lo, hi)
+    return (t.read_pruned({"o_orderdate": (lo, hi)})
             .filter((F.col("o_orderdate") >= F.lit(lo))
                     & (F.col("o_orderdate") < F.lit(hi)))
             .groupBy("o_orderpriority")
@@ -367,7 +367,7 @@ def lake_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes on plain per-file stats of the RAW columns — no BIGMIN
     z-range math needed at read time, which is exactly how production
     lakehouse Z-ordering works. A box query then plans over the few
-    files whose rectangles intersect it (``prune_files_box``:
+    files whose rectangles intersect it (``prune_files``:
     conjunctive manifest math, zero data bytes) and the residual
     filter restores exact bounds. The files-read ordering
     box < date-only < total is pinned in ``tests/test_lake.py``.
@@ -405,8 +405,8 @@ def lake_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo_k, hi_k = (mx * 2) // 10, (mx * 3) // 10
     lo_d = _dt.datetime(1995, 7, 1)
     hi_d = _dt.datetime(1996, 7, 1)
-    return (t.read_pruned_box({"o_custkey": (lo_k, hi_k),
-                               "o_orderdate": (lo_d, hi_d)})
+    return (t.read_pruned({"o_custkey": (lo_k, hi_k),
+                           "o_orderdate": (lo_d, hi_d)})
             .filter((F.col("o_custkey") >= lo_k)
                     & (F.col("o_custkey") <= hi_k)
                     & (F.col("o_orderdate") >= F.lit(lo_d))

@@ -328,16 +328,16 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.unix_micros(F.col("ts").cast("timestamp"))
                   .alias("ts_us")),
         "sasof", sf_dir, 4)
-    from ..session import scoped_shuffle_partitions
+    from ..session import scoped_conf
 
     # fresh-checkpoint stateful query: size the state store for the
-    # keyspace, not the batch default (see
-    # session.scoped_shuffle_partitions). Re-swept after the r8
-    # bucketed fold (64 bucket keys): 8 partitions = 8 buckets each —
-    # 3.2 s @ 8 vs 3.6 s @ 16 vs 4.5 s @ 32 warm at sf0.1; sf1 ties
-    # 8 vs 16 at ~4.2 s (the fold is machinery-bound, not data-bound:
-    # sf1 runs 10x the rows for 1.3x the wall).
-    with scoped_shuffle_partitions(spark, 8):
+    # keyspace, not the batch default (see session.scoped_conf).
+    # Re-swept after the r8 bucketed fold (64 bucket keys): 8
+    # partitions = 8 buckets each — 3.2 s @ 8 vs 3.6 s @ 16 vs 4.5 s
+    # @ 32 warm at sf0.1; sf1 ties 8 vs 16 at ~4.2 s (the fold is
+    # machinery-bound, not data-bound: sf1 runs 10x the rows for 1.3x
+    # the wall).
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         matched = build_asof_stream(spark, in_dir)
         q = (matched.writeStream.format("memory").queryName(name)
              .outputMode("update")

@@ -67,12 +67,25 @@ def get_spark(app_name: str = "event_streaming_bnpl_demo_spark",
 
 @contextmanager
 def scoped_conf(spark: SparkSession, confs: dict[str, str]):
-    """Temporarily set runtime confs for one query's execution scope —
-    the generic sibling of :func:`scoped_shuffle_partitions` for
-    per-query knobs that must not leak into the rest of the session
+    """Temporarily set runtime confs for one query's execution scope,
+    for per-query knobs that must not leak into the rest of the session
     (r12: ``spark.sql.streaming.noDataMicroBatches.enabled`` for
     streaming shapes whose emitted rows never depend on the trailing
-    watermark-advance batch)."""
+    watermark-advance batch).
+
+    ``spark.sql.shuffle.partitions`` is the common case: a STATEFUL
+    streaming query with a FRESH checkpoint fixes its state-store
+    partition count from this conf at first start, and can never
+    change it afterwards. The session default (32) sizes batch
+    shuffles for the full machine; a micro-batch state store over a
+    bench-scale keyspace spends most of its wall on task dispatch at
+    32 (measured: the streaming as-of join runs 6.3 s warm at 32
+    partitions vs 4.4 s at 8, identical results). Production sizes
+    this to peak keys x throughput per the capacity plan; it is a
+    per-query knob precisely because it CANNOT be changed on an
+    existing checkpoint — never wrap a content-keyed (reused)
+    checkpoint in a partition-count scope.
+    """
     old: dict[str, str | None] = {}
     for k, v in confs.items():
         # get(k, None) returns None ONLY when the key is truly unset
@@ -92,26 +105,3 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-@contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Temporarily set ``spark.sql.shuffle.partitions`` — for STATEFUL
-    streaming queries with a FRESH checkpoint, whose state-store
-    partition count is fixed at first start from this conf and can
-    never change afterwards. The session default (32) sizes batch
-    shuffles for the full machine; a micro-batch state store over a
-    bench-scale keyspace spends most of its wall on task dispatch at
-    32 (measured: the streaming as-of join runs 6.3 s warm at 32
-    partitions vs 4.4 s at 8, identical results). Production sizes
-    this to peak keys x throughput per the capacity plan; it is a
-    per-query knob precisely because it CANNOT be changed on an
-    existing checkpoint — never wrap a content-keyed (reused)
-    checkpoint in this.
-    """
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)

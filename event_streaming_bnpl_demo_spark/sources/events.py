@@ -83,21 +83,17 @@ def kafka_records_to_envelope(raw: DataFrame) -> DataFrame:
         raw.select(F.col("value").cast("string").alias("value")))
 
 
-def read_event_stream(spark: SparkSession, path: str,
-                      max_files_per_trigger: int | None = None) -> DataFrame:
+def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
     """Streaming read of a JSON-lines event directory.
 
-    By default a trigger admits every file present when it fires, as
-    the reference's poll drains whatever ``GetRecords`` returns
+    A trigger admits every file present when it fires, as the
+    reference's poll drains whatever ``GetRecords`` returns
     (consumer/consumer.go:75-96): an ``availableNow`` pass folds its
     whole backlog as one micro-batch, paying the per-batch WAL commit,
-    listing and sink writes once. ``max_files_per_trigger`` sets Spark's
-    ``maxFilesPerTrigger``, the backpressure bound the reference lacked
-    (unbounded ``GetRecords``, consumer/consumer.go:76-78), for a
-    deployment whose backlog can outgrow one batch.
+    listing and sink writes once. A broker deployment bounds each
+    trigger with :func:`kafka_source_options`'s
+    ``max_offsets_per_trigger``, the backpressure the reference lacked
+    (unbounded ``GetRecords``, consumer/consumer.go:76-78).
     """
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.load(path)
+    raw = spark.readStream.format("text").load(path)
     return _parse_envelope(raw)

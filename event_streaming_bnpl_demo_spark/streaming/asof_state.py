@@ -51,8 +51,9 @@ ASOF_OUTPUT_SCHEMA = StructType([
 ])
 
 #: Bucket count for the state key. 64 buckets keep every state-store
-#: partition busy at `scoped_shuffle_partitions(8)` while capping the
-#: per-micro-batch Python group-call count at 64 — per-USER keys pay one
+#: partition busy at 8 shuffle partitions (`session.scoped_conf`) while
+#: capping the per-micro-batch Python group-call count at 64 — per-USER
+#: keys pay one
 #: Arrow/state round-trip per touched user per batch (~15k calls/batch
 #: at sf1), which dominates the wall clock long before the fold itself
 #: does. At cluster scale this is the parallelism knob: set buckets to

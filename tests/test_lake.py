@@ -69,10 +69,10 @@ def test_cluster_rewrite_prunes_files(spark, tmp_path):
     t.create(_orders(spark), n_files=8)          # arrival order
     lo, hi = dt.datetime(1997, 1, 1), dt.datetime(1998, 1, 1)
     # arrival-ordered files: every file overlaps a one-year window
-    paths0, total0 = t.prune_files("o_orderdate", lo, hi, version=0)
+    paths0, total0 = t.prune_files({"o_orderdate": (lo, hi)}, version=0)
     assert len(paths0) == total0 == 8
     t.cluster(by=["o_orderdate"], n_files=8)
-    paths1, total1 = t.prune_files("o_orderdate", lo, hi)
+    paths1, total1 = t.prune_files({"o_orderdate": (lo, hi)})
     assert total1 == 8
     assert len(paths1) < total1, "clustered stats must prune files"
     # pruned read + residual filter == full read + filter, exactly
@@ -80,7 +80,7 @@ def test_cluster_rewrite_prunes_files(spark, tmp_path):
            (F.col("o_orderdate") < F.lit(hi))
     full = sorted(map(tuple, t.read().filter(pred).collect()))
     pruned = sorted(map(tuple,
-                        t.read_pruned("o_orderdate", lo, hi)
+                        t.read_pruned({"o_orderdate": (lo, hi)})
                         .filter(pred).collect()))
     assert pruned == full and len(full) > 0
 
@@ -164,17 +164,17 @@ def test_zorder_box_prunes_multiplicatively(spark, tmp_path):
 
     lo_k, hi_k = (mx * 2) // 10, (mx * 3) // 10
     lo_d, hi_d = dt.datetime(1995, 7, 1), dt.datetime(1996, 7, 1)
-    k_files, total = t.prune_files("o_custkey", lo_k, hi_k)
-    d_files, _ = t.prune_files("o_orderdate", lo_d, hi_d)
-    box_files, _ = t.prune_files_box({"o_custkey": (lo_k, hi_k),
-                                      "o_orderdate": (lo_d, hi_d)})
+    k_files, total = t.prune_files({"o_custkey": (lo_k, hi_k)})
+    d_files, _ = t.prune_files({"o_orderdate": (lo_d, hi_d)})
+    box_files, _ = t.prune_files({"o_custkey": (lo_k, hi_k),
+                                  "o_orderdate": (lo_d, hi_d)})
     assert len(k_files) < total and len(d_files) < total, \
         "each dimension alone must prune (locality on both columns)"
     assert len(box_files) < min(len(k_files), len(d_files)), \
         "the 2-D box must prune multiplicatively, not min-of-1-D"
 
-    pruned = (t.read_pruned_box({"o_custkey": (lo_k, hi_k),
-                                 "o_orderdate": (lo_d, hi_d)})
+    pruned = (t.read_pruned({"o_custkey": (lo_k, hi_k),
+                             "o_orderdate": (lo_d, hi_d)})
               .filter((F.col("o_custkey") >= lo_k)
                       & (F.col("o_custkey") <= hi_k)
                       & (F.col("o_orderdate") >= F.lit(lo_d))

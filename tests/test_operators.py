@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from event_streaming_bnpl_demo_spark.operators.asof import asof_join
 from event_streaming_bnpl_demo_spark.operators.multimodal import (
-    extract_features, media_from_documents, resize_media, sample_frames)
+    extract_features, media_from_documents, sample_frames)
 from event_streaming_bnpl_demo_spark.plans import all_queries
 from event_streaming_bnpl_demo_spark.plans.queries_core import \
     join_asof_candidate
@@ -91,18 +91,6 @@ def test_multimodal_unknown_modality_stubbed(spark):
     assert all(not r["decode_ok"] and r["feature"] is None for r in bad)
 
 
-def test_multimodal_resize(spark):
-    docs = load_table(spark, SF_SMOKE, "documents").limit(20)
-    media = media_from_documents(docs)
-    rows = resize_media(media, width=8, height=4).collect()
-    assert len(rows) == 20
-    assert all(r["resize_ok"] and r["byte_len"] == 32 for r in rows)
-    assert all(len(bytes(r["payload"])) == 32 for r in rows)
-    # undecodable payload (text bytes labeled video) flagged, not crashed
-    vid = resize_media(media.withColumn("modality", F.lit("video"))).collect()
-    assert all(not r["resize_ok"] and r["payload"] is None for r in vid)
-
-
 def test_multimodal_frame_sampling(spark):
     docs = load_table(spark, SF_SMOKE, "documents").limit(10)
     media = media_from_documents(docs)
@@ -151,7 +139,7 @@ def test_ppm_codec_roundtrip_and_resize():
     import pytest
 
     from event_streaming_bnpl_demo_spark.operators.multimodal import (
-        _decode_ppm, _encode_ppm, _nn_resize)
+        _decode_ppm, _encode_ppm)
 
     rng = np.random.RandomState(11)
     arr = rng.randint(0, 256, size=(12, 20, 3)).astype(np.uint8)
@@ -167,10 +155,6 @@ def test_ppm_codec_roundtrip_and_resize():
     w2, h2, small = _decode_ppm(_encode_ppm(arr[::2, ::2]))
     assert (w2, h2) == (10, 6)
     assert np.array_equal(small, arr[::2, ::2])
-    # arbitrary-size NN resize: index-mapped gather, no interpolation
-    up = _nn_resize(arr, 40, 24)
-    assert up.shape == (24, 40, 3)
-    assert np.array_equal(up[::2, ::2], arr)
 
 
 def test_image_feature_closed_forms(spark):
@@ -242,8 +226,7 @@ def test_video_feature_closed_forms(spark):
     PGMs decode to means averaging base + step*(k-1) + (W-1)/2 — all
     verified from DEMUXED bytes through the full mapInPandas path."""
     from event_streaming_bnpl_demo_spark.operators.multimodal import (
-        frame_luma_stats, resize_media, sample_frames, synth_video_media,
-        video_features)
+        frame_luma_stats, sample_frames, synth_video_media, video_features)
 
     docs = load_table(spark, SF_SMOKE, "documents").limit(40)
     media = synth_video_media(docs)
@@ -276,12 +259,6 @@ def test_video_feature_closed_forms(spark):
             assert r["frame_idx"] % 2 == 0
             assert r["frame_mean"] == (base + step * r["frame_idx"]
                                        + (w_exp - 1) / 2)
-    # spatial NN resize produces a valid, re-demuxable Y4M per asset
-    rs = resize_media(media, width=8, height=4)
-    rs_feats = {r["asset_id"]: r for r in video_features(rs).collect()}
-    for aid, r in rs_feats.items():
-        assert (r["width"], r["height"]) == (8, 4)
-        assert r["n_frames"] == 2 + aid % 7
 
 
 def test_change_notifier_fires_per_batch(spark, tmp_path):
@@ -352,25 +329,6 @@ def test_connected_components_round_limit(spark):
         [(i, i + 1) for i in range(n - 1)], ["src", "dst"])
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(nodes, edges, max_rounds=2)
-
-
-def test_checksum_media_arrow_tier(spark):
-    """mapInArrow checksum pass: CRCs computed from raw Arrow memory
-    match a driver-side reference over the same payloads."""
-    import zlib
-
-    from event_streaming_bnpl_demo_spark.operators.multimodal import (
-        checksum_media, media_from_documents)
-    from event_streaming_bnpl_demo_spark.sources import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(50)
-    media = media_from_documents(docs)
-    got = {r["asset_id"]: (r["byte_len"], r["crc32"])
-           for r in checksum_media(media).collect()}
-    want = {r["doc_id"]: (len(r["text"].encode()),
-                          zlib.crc32(r["text"].encode()))
-            for r in docs.collect()}
-    assert got == want
 
 
 def test_jaccard_df_cap_bounds_hot_shingle_pairs(spark):

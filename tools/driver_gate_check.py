@@ -1,11 +1,11 @@
 #!/usr/bin/env python
 """Replicate the driver's sf0.01 oracle gate locally over a chosen set
-of catalog queries (default: both priority tiers — the names the next
-driver round will check first). The repo's pytest parity suite runs at
-sf0.001 for speed; this harness re-runs the SAME strict compare at the
-driver's sf so data-dependent divergences (rounding at different
-ratios, empty groups, bucket boundaries) surface before the round
-closes.
+of catalog queries (default: the oracled names with no green row in any
+CORRECTNESS_r*.json — the names the next driver round will check
+first). The repo's pytest parity suite runs at sf0.001 for speed; this
+harness re-runs the SAME strict compare at the driver's sf so
+data-dependent divergences (rounding at different ratios, empty groups,
+bucket boundaries) surface before the round closes.
 
 Usage: python tools/driver_gate_check.py [--sf /root/testdata/sf0.01]
            [--names a b c | --all]
@@ -26,7 +26,7 @@ def main() -> None:
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--names", nargs="*", default=None)
     ap.add_argument("--all", action="store_true",
-                    help="check every oracled query, not just the tiers")
+                    help="check every oracled query, not just the unchecked ones")
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "16"))
     ap.add_argument("--resume", default=None, metavar="LOG",
                     help="skip names already finished (OK or FAIL line) "
@@ -53,10 +53,10 @@ def main() -> None:
         names = [n for n, q in catalog.items() if q.oracle]
     else:
         # default: every oracled name without a driver-green row —
-        # the priority tiers plus the `fresh` (never-checked) names,
-        # i.e. exactly what the next driver round will check first
+        # exactly what the next driver round will check first
+        last = cat._last_checked_rounds()
         names = [n for n, q in catalog.items()
-                 if q.oracle and n not in cat._DRIVER_CHECKED]
+                 if q.oracle and n not in last]
 
     if args.resume:
         done = set()
