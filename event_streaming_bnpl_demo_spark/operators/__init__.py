@@ -11,4 +11,3 @@ oracle); their building blocks live in :mod:`..functions`.
 """
 
 from .asof import asof_join                                   # noqa: F401
-from .multimodal import (extract_features, media_from_documents)  # noqa: F401

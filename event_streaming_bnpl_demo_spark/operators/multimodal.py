@@ -24,68 +24,16 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 #: Canonical multimodal table schema: one row per asset.
 MEDIA_SCHEMA = T.StructType([
     T.StructField("asset_id", T.LongType(), False),
-    T.StructField("modality", T.StringType(), False),   # image|audio|video|text
+    T.StructField("modality", T.StringType(), False),   # image|audio|video
     T.StructField("payload", T.BinaryType(), True),
     T.StructField("byte_len", T.LongType(), True),
     T.StructField("sha256", T.StringType(), True),
 ])
-
-FEATURE_SCHEMA = T.StructType([
-    T.StructField("asset_id", T.LongType(), False),
-    T.StructField("modality", T.StringType(), False),
-    T.StructField("byte_len", T.LongType(), True),
-    T.StructField("feature", T.ArrayType(T.FloatType()), True),
-    T.StructField("decode_ok", T.BooleanType(), False),
-])
-
-
-def media_from_documents(docs: DataFrame) -> DataFrame:
-    """Build a MEDIA_SCHEMA DataFrame from the documents table (text
-    payloads stand in for binary assets in this environment)."""
-    payload = F.encode("text", "UTF-8")
-    return docs.select(
-        F.col("doc_id").alias("asset_id"),
-        F.lit("text").alias("modality"),
-        payload.alias("payload"),
-        F.octet_length(payload).cast("bigint").alias("byte_len"),
-        F.sha2(payload, 256).alias("sha256"),
-    )
-
-
-def _decode_payload(payload: bytes, modality: str) -> list[float]:
-    """Decode dispatch. ``text`` produces a deterministic fake feature
-    (first 8 sha256 bytes scaled to [0,1)) so the Arrow round-trip is
-    exercised; ``image`` decodes REAL PPM bytes (see the image tier
-    below) into an 8-dim geometry/color feature; ``video`` demuxes REAL
-    Y4M bytes (see the video tier below) into a geometry/luma/motion
-    feature; ``audio`` raises here because it has its own dedicated
-    feature schema below.
-    """
-    if modality == "image":
-        w, h, arr = _decode_ppm(payload)
-        return [float(w), float(h), float(w * h),
-                float(arr[..., 0].mean()), float(arr[..., 1].mean()),
-                float(arr[..., 2].mean()),
-                float(arr.max()), float(arr.min())]
-    if modality == "video":
-        w, h, fps, frames = _decode_y4m(payload)
-        deltas = _frame_motion(frames)
-        return [float(w), float(h), float(len(frames)), float(fps),
-                float(frames.mean()), deltas,
-                float(frames.max()), float(frames.min())]
-    if modality != "text":
-        raise NotImplementedError(
-            f"decode for modality {modality!r} needs codec libs not present "
-            "in this environment")
-    digest = hashlib.sha256(payload).digest()
-    return [b / 256.0 for b in digest[:8]]
-
 
 FRAME_SCHEMA = T.StructType([
     T.StructField("asset_id", T.LongType(), False),
@@ -102,36 +50,24 @@ def sample_frames(media: DataFrame, every_n: int = 2,
     payloads are REALLY demuxed: the Y4M container is parsed, every
     ``every_n``-th frame's luma plane is extracted and re-encoded as a
     standalone, decodable PGM (P5) image — video frames become image
-    rows, the cross-modality hand-off a real pipeline needs. ``text``
-    payloads keep the deterministic byte-slice fake (every_n*256-byte
-    chunks) so the plumbing is exercised for schemaless blobs too.
-    Scale: expansion happens inside the Arrow batch, and ``max_frames``
-    bounds the fan-out so a pathological asset cannot blow up a task."""
+    rows, the cross-modality hand-off a real pipeline needs. Other
+    modalities have no frame notion and emit no rows. Scale: expansion
+    happens inside the Arrow batch, and ``max_frames`` bounds the
+    fan-out so a pathological asset cannot blow up a task."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, frames = [], [], []
             for asset_id, payload, modality in zip(
                     pdf["asset_id"], pdf["payload"], pdf["modality"]):
-                data = bytes(payload)
-                if modality == "video":
-                    _, _, _, planes = _decode_y4m(data)
-                    for i in range(0, min(len(planes),
-                                          max_frames * every_n), every_n):
-                        ids.append(asset_id)
-                        idxs.append(i)
-                        frames.append(_encode_pgm(planes[i]))
+                if modality != "video":
                     continue
-                if modality != "text":   # no frame notion for image/audio
-                    continue
-                step = every_n * 256
-                for i in range(0, min(len(data) // step + 1, max_frames)):
-                    chunk = data[i * step:(i + 1) * step]
-                    if not chunk:
-                        break
+                _, _, _, planes = _decode_y4m(bytes(payload))
+                for i in range(0, min(len(planes),
+                                      max_frames * every_n), every_n):
                     ids.append(asset_id)
                     idxs.append(i)
-                    frames.append(chunk)
+                    frames.append(_encode_pgm(planes[i]))
             yield pd.DataFrame({
                 "asset_id": pd.Series(ids, dtype="int64"),
                 "frame_idx": pd.Series(idxs, dtype="int32"),
@@ -141,31 +77,6 @@ def sample_frames(media: DataFrame, every_n: int = 2,
             })
 
     return media.mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-def extract_features(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
-    """Decode + featurize via mapInPandas (Arrow-batched; the only
-    Python hop in the multimodal path)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats, ok = [], []
-            for payload, modality in zip(pdf["payload"], pdf["modality"]):
-                try:
-                    feats.append(_decode_payload(bytes(payload), modality))
-                    ok.append(True)
-                except (NotImplementedError, ValueError):
-                    feats.append(None)
-                    ok.append(False)
-            yield pd.DataFrame({
-                "asset_id": pdf["asset_id"],
-                "modality": pdf["modality"],
-                "byte_len": pdf["byte_len"],
-                "feature": feats,
-                "decode_ok": ok,
-            })
-
-    return media.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
 # --------------------------------------------------------------------------

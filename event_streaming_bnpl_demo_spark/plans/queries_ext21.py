@@ -4,7 +4,8 @@ the queries an engine runs ABOUT its data before it runs queries ON it:
 - ``join_bucketed_colocated`` — the deploy-time layout win made
   catalog-visible: orders ⋈ lineitem over CO-BUCKETED tables, the join
   Catalyst plans with NO Exchange on either side (the plan shape is
-  pinned in ``tests/test_plans.py::test_bucketed_join_is_shuffle_free``;
+  pinned in
+  ``tests/test_ext21_semantics.py::test_bucketed_catalog_join_is_shuffle_free``;
   this entry proves the rows through the driver's oracle gate).
 - ``etl_range_boundaries`` — exact range-partitioner boundary planning:
   the k-1 split values a balanced range shuffle/sort would use.

@@ -19,7 +19,7 @@ key hash, co-locate by key equality.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(df: DataFrame, table: str, key: str, buckets: int = 16,
@@ -36,16 +36,3 @@ def write_bucketed(df: DataFrame, table: str, key: str, buckets: int = 16,
         w = w.option("path", path)
     w.saveAsTable(table)
 
-
-def cobucket_pair(spark: SparkSession, left: DataFrame, right: DataFrame,
-                  left_key: str, right_key: str, prefix: str,
-                  buckets: int = 16,
-                  base_path: str | None = None) -> tuple[DataFrame, DataFrame]:
-    """Bucket two tables on their join keys with one shared bucket
-    count and return the catalog-backed frames — joining the results on
-    ``left_key == right_key`` is shuffle-free."""
-    lp = f"{base_path}/{prefix}_l" if base_path else None
-    rp = f"{base_path}/{prefix}_r" if base_path else None
-    write_bucketed(left, f"{prefix}_l", left_key, buckets, path=lp)
-    write_bucketed(right, f"{prefix}_r", right_key, buckets, path=rp)
-    return spark.table(f"{prefix}_l"), spark.table(f"{prefix}_r")

@@ -10,15 +10,18 @@ iterator restart loss, consumer/consumer.go:64), with:
   (SURVEY §4.2: a planning decision in our engine, not a second
   streaming hop) — promises are visible one poll-cycle earlier than
   the reference;
-- projections maintained in foreachBatch by folding each batch's
-  partial aggregate into the stored state (transforms.merge_promises /
-  merge_bills_state) — O(state + batch) per batch. Every combiner is
-  associative, commutative and idempotent, so replayed batches and
-  duplicate deliveries fold to the state a recompute over the whole
-  log would give (tests/test_bnpl_pipeline.py checks this against
-  transforms.project_*), and commits the merged state as a whole-table
-  rewrite. At 100 TB the same fold becomes a keyed MERGE that rewrites
-  only the touched files; the transform layer is unchanged.
+- projections maintained in foreachBatch by one keyed combine per
+  projection: each batch commits ``combine(stored ∪ rows(batch))``
+  (transforms.combine_promises / combine_bills) — O(state + batch) per
+  batch, one shuffle per projection. The combine is the batch oracle's
+  own (``project_* = finalize(combine(rows(log)))``), and every combiner
+  is associative, commutative and idempotent, so replayed batches and
+  duplicate deliveries fold to the state a recompute over the whole log
+  would give (tests/test_bnpl_pipeline.py checks this; the law itself is
+  a property test in tests/test_properties.py). The combined state is
+  committed as a whole-table rewrite. At 100 TB the same fold becomes a
+  keyed MERGE that rewrites only the touched files; the transform layer
+  is unchanged.
 
 Delivery: file source + checkpoint gives exactly-once source progress;
 the archive id is a content hash and projections dedup on natural keys,
@@ -53,8 +56,8 @@ class BnplPipeline:
 
     Layout under ``out_dir``: ``events_log/`` (the append-only archive),
     ``payment_promises/`` (the folded promises projection),
-    ``_member_bills_state/`` (the folded per-bill partial aggregate,
-    finalized into member_bills by :meth:`bills`), ``_checkpoint/``.
+    ``_member_bills_state/`` (the folded per-bill state, finalized into
+    member_bills by :meth:`bills`), ``_checkpoint/``.
     Readers resolve a table's latest manifest, so a DataFrame keeps
     reading its snapshot while later batches commit.
     """
@@ -124,32 +127,30 @@ class BnplPipeline:
         # archive + the two projection folds touch disjoint directories
         # and share no ordering, so they run as CONCURRENT Spark jobs:
         # per-batch latency is the max of the three job chains instead
-        # of their sum. The shared inputs are persisted for the fan-out:
-        # unpersisted, each job re-ran the source read and JSON parse,
-        # and both folds re-ran the cascade derivation and content-hash
-        # dedup. The parsed source is the cached handle, not its
-        # flattened union: each branch of the union scans its input, so
-        # filling a cache of the union would read and parse every file
-        # twice and make numInputRows count each line twice. Both
-        # handles unpersist before the batch returns.
+        # of their sum. The parsed source is persisted for the fan-out:
+        # unpersisted, each job re-ran the source read and JSON parse.
+        # It is the cached handle, not its flattened union: each branch
+        # of the union scans its input, so filling a cache of the union
+        # would read and parse every file twice and make numInputRows
+        # count each line twice. The folds take the batch as delivered:
+        # duplicates cost no dedup pass, since every combiner ignores
+        # them. The handle unpersists before the batch returns.
         from concurrent.futures import ThreadPoolExecutor
 
         source = micro_batch.persist()
         events = self._flatten(source)
-        batch = events.dropDuplicates(["event_data"]).persist()
         try:
             with ThreadPoolExecutor(max_workers=3) as ex:
                 futs = [ex.submit(self._archive, events),
                         ex.submit(self._fold, self.promises_table,
-                                  transforms.project_promises(batch),
-                                  transforms.merge_promises),
+                                  transforms.promise_rows(events),
+                                  transforms.combine_promises),
                         ex.submit(self._fold, self.bills_state_table,
-                                  transforms.bills_state(batch),
-                                  transforms.merge_bills_state)]
+                                  transforms.bill_rows(events),
+                                  transforms.combine_bills)]
                 for f in futs:
                     f.result()
         finally:
-            batch.unpersist()
             source.unpersist()
 
     def _archive(self, events: DataFrame) -> None:
@@ -158,13 +159,13 @@ class BnplPipeline:
         self.log_table.expire(keep_last=_KEEP_SNAPSHOTS)
 
     @staticmethod
-    def _fold(table: LakeTable, delta: DataFrame, merge) -> None:
-        """Fold a batch's partial aggregate into a projection's state and
-        commit the merged state as a whole-table rewrite. Bills are
-        DERIVED from their state table at read time (:meth:`bills`)."""
+    def _fold(table: LakeTable, rows: DataFrame, combine) -> None:
+        """Combine a batch's rows with a projection's stored state and
+        commit the result as a whole-table rewrite. Bills are DERIVED
+        from their state table at read time (:meth:`bills`)."""
         if table.versions():
-            delta = merge(table.read(), delta)
-        table.rewrite(delta)
+            rows = table.read().unionByName(rows)
+        table.rewrite(combine(rows))
         table.expire(keep_last=_KEEP_SNAPSHOTS)
 
     def read_log(self) -> DataFrame:

@@ -4,13 +4,19 @@ Streaming (one StructType registry, one transform library — SURVEY.md
 no side effects, so the identical code runs under ``spark.read`` and
 ``spark.readStream``.
 
+Each projection is a pair: ``*_rows(events)``, a per-event ``select``
+into the stored state's schema, and ``combine_*(rows)``, one keyed
+``groupBy(key).agg``. Every combiner is associative, commutative and
+idempotent, so the combine accepts raw rows and already-combined state
+alike: the batch oracle is ``combine(rows(log))`` and the pipeline's
+per-batch fold is ``combine(stored ∪ rows(batch))`` — the same function,
+so the two cannot disagree.
+
 Reference parity map:
 
 - :func:`derive_promises`   = R7 (consumer/consumer.go:123-144), with the
   amount-loss bug FIXED: the promise carries the purchase amount instead
   of the reference's hard-coded 3500 (consumer/consumer.go:195-198).
-  ``fidelity_3500=True`` reproduces the reference behavior for
-  comparison tests only.
 - :func:`project_promises`  = R8 (consumer/consumer.go:193-202)
 - :func:`project_bills`     = R9+R10 (consumer/consumer.go:205-220) as a
   last-event-wins recompute — idempotent under duplicate delivery,
@@ -22,7 +28,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def archive_rows(events: DataFrame) -> DataFrame:
@@ -33,11 +38,11 @@ def archive_rows(events: DataFrame) -> DataFrame:
         F.sha2(F.col("event_data"), 256).alias("id"),
         "event_type",
         "event_data",
-        F.coalesce("ingest_ts", F.current_timestamp()).alias("created_at"),
+        F.col("ingest_ts").alias("created_at"),
     )
 
 
-def derive_promises(events: DataFrame, fidelity_3500: bool = False) -> DataFrame:
+def derive_promises(events: DataFrame) -> DataFrame:
     """PurchaseCompletedEvent -> PaymentPromiseCreatedEvent (R7),
     flattened into the same micro-batch (no second stream hop — beats
     the reference's 2-poll-cycle cascade latency, BASELINE.md).
@@ -47,17 +52,15 @@ def derive_promises(events: DataFrame, fidelity_3500: bool = False) -> DataFrame
     deterministically from the order so replays are idempotent.
     """
     purchases = events.filter(F.col("event_type") == "PurchaseCompletedEvent")
-    amount = (F.lit(3500) if fidelity_3500 else F.col("amount")).cast("long")
     return purchases.select(
         F.lit("PaymentPromiseCreatedEvent").alias("event_type"),
         F.col("order_id"),
         F.col("user_id"),
-        amount.alias("amount"),
+        F.col("amount").cast("long").alias("amount"),
         F.md5(F.concat(F.lit("promise:"), F.col("order_id"))).alias("promise_id"),
         F.lit(None).cast("string").alias("bill_id"),
         F.date_format(
-            F.date_add(F.coalesce(F.col("ingest_ts").cast("date"),
-                                  F.current_date()), 30),
+            F.date_add(F.col("ingest_ts").cast("date"), 30),
             "yyyy-MM-dd").alias("due_date"),
         F.lit("月まとめ払い").alias("payment_mode"),
         F.lit(None).cast("string").alias("issued_date"),
@@ -66,23 +69,11 @@ def derive_promises(events: DataFrame, fidelity_3500: bool = False) -> DataFrame
     )
 
 
-def _first_seen_promise(rows: DataFrame) -> DataFrame:
-    """Keep one projected promise row per ``id``: the earliest
-    ``created_at``, ties broken by the remaining columns in order. Rows
-    stamped in one batch share a ``created_at``, so without the tie
-    break the winner would depend on how events fell into batches."""
-    order = ["created_at"] + [c for c in rows.columns
-                              if c not in ("id", "created_at")]
-    w = Window.partitionBy("id").orderBy(*order)
-    return (rows.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1).drop("rn"))
-
-
-def project_promises(events: DataFrame) -> DataFrame:
-    """payment_promises projection (readme:73-81): one row per promise
-    event; first-seen wins on redelivery (dedup on natural key)."""
+def promise_rows(events: DataFrame) -> DataFrame:
+    """One payment_promises row per PaymentPromiseCreatedEvent, in the
+    stored state's schema."""
     promises = events.filter(F.col("event_type") == "PaymentPromiseCreatedEvent")
-    return _first_seen_promise(promises.select(
+    return promises.select(
         F.col("promise_id").alias("id"),
         "order_id",
         "user_id",
@@ -90,14 +81,31 @@ def project_promises(events: DataFrame) -> DataFrame:
         F.to_date("due_date").alias("due_date"),
         "payment_mode",
         F.col("ingest_ts").alias("created_at"),
-    ))
+    )
 
 
-#: bills partial-aggregate columns and their merge combiners. Every
-#: combiner is associative, commutative, AND idempotent (max/min), so
-#: partial states fold in any grouping/order and re-folding a replayed
-#: batch is a no-op — this is what makes the pipeline's per-batch fold
-#: equal to project_bills over the whole log (tests/test_bnpl_pipeline).
+def combine_promises(rows: DataFrame) -> DataFrame:
+    """Keep one row per ``id``, first seen wins: the least ``created_at``,
+    ties broken by the remaining columns in order, NULLs first. Rows
+    stamped in one batch share a ``created_at``, so without the tie
+    break the winner would depend on how events fell into batches."""
+    order = ["created_at"] + [c for c in rows.columns
+                              if c not in ("id", "created_at")]
+    return (rows.groupBy("id").agg(F.min(F.struct(*order)).alias("_first"))
+            .select("id", "_first.*").select(rows.columns))
+
+
+def project_promises(events: DataFrame) -> DataFrame:
+    """payment_promises projection (readme:73-81): one row per promise
+    event; first-seen wins on redelivery (dedup on natural key)."""
+    return combine_promises(promise_rows(events))
+
+
+#: the bill state's columns and their combiners — the only place a bill
+#: combiner is named. Every combiner is associative, commutative AND
+#: idempotent (max/min), so one groupBy folds raw rows and stored state
+#: alike, in any grouping and order, and re-folding a replayed batch or
+#: a duplicate event is a no-op.
 _BILLS_COMBINE = {
     "promise_id": F.max, "user_id": F.max, "create_amount": F.max,
     "any_amount": F.max, "issued_date": F.max, "paid_date": F.max,
@@ -105,36 +113,32 @@ _BILLS_COMBINE = {
 }
 
 
-def bills_state(events: DataFrame) -> DataFrame:
-    """Partial-aggregate state per bill_id over any slice of the event
-    stream (a micro-batch or the whole log)."""
-    bills = events.filter(
-        F.col("event_type").isin("MemberBillCreatedEvent", "PaymentCompletedEvent"))
-    return bills.groupBy("bill_id").agg(
-        F.max(F.when(F.col("event_type") == "MemberBillCreatedEvent",
-                     F.col("promise_id"))).alias("promise_id"),
-        F.max("user_id").alias("user_id"),
-        F.max(F.when(F.col("event_type") == "MemberBillCreatedEvent",
-                     F.col("amount"))).alias("create_amount"),
-        F.max("amount").alias("any_amount"),
-        F.max(F.when(F.col("event_type") == "MemberBillCreatedEvent",
-                     F.col("issued_date"))).alias("issued_date"),
-        F.max(F.when(F.col("event_type") == "PaymentCompletedEvent",
-                     F.col("paid_date"))).alias("paid_date"),
-        F.min("ingest_ts").alias("created_at"),
+def bill_rows(events: DataFrame) -> DataFrame:
+    """One bill-state row per bill event: each column carries the event's
+    value where its type sets that column, else NULL, which max/min
+    ignore."""
+    created = F.col("event_type") == "MemberBillCreatedEvent"
+    paid = F.col("event_type") == "PaymentCompletedEvent"
+    return events.filter(created | paid).select(
+        "bill_id",
+        F.when(created, F.col("promise_id")).alias("promise_id"),
+        "user_id",
+        F.when(created, F.col("amount")).alias("create_amount"),
+        F.col("amount").alias("any_amount"),
+        F.when(created, F.col("issued_date")).alias("issued_date"),
+        F.when(paid, F.col("paid_date")).alias("paid_date"),
+        F.col("ingest_ts").alias("created_at"),
     )
 
 
-def merge_bills_state(existing: DataFrame, delta: DataFrame) -> DataFrame:
-    """Fold a new partial state into the accumulated one — the plain-
-    parquet analog of a keyed MERGE (at scale the same shape becomes a
-    Delta/Iceberg MERGE INTO; the combiners are unchanged)."""
-    return existing.unionByName(delta).groupBy("bill_id").agg(*[
+def combine_bills(rows: DataFrame) -> DataFrame:
+    """Fold bill rows — raw or already combined — to one per bill_id."""
+    return rows.groupBy("bill_id").agg(*[
         fn(c).alias(c) for c, fn in _BILLS_COMBINE.items()])
 
 
 def bills_from_state(agg: DataFrame) -> DataFrame:
-    """Finalize the member_bills projection from the partial state."""
+    """Finalize the member_bills projection from the bill state."""
     return agg.select(
         F.col("bill_id").alias("id"),
         "promise_id",
@@ -154,14 +158,7 @@ def project_bills(events: DataFrame) -> DataFrame:
     paid_date) on PaymentCompletedEvent — computed as a last-event-wins
     recompute per bill_id, which converges under duplicate delivery AND
     payment-before-bill reordering (FIXTURES.md A3 v1/v2)."""
-    return bills_from_state(bills_state(events))
-
-
-def merge_promises(existing: DataFrame, delta: DataFrame) -> DataFrame:
-    """Fold new first-seen promise rows into the accumulated projection:
-    argmin over a total order is associative, so re-picking the first
-    row per id over (existing ∪ delta) equals the full recompute."""
-    return _first_seen_promise(existing.unionByName(delta))
+    return bills_from_state(combine_bills(bill_rows(events)))
 
 
 def user_status(promises: DataFrame, bills: DataFrame, user_id: str

@@ -357,7 +357,7 @@ def test_reader_keeps_its_snapshot_across_a_batch(spark, tmp_path):
     assert len(_rows(pipe.promises())) == len(before) + 1
 
 
-def _purchase(uid: str, amount: int, ts: str) -> dict:
+def _purchase(uid: str, amount: int | None, ts: str) -> dict:
     return {"event_type": "PurchaseCompletedEvent",
             "order_id": f"order-{uid}", "user_id": uid,
             "amount": amount, "ingest_ts": ts}
@@ -402,23 +402,25 @@ def test_promise_tie_on_timestamp_is_deterministic(spark, tmp_path,
     """Two purchases of one order stamped with the same ``ingest_ts``
     derive two promises with one id and one ``created_at``. However they
     are delivered, the same row wins, and it is the one the batch oracle
-    picks over the archived log."""
+    picks over the archived log. A NULL amount sorts first, so u2's
+    NULL-amount purchase wins over its 200."""
     ts = "2026-01-01T00:00:00.000Z"
-    first, second = _purchase("u1", 100, ts), _purchase("u1", 200, ts)
+    first = [_purchase("u1", 100, ts), _purchase("u2", None, ts)]
+    second = [_purchase("u1", 200, ts), _purchase("u2", 200, ts)]
     in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
     pipe = BnplPipeline(spark, in_dir, out_dir)
     if delivery == "one_file":
-        write_events(in_dir, [first, second])
+        write_events(in_dir, first + second)
         pipe.run_stream(available_now=True)
     else:
         pair = [first, second]
         if delivery == "two_passes_reversed":
             pair.reverse()
-        for i, e in enumerate(pair):
-            write_events(in_dir, [e], f"e{i}.jsonl")
+        for i, events in enumerate(pair):
+            write_events(in_dir, events, f"e{i}.jsonl")
             pipe.run_stream(available_now=True)
-    rows = pipe.promises().collect()
-    assert len(rows) == 1 and rows[0]["amount"] == 100
+    got = {r["user_id"]: r["amount"] for r in pipe.promises().collect()}
+    assert got == {"u1": 100, "u2": None}
     assert_matches_log(pipe)
 
 

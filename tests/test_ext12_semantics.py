@@ -26,7 +26,7 @@ def _cell(v: int) -> int:
 
 @given(st.integers(-90_000, 90_000), st.integers(-180_000, 180_000),
        st.integers(-90_000, 90_000), st.integers(-180_000, 180_000))
-@settings(max_examples=500, deadline=None)
+@settings(max_examples=500)
 def test_grid_blocking_is_lossless(ax, ay, bx, by):
     d2 = (ax - bx) ** 2 + (ay - by) ** 2
     if d2 <= R * R:
@@ -107,7 +107,7 @@ def duck():
                max_size=12),
        st.text(alphabet=st.characters(min_codepoint=32, max_codepoint=126),
                max_size=12))
-@settings(max_examples=300, deadline=None)
+@settings(max_examples=300)
 def test_jaro_winkler_matches_duckdb(ax, bx):
     con = duckdb.connect()
     try:

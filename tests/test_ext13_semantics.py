@@ -31,7 +31,7 @@ def _holt_py(vals: list[int]) -> tuple[int, int]:
 
 
 @given(st.lists(st.integers(0, 10**12), min_size=1, max_size=30))
-@settings(max_examples=60, deadline=None)
+@settings(max_examples=60)
 def test_holt_fold_matches_python_reference(spark, vals):
     arr = ", ".join(f"{v}L" for v in vals)
     row = spark.sql(f"""
@@ -81,7 +81,7 @@ def _kcore_py(edges: set[tuple[int, int]], k: int) -> dict[int, int]:
                .map(lambda p: (min(p), max(p)))
                .filter(lambda p: p[0] != p[1]),
                max_size=40))
-@settings(max_examples=40, deadline=None)
+@settings(max_examples=40)
 def test_kcore_peel_fixpoint_properties(edges):
     core = _kcore_py(edges, 3)
     # every surviving node has degree >= k within the core

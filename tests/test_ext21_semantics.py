@@ -4,8 +4,8 @@ GUARANTEE:
 
 - The catalog-registered bucketed join must plan SortMergeJoin with no
   Exchange on either input when broadcast is off — the zero-shuffle
-  promise the bucketed layout exists for, now pinned on the exact plan
-  the driver runs (not just the ``cobucket_pair`` helper).
+  promise the bucketed layout exists for, pinned on the exact plan the
+  driver runs.
 - Range boundaries must actually BALANCE: routing every row through
   the published boundaries lands ceil(i*n/k)-conformant bucket sizes
   (the property a range partitioner buys with them).

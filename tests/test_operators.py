@@ -7,8 +7,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from event_streaming_bnpl_demo_spark.operators.asof import asof_join
-from event_streaming_bnpl_demo_spark.operators.multimodal import (
-    extract_features, media_from_documents, sample_frames)
 from event_streaming_bnpl_demo_spark.plans import all_queries
 from event_streaming_bnpl_demo_spark.plans.queries_core import \
     join_asof_candidate
@@ -62,49 +60,6 @@ def test_asof_tolerance_and_strict(spark):
                        right_cols=["vid"])
     assert (tol.filter(F.col("vid").isNotNull()).count()
             <= no_tol.filter(F.col("vid").isNotNull()).count())
-
-
-def test_multimodal_feature_extraction(spark):
-    docs = load_table(spark, SF_SMOKE, "documents").limit(100)
-    media = media_from_documents(docs)
-    feats = extract_features(media)
-    rows = feats.collect()
-    assert len(rows) == 100
-    assert all(r["decode_ok"] for r in rows)
-    assert all(len(r["feature"]) == 8 for r in rows)
-    assert all(0.0 <= x < 1.0 for r in rows for x in r["feature"])
-    # deterministic: same payload -> same feature
-    again = {r["asset_id"]: r["feature"] for r in extract_features(media).collect()}
-    assert all(again[r["asset_id"]] == r["feature"] for r in rows)
-
-
-def test_multimodal_unknown_modality_stubbed(spark):
-    docs = load_table(spark, SF_SMOKE, "documents").limit(5)
-    media = media_from_documents(docs).withColumn("modality", F.lit("video"))
-    rows = extract_features(media).collect()
-    # video decode needs ffmpeg-class libs absent here -> flagged, not crashed
-    assert all(not r["decode_ok"] and r["feature"] is None for r in rows)
-    # image decode is REAL now: text bytes are not a PPM container ->
-    # undecodable payloads are flagged, not crashed
-    bad = extract_features(
-        media.withColumn("modality", F.lit("image"))).collect()
-    assert all(not r["decode_ok"] and r["feature"] is None for r in bad)
-
-
-def test_multimodal_frame_sampling(spark):
-    docs = load_table(spark, SF_SMOKE, "documents").limit(10)
-    media = media_from_documents(docs)
-    frames = sample_frames(media, every_n=1, max_frames=3).collect()
-    by_asset = {}
-    for r in frames:
-        by_asset.setdefault(r["asset_id"], []).append(r)
-    # every sampled asset emits 1..max_frames ordered frames of <=256 B
-    assert by_asset
-    for rows in by_asset.values():
-        idxs = sorted(r["frame_idx"] for r in rows)
-        assert idxs == list(range(len(idxs)))
-        assert 1 <= len(idxs) <= 3
-        assert all(0 < r["frame_len"] <= 256 for r in rows)
 
 
 def test_wav_codec_roundtrip_and_resample():

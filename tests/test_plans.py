@@ -73,45 +73,6 @@ def test_q5_star_join_broadcasts_dims(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Co-bucketed tables joined on the bucket key must plan a
-    SortMergeJoin with NO Exchange on either side — the deploy-time
-    layout DESIGN.md promises for fact⋈fact joins at 100 TB."""
-    import contextlib
-    import io
-
-    from pyspark.sql import functions as F
-
-    from event_streaming_bnpl_demo_spark.sources import (cobucket_pair,
-                                                         load_table)
-
-    o = load_table(spark, SF_SMOKE, "orders")
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    bo, bl = cobucket_pair(spark, o, li, "o_orderkey", "l_orderkey",
-                           "bkt_test", buckets=8,
-                           base_path=str(tmp_path / "wh"))
-    # force the join shape bucketing is for (no broadcast escape hatch)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bl.join(bo, bl.l_orderkey == bo.o_orderkey).groupBy(
-            "o_orderpriority").agg(F.count(F.lit(1)).alias("n"))
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        assert "SortMergeJoin" in plan
-        join_section = plan.split("HashAggregate")[0]
-        assert "Exchange" not in join_section, join_section
-        # and it still computes the right thing
-        n = joined.agg(F.sum("n")).collect()[0][0]
-        assert n == li.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bkt_test_l")
-        spark.sql("DROP TABLE IF EXISTS bkt_test_r")
-
-
 def test_udf_tiers_plan_as_declared(spark):
     """The pandas_udf query must execute as ArrowEvalPython (vectorized
     Arrow batches); the row-at-a-time exhibit as BatchEvalPython

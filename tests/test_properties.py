@@ -39,7 +39,7 @@ events_strategy = st.lists(
 ])
 
 
-def _project(spark, events):
+def _envelope(spark, events):
     import datetime as dt
 
     rows_in = []
@@ -48,13 +48,16 @@ def _project(spark, events):
         r["ingest_ts"] = dt.datetime.fromisoformat(
             e["ingest_ts"].replace("Z", "+00:00"))
         rows_in.append(r)
-    df = spark.createDataFrame(rows_in, schema=BNPL_ENVELOPE)
-    rows = transforms.project_bills(df).collect()
+    return spark.createDataFrame(rows_in, schema=BNPL_ENVELOPE)
+
+
+def _project(spark, events):
+    rows = transforms.project_bills(_envelope(spark, events)).collect()
     return sorted((r["id"], r["status"], str(r["paid_date"]),
                    r["amount"], r["promise_id"]) for r in rows)
 
 
-@settings(max_examples=12, deadline=None,
+@settings(max_examples=12,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(events=events_strategy, seed=st.randoms(use_true_random=False))
 def test_bills_projection_order_and_duplicate_invariant(spark, events, seed):
@@ -62,6 +65,67 @@ def test_bills_projection_order_and_duplicate_invariant(spark, events, seed):
     shuffled = list(events) + [seed.choice(events)]  # duplicate one
     seed.shuffle(shuffled)
     assert _project(spark, shuffled) == baseline
+
+
+_AMOUNTS = st.sampled_from([None, 100, 200])
+#: two timestamps, so events often tie on ``ingest_ts``
+_TS = st.sampled_from(["2026-01-01T00:00:00Z", "2026-01-01T00:00:01Z"])
+
+_PROMISE_EVENT = st.fixed_dictionaries({
+    "event_type": st.just("PaymentPromiseCreatedEvent"),
+    "promise_id": st.sampled_from(["p1", "p2"]),
+    "order_id": st.sampled_from(["o1", "o2"]),
+    "user_id": st.sampled_from(["u1", "u2"]),
+    "amount": _AMOUNTS,
+    "due_date": st.sampled_from(["2026-01-31", "2026-02-28"]),
+    "payment_mode": st.just("月まとめ払い"),
+    "ingest_ts": _TS,
+})
+
+_BILL_EVENT = st.fixed_dictionaries({
+    "event_type": st.sampled_from(["MemberBillCreatedEvent",
+                                   "PaymentCompletedEvent"]),
+    "bill_id": st.sampled_from(["b1", "b2"]),
+    "promise_id": st.sampled_from(["p1", "p2"]),
+    "user_id": st.sampled_from(["u1", "u2"]),
+    "amount": _AMOUNTS,
+    "issued_date": st.sampled_from(["2026-01-01", "2026-01-02"]),
+    "paid_date": st.sampled_from(["2026-01-03", "2026-01-04"]),
+    "ingest_ts": _TS,
+})
+
+
+@st.composite
+def _split_log(draw):
+    """A log of promise and bill events with one exact redelivery, cut
+    at any point into an earlier and a later slice."""
+    events = draw(st.lists(st.one_of(_PROMISE_EVENT, _BILL_EVENT),
+                           min_size=1, max_size=8))
+    events.insert(draw(st.integers(0, len(events))),
+                  draw(st.sampled_from(events)))
+    cut = draw(st.integers(0, len(events)))
+    return events[:cut], events[cut:]
+
+
+@settings(max_examples=10,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(split=_split_log())
+def test_fold_of_stored_state_equals_combine_of_whole_log(spark, split):
+    """The law the pipeline's fold rests on, for both projections:
+    combining the stored state of ``a`` with the raw rows of ``b`` gives
+    what one combine over the rows of ``a + b`` gives — and the state
+    keeps the rows' schema, so it can be stored and combined again."""
+    a, b = _envelope(spark, split[0]), _envelope(spark, split[1])
+    for rows, combine in ((transforms.promise_rows,
+                           transforms.combine_promises),
+                          (transforms.bill_rows, transforms.combine_bills)):
+        state = combine(rows(a))
+        assert ([(f.name, f.dataType) for f in state.schema]
+                == [(f.name, f.dataType) for f in rows(a).schema])
+        folded = combine(state.unionByName(rows(b)))
+        whole = combine(rows(a.unionByName(b)))
+        assert (sorted(folded.collect(), key=repr)
+                == sorted(whole.collect(), key=repr))
 
 
 # ---------------------------------------------------------------------------
@@ -83,7 +147,7 @@ def _ts_df(spark, rows, ts_name, val_name):
         data, f"user_id long, {ts_name} timestamp, {val_name} long")
 
 
-@settings(max_examples=10, deadline=None,
+@settings(max_examples=10,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(left=_JOIN_ROWS, right=_JOIN_ROWS)
 def test_interval_join_matches_bruteforce(spark, left, right):
@@ -105,7 +169,7 @@ def test_interval_join_matches_bruteforce(spark, left, right):
     assert got == want
 
 
-@settings(max_examples=10, deadline=None,
+@settings(max_examples=10,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(left=_JOIN_ROWS, right=_JOIN_ROWS)
 def test_asof_join_matches_bruteforce(spark, left, right):
@@ -136,7 +200,7 @@ def test_asof_join_matches_bruteforce(spark, left, right):
     assert got == sorted(want, key=key)
 
 
-@settings(max_examples=8, deadline=None,
+@settings(max_examples=8,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(edges=st.lists(st.tuples(st.integers(0, 12), st.integers(0, 12)),
                       min_size=0, max_size=15))
@@ -240,7 +304,7 @@ _MV_ROWS = st.lists(
 )
 
 
-@settings(max_examples=15, deadline=None,
+@settings(max_examples=15,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(rows=_MV_ROWS, cut=st.integers(0, 40))
 def test_mv_partial_merge_invariant(spark, rows, cut):
@@ -281,7 +345,7 @@ mad_frames = st.lists(
 )
 
 
-@settings(max_examples=12, deadline=None,
+@settings(max_examples=12,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(rows=mad_frames)
 def test_mad_outliers_laws(spark, rows):
@@ -320,7 +384,7 @@ quota_frames = st.lists(
 )
 
 
-@settings(max_examples=12, deadline=None,
+@settings(max_examples=12,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(counts=quota_frames, budget=st.integers(min_value=0, max_value=5_000))
 def test_temperature_quota_laws(spark, counts, budget):
@@ -370,7 +434,7 @@ def _brute_jaccard_pairs(docs):
     return out
 
 
-@settings(max_examples=100, deadline=None)
+@settings(max_examples=100)
 @given(docs=_DOCS)
 def test_prefix_filter_lemma_pure(docs):
     """The theorem itself, on arbitrary set families: under the global
@@ -393,7 +457,7 @@ def test_prefix_filter_lemma_pure(docs):
         assert 2 * nb >= na and 2 * na >= nb, (docs, a, b)
 
 
-@settings(max_examples=8, deadline=None,
+@settings(max_examples=8,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(docs=_DOCS)
 def test_prefix_filter_matches_bruteforce(spark, docs):
@@ -422,7 +486,7 @@ _STREAK_ROWS = st.lists(
 )
 
 
-@settings(max_examples=10, deadline=None,
+@settings(max_examples=10,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(rows=_STREAK_ROWS)
 def test_window_streaks_matches_bruteforce(spark, rows):
@@ -465,7 +529,7 @@ def test_window_streaks_matches_bruteforce(spark, rows):
     assert got == want
 
 
-@settings(max_examples=10, deadline=None,
+@settings(max_examples=10,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(left=_JOIN_ROWS, right=_JOIN_ROWS)
 def test_asof_nearest_matches_bruteforce(spark, left, right):
@@ -509,7 +573,7 @@ def test_asof_nearest_matches_bruteforce(spark, left, right):
     alphabet=st.characters(
         codec="utf-8", categories=("Ll", "Lu", "Nd", "Po", "Zs", "Sm")),
     max_size=60), min_size=1, max_size=20))
-@settings(max_examples=200, deadline=None)
+@settings(max_examples=200)
 def test_normalize_text_fusion_equivalence(texts):
     """The r10 normalize_text rewrite rests on one claim: mapping every
     char outside [a-z0-9 ] to ' ' and then collapsing ' +' runs is
