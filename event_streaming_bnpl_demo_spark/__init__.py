@@ -16,8 +16,8 @@ Package map
                    SURVEY.md §2 as a (spark, sf_dir) -> DataFrame callable
                    with a DuckDB oracle SQL string.
 - ``streaming``  : Structured Streaming wiring of the BNPL reference
-                   pipeline (file source, foreachBatch projections,
-                   watermarks, stateful bill lifecycle).
+                   pipeline (file source, foreachBatch folds into
+                   LakeTable projections, as-of state).
 """
 
 __version__ = "0.1.0"

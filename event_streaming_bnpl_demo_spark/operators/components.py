@@ -6,11 +6,11 @@ and B~C, all three deduplicate to one canonical survivor even when A
 and C never shared a bucket. The reference has no graph operation at
 all; this is part of the mandated LLM-data extension pack.
 
-Scale posture: the edge list is checkpointed once and re-joined each
-round, so every round costs one shuffle of edges against the (much
-smaller) label table plus a same-key reduce. Round count = graph
-diameter — near-dup graphs are unions of small dense cliques, so 2-3
-rounds in practice. For adversarial graphs with giant sparse
+Scale posture: the edge list is cached once, dst-partitioned, and
+re-joined each round, so every round costs one join of the edges
+against the (much smaller) label table plus a same-key reduce. Round
+count = graph diameter — near-dup graphs are unions of small dense
+cliques, so 2-3 rounds in practice. For adversarial graphs with giant sparse
 components, swap the loop body for the large-star/small-star rewrite
 (Kiveris et al., "Connected Components in MapReduce and Beyond",
 SoCC'14) — same fixpoint in O(log d) rounds. Lineage is cut every
@@ -25,9 +25,8 @@ from pyspark.sql import functions as F
 
 
 def connected_components(nodes: DataFrame, edges: DataFrame,
-                         max_rounds: int = 25,
-                         broadcast_max_nodes: int = 1_000_000,
-                         npart: int | None = None) -> DataFrame:
+                         max_rounds: int = 25, *,
+                         npart: int, broadcast: bool) -> DataFrame:
     """Label every node with the minimum node id reachable from it.
 
     ``nodes``: one column ``id`` (every vertex, including isolated
@@ -36,34 +35,19 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     ``(id, component)`` where ``component`` is the min id in the
     node's component; isolated nodes map to themselves.
 
+    ``npart`` is the width of the cached edge layout and ``broadcast``
+    says whether the |nodes|-sized label table and neighbour minima
+    are broadcast; callers decide both from table stats
+    (``sources.tables.edge_layout_partitions`` and ``fits_broadcast``).
+    A checkpointed label table gives AQE no pre-shuffle stats to
+    convert the join itself, so without the hint every round would
+    re-shuffle the edge list; past the size decision the joins run
+    shuffled with the same labels.
+
     Raises ``RuntimeError`` if the fixpoint is not reached within
     ``max_rounds`` — by then the graph's diameter exceeds what this
     formulation should be used for (see module docstring).
     """
-    # Node count first: it gates the broadcast AND sizes the cached
-    # edge layout below (r12: width was the session shuffle constant,
-    # which at small graphs spends more per-round wall on task
-    # dispatch than on join work — the pagerank/_edge_layout_partitions
-    # finding applied here; near-dup candidate graphs are sparse, so
-    # |nodes| is the honest size proxy available before the edge
-    # pipeline runs). r13: floor raised 2 -> 8 to match
-    # _edge_layout_partitions — the r12 floor of 2 serialized every
-    # labeling round for any graph under 500k nodes (the sf1 verdict's
-    # prime code suspect), and the r12 pagerank A/B already showed
-    # width 2 loses parallelism while 8 wins at both bench tiers. The
-    # conf stays the hard ceiling (ADVICE r12: a session narrower
-    # than the floor must never be widened by the derivation).
-    # Callers with a better size proxy (edge counts, byte stats) pass
-    # ``npart`` directly (ADVICE r12); the default derivation below is
-    # for the sparse near-dup graphs this operator was built for.
-    spark = edges.sparkSession
-    n_nodes = nodes.count()
-    if npart is None:
-        try:
-            conf_w = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except ValueError:
-            conf_w = int(spark.sparkContext.defaultParallelism)
-        npart = min(conf_w, max(8, n_nodes // 250_000 + 1))
     # cache the dst-partitioned edge list, NOT localCheckpoint: the
     # InMemoryRelation preserves the repartition's outputPartitioning
     # (a checkpoint's LogicalRDD drops it), so every round's
@@ -77,22 +61,13 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
            .repartition(npart, "dst")
            .cache())
     sym.count()
-    # Stats-gated broadcast of the label table (same pattern as
-    # operators.pagerank): a checkpointed RDD input gives AQE no
-    # pre-shuffle stats to convert the join itself, so gate on a real
-    # node count — small-to-medium graphs never re-shuffle the edge
-    # list; past the gate the join degrades to the shuffled path. The
-    # 1M-row default proxies a byte budget: two int64 columns resident
-    # as a broadcast hash relation ~= tens of MB, safe in a
-    # default-sized JVM; raise only with a bigger heap.
-    bcast = n_nodes <= broadcast_max_nodes
     labels = nodes.select("id", F.col("id").alias("component"))
     for _ in range(max_rounds):
-        lab = F.broadcast(labels) if bcast else labels
+        lab = F.broadcast(labels) if broadcast else labels
         nbr = (sym.join(lab, sym.src == lab.id)
                .groupBy(F.col("dst").alias("id"))
                .agg(F.min("component").alias("nbr_min")))
-        joined = (labels.join(F.broadcast(nbr) if bcast else nbr,
+        joined = (labels.join(F.broadcast(nbr) if broadcast else nbr,
                               "id", "left")
                   .localCheckpoint(eager=True))
         if joined.filter(F.col("nbr_min") < F.col("component")).count() == 0:

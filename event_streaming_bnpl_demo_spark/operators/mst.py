@@ -23,9 +23,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+#: Component count up to which a round's contracted graph merges with a
+#: driver-side union-find; above it the merge runs the distributed
+#: connected_components loop.
+DRIVER_MERGE_MAX_COMPONENTS = 1_000_000
+
+
 def boruvka_msf(spark: SparkSession, edges: DataFrame,
-                max_rounds: int = 12,
-                driver_merge_max_components: int = 1_000_000) -> DataFrame:
+                max_rounds: int = 12, *, npart: int) -> DataFrame:
     """Minimum spanning forest of an undirected weighted edge list
     ``(src, dst, weight)`` (each undirected edge given once, any
     orientation). Returns the forest's ``(src, dst, weight)`` rows
@@ -35,12 +40,14 @@ def boruvka_msf(spark: SparkSession, edges: DataFrame,
     label join (labels broadcast) and one grouped min per component
     (map-side combined). Merging the round's CONTRACTED graph (one
     node per component, <= one selected edge per component, at least
-    halving every round) is stats-gated like the PageRank broadcast:
-    below ``driver_merge_max_components`` the selected edges — a
-    metadata-scale set bounded by component count, ~24 B/row — merge
-    with a driver-side union-find (one pass, no nested iteration);
-    above the gate the merge runs the distributed
-    connected_components loop instead. The gate matters for WALL
+    halving every round) is gated on the loop-carried component
+    count: up to ``DRIVER_MERGE_MAX_COMPONENTS`` the selected edges —
+    a metadata-scale set bounded by component count, ~24 B/row —
+    merge with a driver-side union-find (one pass, no nested
+    iteration); above it the merge runs the distributed
+    connected_components loop instead, shuffled (a node set that
+    large is past any broadcast budget) over an ``npart``-wide edge
+    layout the caller sizes. The gate matters for WALL
     time, not just memory: the nested distributed label propagation
     costs ~log^2 rounds of scheduled jobs (measured 394 s at sf0.1),
     the gated merge ~log rounds (measured 11 s, identical forest).
@@ -91,7 +98,7 @@ def boruvka_msf(spark: SparkSession, edges: DataFrame,
                     .select("e.src", "e.dst", "e.weight",
                             "e.cs", "e.cd")
                     .distinct())
-        if n_components <= driver_merge_max_components:
+        if n_components <= DRIVER_MERGE_MAX_COMPONENTS:
             picked = sel_rows.collect()        # <= |components| rows
             if not picked:
                 break
@@ -145,7 +152,8 @@ def boruvka_msf(spark: SparkSession, edges: DataFrame,
                 .distinct()
             comp_edges = sel_rows.select(F.col("cs").alias("src"),
                                          F.col("cd").alias("dst"))
-            merged = connected_components(comp_nodes, comp_edges)
+            merged = connected_components(comp_nodes, comp_edges,
+                                          npart=npart, broadcast=False)
             labels = (labels.join(
                 merged.withColumnRenamed("id", "comp")
                 .withColumnRenamed("component", "new_comp"), "comp")

@@ -25,10 +25,8 @@ SCALE = 1_000_000
 DAMP_NUM, DAMP_DEN = 850, 1000
 
 
-def pagerank_fixedpoint(edges: DataFrame, n_iter: int = 5,
-                        checkpoint_every: int = 1,
-                        broadcast_max_nodes: int = 1_000_000,
-                        npart: int | None = None) -> DataFrame:
+def pagerank_fixedpoint(edges: DataFrame, n_iter: int = 5, *,
+                        npart: int, broadcast: bool) -> DataFrame:
     """Rank every node of a directed edge list ``(src, dst)``.
 
     Nodes are the distinct ``src`` values (pass a symmetrized edge
@@ -40,44 +38,29 @@ def pagerank_fixedpoint(edges: DataFrame, n_iter: int = 5,
     Scale — the static side never re-shuffles and each round is ONE
     exchange-free pass over the edges:
 
-    - the edge list is hash-partitioned by ``dst`` to exactly
-      ``spark.sql.shuffle.partitions`` ONCE and localCheckpointed (the
-      checkpoint preserves outputPartitioning), so the per-round
-      ``groupBy(dst)`` finds its required distribution already
-      satisfied and inserts NO exchange — the old shape re-shuffled
-      O(edges) rows every round;
+    - the edge list is hash-partitioned by ``dst`` to ``npart`` ONCE
+      and cached (the cache preserves outputPartitioning), so the
+      per-round ``groupBy(dst)`` finds its required distribution
+      already satisfied and inserts NO exchange — the old shape
+      re-shuffled O(edges) rows every round;
     - the degree column rides inside the ranks relation (``(node,
       deg, rank)``), so the per-source contribution is a projection,
       not a join;
-    - both |nodes|-sized sides (the contribution relation entering
-      the edge join, and the new-rank aggregate entering the update
-      join) are broadcast while the measured node count stays under
-      ``broadcast_max_nodes`` — default 1M rows: two-three int64
-      columns in a broadcast hash relation cost ~50-100 B/row on the
-      driver and every executor, so 1M ≈ tens of MB (inside a
-      default-sized JVM); the row gate is a byte-budget proxy in the
-      stats-gated style of sources.maybe_broadcast (a real count, not
-      a Catalyst guess). Past the gate both joins degrade to shuffled
-      and stay scale-correct unchanged.
+    - with ``broadcast``, both |nodes|-sized sides (the contribution
+      relation entering the edge join, and the new-rank aggregate
+      entering the update join) are broadcast; without it both joins
+      run shuffled and stay scale-correct unchanged.
 
-    Lineage is flattened with a checkpoint every ``checkpoint_every``
-    rounds — default EVERY round: the per-iteration broadcast of the
-    contribution relation is an eager materialization of the whole
-    lineage back to the last checkpoint, so a cadence of k re-executes
-    each edge aggregate up to k times (1+2+...+k jobs per window vs k
-    with per-round cuts; measured 6.0 s -> 5.2 s warm at sf0.1 for
-    k=4 -> 1). A non-broadcast deployment past the node gate can
-    raise the cadence — without the eager broadcast, rounds between
-    cuts execute as one DAG.
+    The caller decides ``npart`` and ``broadcast`` from table stats
+    (``sources.tables.edge_layout_partitions`` and ``fits_broadcast``).
+
+    Lineage is flattened with a checkpoint EVERY round: the
+    per-iteration broadcast of the contribution relation is an eager
+    materialization of the whole lineage back to the last checkpoint,
+    so a cadence of k re-executes each edge aggregate up to k times
+    (1+2+...+k jobs per window vs k with per-round cuts; measured
+    6.0 s -> 5.2 s warm at sf0.1 for k=4 -> 1).
     """
-    spark = edges.sparkSession
-    if npart is None:
-        # default: the session's shuffle width. Callers that can see the
-        # input's measured size pass a size-derived width instead (r12:
-        # at small inputs a 32-partition cached layout spends more wall
-        # on 5 rounds x 32 task dispatches than on the probe work — see
-        # plans/queries_graph._edge_layout_partitions).
-        npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # cache, NOT localCheckpoint: the InMemoryRelation preserves the
     # repartition's outputPartitioning (a checkpoint's LogicalRDD drops
     # it), which is what lets every round's groupBy(dst) skip its
@@ -90,20 +73,18 @@ def pagerank_fixedpoint(edges: DataFrame, n_iter: int = 5,
     outdeg = (edges.groupBy(F.col("src").alias("node"))
               .agg(F.count(F.lit(1)).alias("deg"))
               .localCheckpoint(eager=True))
-    n_nodes = outdeg.count()
-    small = n_nodes <= broadcast_max_nodes
     ranks = outdeg.select("node", "deg",
                           F.lit(SCALE).cast("bigint").alias("rank"))
     base = SCALE * 15 // 100
     for i in range(n_iter):
         contrib = ranks.select(F.col("node").alias("src"),
                                F.expr("rank DIV deg").alias("c"))
-        if small:
+        if broadcast:
             contrib = F.broadcast(contrib)
         agg = (edges.join(contrib, "src")
                .groupBy(F.col("dst").alias("node"))
                .agg(F.sum("c").alias("s")))
-        if small:
+        if broadcast:
             agg = F.broadcast(agg)
         ranks = (
             outdeg.join(agg, "node", "left")
@@ -112,7 +93,7 @@ def pagerank_fixedpoint(edges: DataFrame, n_iter: int = 5,
                 (F.lit(base)
                  + F.expr(f"{DAMP_NUM} * COALESCE(s, 0) DIV {DAMP_DEN}"))
                 .cast("bigint").alias("rank")))
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
+        if i + 1 < n_iter:
             ranks = ranks.localCheckpoint(eager=True)
     # pin the |nodes|-sized result eagerly, then release the cached
     # edges: repeated invocations in one session would otherwise stack

@@ -164,15 +164,12 @@ def jw_column(spark: SparkSession):
     extension law suite (tests/test_catalyst_extension.py), the UDF by
     the hypothesis law in tests/test_ext12_semantics.py — so every
     caller hash-matches the same oracle on either path."""
-    try:
-        if spark.catalog.functionExists("jaro_winkler_sim"):
-            # call_function + F.col, NOT an f-string into F.expr: the
-            # two paths must accept the same inputs, and a raw name
-            # interpolation would misparse names needing backticks.
-            return lambda a, b: F.call_function(
-                "jaro_winkler_sim", F.col(a), F.col(b))
-    except Exception:
-        pass
+    if spark.catalog.functionExists("jaro_winkler_sim"):
+        # call_function + F.col, NOT an f-string into F.expr: the two
+        # paths must accept the same inputs, and a raw name
+        # interpolation would misparse names needing backticks.
+        return lambda a, b: F.call_function(
+            "jaro_winkler_sim", F.col(a), F.col(b))
     udf = jaro_winkler_udf()
     return lambda a, b: udf(F.col(a), F.col(b))
 

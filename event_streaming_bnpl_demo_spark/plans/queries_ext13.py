@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources import load_table
+from ..sources import edge_layout_partitions, fits_broadcast, load_table
 from .catalog import register
 from .queries_ext7 import _CENTS
 
@@ -211,8 +211,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-joins against the surviving-node set — O(edges) per round,
     the same bound as a PageRank iteration; the edge list is
     materialized once and shrinks monotonically, so later rounds are
-    cheaper, not costlier. Survivor sets ride broadcast below the
-    1M-node gate (operators/pagerank.py's stats-gated pattern).
+    cheaper, not costlier. Survivor sets are supplier keys, bounded by
+    the supplier table, and always ride broadcast.
     """
     li = load_table(spark, sf_dir, "lineitem")
     sel = (li.filter(F.col("l_quantity") >= 45)
@@ -498,7 +498,9 @@ def er_resolve_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
              .filter(F.col("jw") >= _ER_THRESHOLD)
              .select("src", "dst"))
     nodes = part.select(F.col("p_partkey").alias("id"))
-    comp = connected_components(nodes, pairs)
+    comp = connected_components(
+        nodes, pairs, npart=edge_layout_partitions(spark, sf_dir, "part"),
+        broadcast=fits_broadcast(sf_dir, "part"))
     from pyspark.sql.window import Window
     sized = comp.select(
         F.col("id").alias("p_partkey"),

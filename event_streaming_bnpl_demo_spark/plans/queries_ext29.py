@@ -23,7 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources import load_table, maybe_broadcast
+from ..sources import (edge_layout_partitions, fits_broadcast, load_table,
+                       maybe_broadcast)
 from .catalog import register
 
 _ITERS = 3
@@ -84,14 +85,16 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (the pagerank shape, doubled for the alternating join
     sides): the distinct edge list is cached TWICE — hash-partitioned
     by dst for the authority half-step and by src for the hub
-    half-step — and both score vectors broadcast under a measured
-    1M-row gate, so every half-step is one exchange-FREE pass over
-    the matching cache (broadcast join + fused groupBy); each
-    half-step ends in an eager cut so the next broadcast re-executes
-    O(|vector|), not the whole chain. Past the gate the joins degrade
-    to shuffled and stay scale-correct. The max normalizer is one
-    window over the tiny vector. Score sums fit comfortably:
-    degree x 1e6 << 2^63 until ~9e12 edges per node. Measured
+    half-step — and both score vectors broadcast while customer and
+    supplier fit the broadcast budget on disk
+    (``sources.tables.fits_broadcast``), so every half-step is one
+    exchange-FREE pass over the matching cache (broadcast join +
+    fused groupBy); each half-step ends in an eager cut so the next
+    broadcast re-executes O(|vector|), not the whole chain. Past the
+    budget the joins degrade to shuffled and stay scale-correct. The
+    max normalizer is one window over the tiny vector. Score sums fit
+    comfortably: degree x 1e6 << 2^63 until ~9e12 edges per node.
+    Measured
     sf0.1 -> sf1 (10x): 3.7 -> 5.1 s warm, exponent 0.14 (was
     3.4 -> 8.6 s, 0.41, on the single-checkpoint shape that
     re-shuffled the edge mass every half-step — the double cache buys
@@ -102,9 +105,11 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_suppkey")
     # size-derived cached-layout width (r12, guide §2: derive from the
     # driving scan's measured size, not the session constant — see
-    # queries_graph._edge_layout_partitions for the interleaved A/B)
-    from .queries_graph import _edge_layout_partitions
-    npart = _edge_layout_partitions(spark, sf_dir)
+    # sources.tables.edge_layout_partitions for the interleaved A/B);
+    # the hub vector is |customers|-sized, the authority vector
+    # |suppliers|-sized
+    npart = edge_layout_partitions(spark, sf_dir, "lineitem")
+    broadcast = fits_broadcast(sf_dir, "customer", "supplier")
     base = (li.join(maybe_broadcast(o, sf_dir, "orders"),
                     li.l_orderkey == o.o_orderkey)
             .select(F.col("o_custkey").alias("src"),
@@ -129,22 +134,16 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select(F.col("src").alias("node"),
                    F.lit(1_000_000).alias("h"))
            .localCheckpoint(eager=True))
-    # measured row gates (the pagerank byte-budget proxy): the hub
-    # vector is |customers|-sized, the authority vector |suppliers|-
-    # sized — broadcast each while it stays under 1M rows
-    hub_small = hub.count() <= 1_000_000
-    auth_small = (e_dst.select("dst").distinct().count()  # no exchange
-                  <= 1_000_000)
     auth = None
     for it in range(_ITERS):
         h_in = (F.broadcast(hub.withColumnRenamed("node", "src"))
-                if hub_small else hub.withColumnRenamed("node", "src"))
+                if broadcast else hub.withColumnRenamed("node", "src"))
         auth = _normalize(
             e_dst.join(h_in, "src")
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("h").alias("a")), "a").localCheckpoint(eager=True)
         a_in = (F.broadcast(auth.withColumnRenamed("node", "dst"))
-                if auth_small else auth.withColumnRenamed("node", "dst"))
+                if broadcast else auth.withColumnRenamed("node", "dst"))
         hub = _normalize(
             e_src.join(a_in, "dst")
             .groupBy(F.col("src").alias("node"))

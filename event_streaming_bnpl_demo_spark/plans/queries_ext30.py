@@ -85,12 +85,7 @@ def llm_simsearch_ann_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     view = "emb_ann_native"
     e.createOrReplaceTempView(view)
 
-    try:
-        native = spark.catalog.functionExists("cosine_sim")
-    except Exception:
-        native = False
-
-    if native:
+    if spark.catalog.functionExists("cosine_sim"):
         prev = spark.conf.get("spark.graft.ann.rewrite.enabled", "false")
         prev_bits = spark.conf.get("spark.graft.ann.rewrite.bits", "4")
         spark.conf.set("spark.graft.ann.rewrite.enabled", "true")

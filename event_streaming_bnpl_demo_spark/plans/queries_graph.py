@@ -27,47 +27,10 @@ from ..operators.pagerank import (DAMP_DEN as _DAMP_DEN,
                                   DAMP_NUM as _DAMP_NUM,
                                   SCALE as _SCALE,
                                   pagerank_fixedpoint)
-from ..sources import load_table
-from ..sources.tables import table_disk_bytes
+from ..sources import edge_layout_partitions, fits_broadcast, load_table
 from .catalog import register
 
 _N_ITER = 5
-
-
-def _edge_layout_partitions(spark: SparkSession, sf_dir: str,
-                            lo: int = 8) -> int:
-    """Width of the cached dst/src-partitioned edge layout the
-    iterative tier (pagerank/khop/sssp/HITS) builds once and scans
-    every round: 1 partition per ~4 MB of the driving lineitem scan's
-    measured on-disk size, clamped to [lo, spark.sql.shuffle.partitions]
-    (the conf is the hard ceiling: a session narrower than ``lo`` is
-    never widened by the derivation).
-
-    Size-derived instead of the session constant (guide §2: derive
-    partitioning from input size, not a constant tuned for one mode):
-    at small inputs the per-round cost is task DISPATCH, not probe
-    work — measured interleaved at sf0.1 (1.17M sym edges), a width-8
-    layout runs pagerank ~15-20% faster than width-32 (3.04/2.84 s vs
-    3.52/3.71 s adjacent pairs) while width-2 loses parallelism and
-    regresses; at the sf1 replica (11.7M edges) width-8 vs width-32 is
-    a wash (6.2-7.9 s overlapping bands), and past ~128 MB of scan the
-    clamp returns the session conf unchanged, so cluster deployments
-    (where the conf is sized to the cluster, not 32) are unaffected.
-    """
-    try:
-        conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except ValueError:
-        # non-numeric conf (e.g. "auto" on some platforms): the
-        # scheduler's planned width is the honest stand-in ceiling
-        conf = int(spark.sparkContext.defaultParallelism)
-    size = table_disk_bytes(sf_dir, "lineitem")
-    if size is None:
-        # non-local path (object store): derivation no-ops to the conf
-        return conf
-    # conf is the CEILING even when it is under lo: a session that
-    # explicitly narrowed its shuffle width must never be widened by a
-    # derivation whose floor exists only to keep small scans parallel
-    return min(conf, max(lo, int(size // (4 * 1024 * 1024))))
 
 _EDGE_SQL = """
     SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
@@ -208,9 +171,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree-skewed hubs are visible in graph_degree_stats first; AQE's
     skew-join split handles them at scale.
     """
-    ranks = pagerank_fixedpoint(_copurchase_edges_int(spark, sf_dir),
-                                n_iter=_N_ITER,
-                                npart=_edge_layout_partitions(spark, sf_dir))
+    ranks = pagerank_fixedpoint(
+        _copurchase_edges_int(spark, sf_dir), n_iter=_N_ITER,
+        npart=edge_layout_partitions(spark, sf_dir, "lineitem"),
+        broadcast=fits_broadcast(sf_dir, "customer", "supplier"))
     # convert int node ids to the public naming BEFORE the top-k: the
     # (rank DESC, node) tie-break is defined on the STRING ids
     named = ranks.select(_int_node_name("node").alias("node"), "rank")
@@ -345,23 +309,25 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale (the pagerank/sssp recipe): the symmetrized edge list is
     hash-partitioned by dst ONCE and cached, and both the frontier
-    and the visited set — |nodes|-bounded — broadcast under measured
-    1M-row gates, so each hop is one exchange-FREE pass over the
-    cached edges: the frontier join preserves the dst partitioning,
-    the distinct-on-dst fuses with no exchange, and the anti-join
-    builds on the broadcast visited set. Per-hop eager cuts keep the
-    frontier/visited lineage flat (they are the broadcast inputs of
-    the NEXT hop). Past the gates the joins degrade to shuffled and
-    stay scale-correct. Measured sf0.1 -> sf1 (10x): 2.6 -> 3.7 s
-    warm, exponent 0.16 (was 2.2 -> 4.6 s, 0.32, on the lazy-hop
-    shape) — the sf1 win is modest because ReuseExchange already
-    deduped the old shape's repeated shuffles; the structural change
-    is per-hop cost: zero exchanges over the edge mass vs three
-    O(edges) shuffles per hop, which is what survives a 100x edge
-    count where broadcast-side reuse cannot.
+    and the visited set — |nodes|-bounded — broadcast while customer
+    and supplier fit the broadcast budget on disk
+    (``sources.tables.fits_broadcast``), so each hop is one
+    exchange-FREE pass over the cached edges: the frontier join
+    preserves the dst partitioning, the distinct-on-dst fuses with no
+    exchange, and the anti-join builds on the broadcast visited set.
+    Per-hop eager cuts keep the frontier/visited lineage flat (they
+    are the broadcast inputs of the NEXT hop). Past the budget the
+    joins degrade to shuffled and stay scale-correct. Measured sf0.1 ->
+    sf1 (10x): 2.6 -> 3.7 s warm, exponent 0.16 (was 2.2 -> 4.6 s,
+    0.32, on the lazy-hop shape) — the sf1 win is modest because
+    ReuseExchange already deduped the old shape's repeated shuffles;
+    the structural change is per-hop cost: zero exchanges over the
+    edge mass vs three O(edges) shuffles per hop, which is what
+    survives a 100x edge count where broadcast-side reuse cannot.
     """
     c = load_table(spark, sf_dir, "customer")
-    npart = _edge_layout_partitions(spark, sf_dir)
+    npart = edge_layout_partitions(spark, sf_dir, "lineitem")
+    small = fits_broadcast(sf_dir, "customer", "supplier")
     # int node ids end-to-end: the output is per-hop COUNTS, so no
     # boundary conversion is needed at all (see _copurchase_edges_int)
     edges = (_copurchase_edges_int(spark, sf_dir)
@@ -371,9 +337,8 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select((F.col("c_custkey") * 2).alias("node")).distinct()
              .localCheckpoint(eager=True))
     visited = seeds.withColumn("hop", F.lit(0).cast("int"))
-    frontier, n_visited = seeds, seeds.count()
+    frontier = seeds
     for hop in range(1, 4):
-        small = n_visited <= 1_000_000  # visited >= frontier rows
         nxt = (_khop_hop(frontier, visited.select("node"), edges, small)
                .localCheckpoint(eager=True))
         # no visited checkpoint: it is a union of already-checkpointed
@@ -382,7 +347,6 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         visited = visited.unionAll(
             nxt.withColumn("hop", F.lit(hop).cast("int")))
         frontier = nxt
-        n_visited += nxt.count()
     out = (visited.groupBy("hop")
            .agg(F.count(F.lit(1)).alias("n_reached"))
            .localCheckpoint(eager=True))
@@ -468,7 +432,8 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale (the pagerank/components shape): the symmetrized weighted
     edge list is hash-partitioned by dst ONCE and cached, the |nodes|-
-    sized dist side broadcasts under a measured 1M-row gate, so each
+    sized dist side broadcasts while customer and supplier fit the
+    broadcast budget on disk (``sources.tables.fits_broadcast``), so each
     relaxation round is one exchange-FREE pass over the cached edges
     (join + groupBy(dst) MIN both fuse); the dist update is a left
     join against the fixed node universe (least() folds old vs relaxed
@@ -477,7 +442,7 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     walk, so neither side pays the exponential path count). Node ids
     are parity-encoded int64 inside the iteration; per-round eager
     cuts stop the broadcasts from re-executing prior rounds. Past the
-    node gate both joins degrade to shuffled and stay scale-correct.
+    budget both joins degrade to shuffled and stay scale-correct.
     Measured sf0.1 -> sf1 (10x): 2.97 -> 4.3 s, exponent 0.16 (was
     3.4 -> 11.3 s, 0.52, on the string-keyed union+re-group shape).
     """
@@ -497,8 +462,9 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relaxation aggregate groups by dst, so with the dist side
     # broadcast the static edge list never re-shuffles and the
     # per-round groupBy fuses with NO exchange; width is size-derived
-    # (see _edge_layout_partitions)
-    npart = _edge_layout_partitions(spark, sf_dir)
+    # (see sources.tables.edge_layout_partitions)
+    npart = edge_layout_partitions(spark, sf_dir, "lineitem")
+    small = fits_broadcast(sf_dir, "customer", "supplier")
     edges = (fwd.unionAll(fwd.select(F.col("dst").alias("src"),
                                      F.col("src").alias("dst"), "len"))
              .repartition(npart, "dst")
@@ -509,13 +475,12 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-execution costs O(|nodes|), not a distinct over the edges
     nodes = (edges.select(F.col("src").alias("node")).distinct()
              .localCheckpoint(eager=True))
-    small = nodes.count() <= 1_000_000  # same byte-budget proxy as pagerank
     seeds = (c.filter(F.col("c_custkey") % 50 == 0)
              .select((F.col("c_custkey") * 2).alias("node"),
                      F.lit(0).cast("bigint").alias("dist")))
     # dist is defined over the FIXED node universe (null = unreached),
     # so each round is a left join instead of a union+re-group — the
-    # |nodes|-sized update side broadcasts under the same stats gate
+    # |nodes|-sized update side broadcasts under the same decision
     dist = (nodes.join(F.broadcast(seeds) if small else seeds,
                        "node", "left"))
     for rnd in range(3):

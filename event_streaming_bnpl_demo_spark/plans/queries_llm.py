@@ -28,7 +28,8 @@ from ..functions.text import (STOPWORDS, duckdb_tokens, hexchar_parity,
                               normalize_text, shingles_col, tokens_col)
 from ..functions.vectors import (cosine_expr, dot_expr, duckdb_cosine,
                                  norm_expr)
-from ..sources import load_table, spread
+from ..sources import (edge_layout_partitions, fits_broadcast, load_table,
+                       spread)
 from .catalog import register
 
 DIM = 64  # embedding dimensionality (FIXTURES.md §B)
@@ -287,7 +288,9 @@ def _component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = llm_dedup_minhash(spark, sf_dir)
     comp = connected_components(
         d, pairs.select(F.col("doc_a").alias("src"),
-                        F.col("doc_b").alias("dst")))
+                        F.col("doc_b").alias("dst")),
+        npart=edge_layout_partitions(spark, sf_dir, "documents"),
+        broadcast=fits_broadcast(sf_dir, "documents"))
     return comp.select(F.col("id").alias("doc_id"), "component")
 
 

@@ -1,7 +1,7 @@
 """Reference-semantics queries — the BNPL pipeline's operators (SURVEY.md
 §2.1 R5-R15) re-expressed as declarative batch plans over the analytics
-``events`` table (deterministic ids replace ``uuid()`` so every query is
-oracle-checkable; the real streaming wiring with uuid/current_timestamp
+``events`` table (deterministic ids so every query is oracle-checkable;
+the real streaming wiring, whose archive id is ``sha2(event_data)``,
 lives in :mod:`..streaming.pipeline` and is covered by pytest).
 """
 
@@ -120,8 +120,9 @@ def ref_lastwin_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     the event-sourcing fix for the reference's non-idempotent writes.
 
     Scale: one shuffle on the state key; at 100 TB this is the
-    compaction pattern (or foreachBatch MERGE keyed on user_id when
-    incremental — see streaming.pipeline)."""
+    compaction pattern (incrementally, the pipeline's fold commits
+    ``combine(stored ∪ rows(batch))`` keyed on the state key — see
+    streaming.pipeline)."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     return (
@@ -154,11 +155,11 @@ def ref_event_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R5: the append-only event-log archive row shape
     (consumer/consumer.go:185-191, readme:65-70) — id + type + JSON
     document + created_at. Deterministic id/serialization here for the
-    oracle; the streaming sink uses uuid()/to_json/current_timestamp.
+    oracle; the streaming sink's id is ``sha2(event_data)`` and its
+    created_at the event's ingest_ts.
 
-    Scale: the real sink is an append-mode parquet writer partitioned
-    by event_type (R6's router as a partition column) — see
-    streaming.pipeline."""
+    Scale: the real sink is an append to an unpartitioned LakeTable
+    (one manifest commit per micro-batch) — see streaming.pipeline."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "signup")
     return ev.select(
         F.md5(F.concat(F.lit("evt-"), F.col("event_id").cast("string"))).alias("id"),

@@ -85,6 +85,55 @@ def table_disk_bytes(sf_dir: str, name: str) -> int | None:
         return None
 
 
+def edge_layout_partitions(spark: SparkSession, sf_dir: str,
+                           driving: str) -> int:
+    """Width of the cached edge layout an iterative graph operator
+    (pagerank, k-hop, SSSP, HITS, components) builds once and scans
+    every round: 1 partition per ~4 MB of the ``driving`` table's
+    measured on-disk size, clamped to [8, spark.sql.shuffle.partitions].
+
+    Size-derived instead of the session constant (guide §2: derive
+    partitioning from input size, not a constant tuned for one mode):
+    at small inputs the per-round cost is task DISPATCH, not probe
+    work — measured interleaved at sf0.1 (1.17M sym edges), a width-8
+    layout runs pagerank ~15-20% faster than width-32 (3.04/2.84 s vs
+    3.52/3.71 s adjacent pairs) while width-2 loses parallelism and
+    regresses; at the sf1 replica (11.7M edges) width-8 vs width-32 is
+    a wash (6.2-7.9 s overlapping bands), and past ~128 MB of scan the
+    clamp returns the session conf unchanged, so cluster deployments
+    (where the conf is sized to the cluster, not 32) are unaffected.
+    """
+    try:
+        conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        # non-numeric conf (e.g. "auto" on some platforms): the
+        # scheduler's planned width is the honest stand-in ceiling
+        conf = int(spark.sparkContext.defaultParallelism)
+    size = table_disk_bytes(sf_dir, driving)
+    if size is None:
+        # non-local path (object store): derivation no-ops to the conf
+        return conf
+    # conf is the CEILING even when it is under the floor: a session
+    # that explicitly narrowed its shuffle width must never be widened
+    # by a derivation whose floor exists only to keep small scans
+    # parallel
+    return min(conf, max(8, int(size // (4 * 1024 * 1024))))
+
+
+def fits_broadcast(sf_dir: str, *bounding: str) -> bool:
+    """Whether an iterative graph operator broadcasts its |nodes|-sized
+    sides (rank, label, distance and score vectors; frontier and
+    visited sets): True while the tables that bound the node set
+    measure under ``BROADCAST_DISK_BYTES`` on disk together. Each query
+    asks once and passes the answer to every operator call, so the
+    decision costs a stat, not a ``count()`` job per gate. It picks
+    plan shape only: past it the joins run shuffled with the same
+    results. A table that cannot be statted answers False, the
+    scale-safe branch."""
+    sizes = [table_disk_bytes(sf_dir, name) for name in bounding]
+    return None not in sizes and sum(sizes) < BROADCAST_DISK_BYTES
+
+
 def maybe_broadcast(df: DataFrame, sf_dir: str, name: str,
                     threshold: int = BROADCAST_DISK_BYTES) -> DataFrame:
     """Stats-based broadcast hint: hint ``df`` broadcast-able only when

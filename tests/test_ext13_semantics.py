@@ -119,17 +119,15 @@ def test_kcore_spark_matches_python_reference(spark):
     assert got == want
 
 
-def test_mst_boruvka_matches_kruskal(spark):
-    """The Borůvka forest equals an independent Python Kruskal under
-    the identical strict (weight, src, dst) edge order — exact edge-set
-    equality, not just total weight (the strict order makes the forest
-    unique even under weight ties)."""
+def _kruskal_reference(spark):
+    """The heavy-quantity supplier co-purchase graph's edges, and its
+    minimum spanning forest by an independent Python Kruskal under the
+    strict (weight, src, dst) edge order ``graph_mst_boruvka`` uses;
+    also the forest's expected size, |nodes| - |components|."""
     import hashlib
 
     from pyspark.sql import functions as F
 
-    from event_streaming_bnpl_demo_spark.plans.queries_ext18 import (
-        graph_mst_boruvka)
     from event_streaming_bnpl_demo_spark.sources import load_table
 
     li = load_table(spark, SF_SMOKE, "lineitem")
@@ -162,15 +160,50 @@ def test_mst_boruvka_matches_kruskal(spark):
         if rs != rd:
             parent[rs] = rd
             want.add((s, d, wt))
+    nodes = {n for e in pairs for n in e}
+    return want, len(nodes) - len({find(n) for n in nodes})
 
+
+def test_mst_boruvka_matches_kruskal(spark):
+    """The Borůvka forest equals an independent Python Kruskal under
+    the identical strict (weight, src, dst) edge order — exact edge-set
+    equality, not just total weight (the strict order makes the forest
+    unique even under weight ties)."""
+    from event_streaming_bnpl_demo_spark.plans.queries_ext18 import (
+        graph_mst_boruvka)
+
+    want, n_forest = _kruskal_reference(spark)
     got = {(r["src"], r["dst"], r["weight"])
            for r in graph_mst_boruvka(spark, SF_SMOKE).collect()}
     assert got == want
     # forest laws: |edges| = |nodes| - |components|, and acyclic by
     # construction of the reference equality above
-    nodes = {n for e in pairs for n in e}
-    n_comp = len({find(n) for n in nodes})
-    assert len(got) == len(nodes) - n_comp
+    assert len(got) == n_forest
+
+
+def test_mst_boruvka_contracted_merge_matches_kruskal(spark, monkeypatch):
+    """With the driver-merge gate at 0 every round merges its
+    contracted graph through the distributed connected_components
+    loop, shuffled; the forest is the same Kruskal forest the
+    driver-side union-find gives."""
+    from event_streaming_bnpl_demo_spark.operators import components, mst
+    from event_streaming_bnpl_demo_spark.plans.queries_ext18 import (
+        graph_mst_boruvka)
+
+    calls = []
+    real = components.connected_components
+
+    def spy(*args, **kwargs):
+        calls.append(kwargs["broadcast"])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(mst, "DRIVER_MERGE_MAX_COMPONENTS", 0)
+    monkeypatch.setattr(components, "connected_components", spy)
+    want, _ = _kruskal_reference(spark)
+    got = {(r["src"], r["dst"], r["weight"])
+           for r in graph_mst_boruvka(spark, SF_SMOKE).collect()}
+    assert calls and not any(calls)
+    assert got == want
 
 
 def test_mst_boruvka_float_weights_and_exact_round_budget(spark):
@@ -188,7 +221,7 @@ def test_mst_boruvka_float_weights_and_exact_round_budget(spark):
     edges = spark.createDataFrame(
         [(0, 1, 0.5), (2, 3, 0.25), (1, 2, 10.75)],
         "src long, dst long, weight double")
-    forest = boruvka_msf(spark, edges, max_rounds=2)
+    forest = boruvka_msf(spark, edges, max_rounds=2, npart=2)
     assert forest.schema["weight"].dataType.simpleString() == "double"
     got = {(r["src"], r["dst"], r["weight"]) for r in forest.collect()}
     assert got == {(0, 1, 0.5), (2, 3, 0.25), (1, 2, 10.75)}
@@ -196,4 +229,4 @@ def test_mst_boruvka_float_weights_and_exact_round_budget(spark):
     # the safety net still fires for a genuinely over-budget graph
     import pytest as _pytest
     with _pytest.raises(RuntimeError, match="did not converge"):
-        boruvka_msf(spark, edges, max_rounds=1)
+        boruvka_msf(spark, edges, max_rounds=1, npart=2)

@@ -255,7 +255,7 @@ def test_connected_components_chain_and_isolated(spark):
     """Min-label propagation needs diameter-many rounds on a chain —
     4-1-7-3 collapses to min id 1 only via transitive steps — while
     the isolated node 9 stays its own component and a 2-clique keeps
-    its own minimum."""
+    its own minimum. Broadcast and shuffled label joins agree."""
     from event_streaming_bnpl_demo_spark.operators.components import (
         connected_components)
 
@@ -265,9 +265,11 @@ def test_connected_components_chain_and_isolated(spark):
         [(4, 1), (1, 7), (7, 3),   # chain, mixed orientation
          (5, 6)],                  # separate 2-clique
         ["src", "dst"])
-    got = {r["id"]: r["component"]
-           for r in connected_components(nodes, edges).collect()}
-    assert got == {1: 1, 3: 1, 4: 1, 7: 1, 9: 9, 5: 5, 6: 5}
+    for broadcast in (True, False):
+        got = {r["id"]: r["component"]
+               for r in connected_components(nodes, edges, npart=2,
+                                             broadcast=broadcast).collect()}
+        assert got == {1: 1, 3: 1, 4: 1, 7: 1, 9: 9, 5: 5, 6: 5}
 
 
 def test_connected_components_round_limit(spark):
@@ -283,7 +285,8 @@ def test_connected_components_round_limit(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], ["src", "dst"])
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(nodes, edges, max_rounds=2)
+        connected_components(nodes, edges, max_rounds=2, npart=2,
+                             broadcast=False)
 
 
 def test_jaccard_df_cap_bounds_hot_shingle_pairs(spark):
@@ -320,7 +323,8 @@ def test_pagerank_fixedpoint_matches_reference(spark):
     """The Spark PageRank loop must equal an independent pure-Python
     fixed-point reference EXACTLY (integer arithmetic, so no
     tolerance), on a small asymmetric graph: a triangle a-b-c plus a
-    pendant d attached to c, symmetrized."""
+    pendant d attached to c, symmetrized — with the |nodes|-sized sides
+    broadcast and shuffled alike."""
     from event_streaming_bnpl_demo_spark.operators.pagerank import (
         DAMP_DEN, DAMP_NUM, SCALE, pagerank_fixedpoint)
 
@@ -328,8 +332,10 @@ def test_pagerank_fixedpoint_matches_reference(spark):
     edges = und + [(d, s) for s, d in und]
     df = spark.createDataFrame(edges, ["src", "dst"])
 
-    got = {r["node"]: r["rank"]
-           for r in pagerank_fixedpoint(df, n_iter=5).collect()}
+    got, shuffled = ({r["node"]: r["rank"]
+                      for r in pagerank_fixedpoint(df, n_iter=5, npart=2,
+                                                   broadcast=b).collect()}
+                     for b in (True, False))
 
     # independent reference: same integer recurrence, plain dicts
     out = {}
@@ -345,7 +351,7 @@ def test_pagerank_fixedpoint_matches_reference(spark):
             for d in ds:
                 incoming[d] += c
         rank = {n: base + DAMP_NUM * incoming[n] // DAMP_DEN for n in out}
-    assert got == rank
+    assert got == rank == shuffled
     # the pendant's only neighbor is the hub, so the hub outranks it
     assert got["c"] > got["d"]
 

@@ -156,6 +156,71 @@ def test_maybe_broadcast_is_stats_gated(spark):
         tune(spark)
 
 
+def _session_stub(shuffle_partitions: str, parallelism: int = 3):
+    """Just the two reads the graph tier's width rule makes of a
+    session: the shuffle-partitions conf and the default parallelism."""
+    from types import SimpleNamespace
+
+    return SimpleNamespace(
+        conf=SimpleNamespace(get=lambda key: shuffle_partitions),
+        sparkContext=SimpleNamespace(defaultParallelism=parallelism))
+
+
+def test_graph_size_decision_unstattable_path_is_scale_safe(tmp_path):
+    """A table path that cannot be statted (an object store) gets the
+    scale-safe branch: no broadcast and the session's own width. One
+    unstattable bounding table is enough to withhold the broadcast."""
+    from event_streaming_bnpl_demo_spark.sources import (
+        edge_layout_partitions, fits_broadcast)
+
+    missing = str(tmp_path / "not-local")
+    assert not fits_broadcast(missing, "customer", "supplier")
+    assert edge_layout_partitions(_session_stub("32"), missing,
+                                  "lineitem") == 32
+    assert fits_broadcast(SF_SMOKE, "customer", "supplier")
+    assert not fits_broadcast(SF_SMOKE, "customer", "no_such_table")
+
+
+def test_graph_size_decision_sums_the_bounding_tables(monkeypatch):
+    """The broadcast budget holds for the bounding tables together, not
+    for each alone."""
+    from event_streaming_bnpl_demo_spark.sources import tables
+
+    customer = tables.table_disk_bytes(SF_SMOKE, "customer")
+    monkeypatch.setattr(tables, "BROADCAST_DISK_BYTES", customer + 1)
+    assert tables.fits_broadcast(SF_SMOKE, "customer")
+    assert not tables.fits_broadcast(SF_SMOKE, "customer", "supplier")
+
+
+def test_graph_layout_width_never_widens_a_narrow_session(monkeypatch):
+    """The width is 1 partition per 4 MB of the driving table, floored
+    at 8 and capped by spark.sql.shuffle.partitions; a session narrower
+    than the floor keeps its own width."""
+    from event_streaming_bnpl_demo_spark.sources import tables
+
+    assert tables.edge_layout_partitions(_session_stub("4"), SF_SMOKE,
+                                         "lineitem") == 4
+    assert tables.edge_layout_partitions(_session_stub("32"), SF_SMOKE,
+                                         "lineitem") == 8
+    mib = 1024 * 1024
+    for size, width in ((64 * mib, 16), (1024 * mib, 32)):
+        monkeypatch.setattr(tables, "table_disk_bytes",
+                            lambda sf_dir, name, size=size: size)
+        assert tables.edge_layout_partitions(_session_stub("32"), SF_SMOKE,
+                                             "lineitem") == width
+
+
+def test_graph_layout_width_non_numeric_conf_uses_parallelism(tmp_path):
+    """A non-numeric shuffle-partitions conf ("auto" on some platforms)
+    falls back to the scheduler's default parallelism as the ceiling."""
+    from event_streaming_bnpl_demo_spark.sources import edge_layout_partitions
+
+    auto = _session_stub("auto", parallelism=3)
+    assert edge_layout_partitions(auto, SF_SMOKE, "lineitem") == 3
+    assert edge_layout_partitions(auto, str(tmp_path / "not-local"),
+                                  "lineitem") == 3
+
+
 def test_join_strategy_hints(spark):
     """All three equi-join strategies are selectable per-side: the
     default threshold broadcasts small dims, a shuffle_hash hint picks

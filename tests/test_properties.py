@@ -233,7 +233,8 @@ def test_connected_components_matches_union_find(spark, edges):
     ndf = spark.createDataFrame([(n,) for n in nodes], ["id"])
     edf = spark.createDataFrame(edges or [(0, 0)], ["src", "dst"])
     got = {r["id"]: r["component"]
-           for r in connected_components(ndf, edf).collect()}
+           for r in connected_components(ndf, edf, npart=2,
+                                         broadcast=True).collect()}
     assert got == want
 
 
