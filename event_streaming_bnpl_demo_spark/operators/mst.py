@@ -30,18 +30,21 @@ DRIVER_MERGE_MAX_COMPONENTS = 1_000_000
 
 
 def boruvka_msf(spark: SparkSession, edges: DataFrame,
-                max_rounds: int = 12, *, npart: int) -> DataFrame:
+                max_rounds: int = 12, *, npart: int,
+                broadcast: bool) -> DataFrame:
     """Minimum spanning forest of an undirected weighted edge list
     ``(src, dst, weight)`` (each undirected edge given once, any
     orientation). Returns the forest's ``(src, dst, weight)`` rows
     (canonical orientation ``src < dst``).
 
     Scale: the edge list is materialized once; each round is one
-    label join (labels broadcast) and one grouped min per component
-    (map-side combined). Merging the round's CONTRACTED graph (one
-    node per component, <= one selected edge per component, at least
-    halving every round) is gated on the loop-carried component
-    count: up to ``DRIVER_MERGE_MAX_COMPONENTS`` the selected edges —
+    label join and one grouped min per component (map-side combined).
+    With ``broadcast`` the |nodes|-sized label relation is broadcast
+    into the label join; without it that join runs shuffled. The
+    caller decides from table stats (``sources.tables.fits_broadcast``).
+    Merging the round's CONTRACTED graph (one node per component,
+    <= one selected edge per component, at least halving every round)
+    is gated on the loop-carried component count: up to ``DRIVER_MERGE_MAX_COMPONENTS`` the selected edges —
     a metadata-scale set bounded by component count, ~24 B/row —
     merge with a driver-side union-find (one pass, no nested
     iteration); above it the merge runs the distributed
@@ -79,10 +82,12 @@ def boruvka_msf(spark: SparkSession, edges: DataFrame,
     # component capacity instead of silently halving it). The extra
     # round may only observe: a non-empty pick there is over budget.
     for rnd in range(max_rounds + 1):
-        lab_s = F.broadcast(labels.select(F.col("id").alias("src"),
-                                          F.col("comp").alias("cs")))
-        lab_d = F.broadcast(labels.select(F.col("id").alias("dst"),
-                                          F.col("comp").alias("cd")))
+        lab_s = labels.select(F.col("id").alias("src"),
+                              F.col("comp").alias("cs"))
+        lab_d = labels.select(F.col("id").alias("dst"),
+                              F.col("comp").alias("cd"))
+        if broadcast:
+            lab_s, lab_d = F.broadcast(lab_s), F.broadcast(lab_d)
         cand = (canon.join(lab_s, "src").join(lab_d, "dst")
                 .filter(F.col("cs") != F.col("cd")))
         # every component picks its cheapest outgoing edge under the

@@ -347,6 +347,78 @@ def staged_parquet(df, tag: str, sf_dir: str, n_files: int) -> str:
         .write.mode("overwrite").parquet(tmp))
 
 
+# --------------------------------------------------------------------------
+# streaming drains: every catalog view that replays a staged feed as
+# micro-batches reads and drains it through these helpers
+# --------------------------------------------------------------------------
+
+
+def parquet_stream(spark: SparkSession, in_dir: str, schema) -> DataFrame:
+    """A parquet file stream over ``in_dir`` that admits one file per
+    trigger, so a dir of n files drains as n micro-batches in
+    modification-time order."""
+    return (spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1).parquet(in_dir))
+
+
+def staged_stream(spark: SparkSession, df: DataFrame, tag: str, sf_dir: str,
+                  n_files: int) -> DataFrame:
+    """``df`` as a stream: staged by :func:`staged_parquet` into
+    ``n_files`` files and read back with ``df``'s own schema, one file
+    per trigger."""
+    return parquet_stream(spark, staged_parquet(df, tag, sf_dir, n_files),
+                          df.schema)
+
+
+def drain_partials(stream: DataFrame, work: str, fold) -> dict:
+    """Drain ``stream`` to its end through a stateless ``foreachBatch``
+    fold and return ``{name: that output's partials}``.
+
+    ``fold(batch)`` returns ``{name: DataFrame}``; each output is
+    overwritten to ``work/<name>/batch=<id>`` (the batch persisted
+    while it writes when there is more than one output), so a retried
+    micro-batch replaces its partials and never duplicates them. The
+    query runs ``availableNow`` on the checkpoint ``work/ck``. Catalog
+    views pass the content-keyed ``_scratch(f"{tag}_{fingerprint}")``:
+    a repeat call resumes the drained checkpoint, folds zero new rows
+    and rereads the same partials, and new source data gets a new dir.
+    """
+    def run(batch: DataFrame, batch_id: int) -> None:
+        outs = fold(batch)
+        many = len(outs) > 1
+        if many:
+            batch.persist()
+        try:
+            for name, part in outs.items():
+                part.write.mode("overwrite").parquet(
+                    f"{work}/{name}/batch={batch_id}")
+        finally:
+            if many:
+                batch.unpersist()
+
+    (stream.writeStream.foreachBatch(run)
+     .option("checkpointLocation", f"{work}/ck")
+     .trigger(availableNow=True).start().awaitTermination())
+    reader = stream.sparkSession.read
+    return {name: reader.option("basePath", f"{work}/{name}")
+            .parquet(f"{work}/{name}/batch=*")
+            for name in sorted(os.listdir(work)) if name != "ck"}
+
+
+def drain_memory(stream: DataFrame, output_mode: str) -> DataFrame:
+    """Drain ``stream`` to its end into a fresh in-session memory table
+    and return that table. No checkpoint location is passed: Spark
+    checkpoints into a new temporary dir and deletes it when the
+    ``availableNow`` query ends cleanly, so nothing is left behind, and
+    a stateful query always starts fresh, the only case in which
+    ``session.scoped_conf`` may size its state store."""
+    name = f"drain_{_uuid.uuid4().hex[:8]}"
+    (stream.writeStream.format("memory").queryName(name)
+     .outputMode(output_mode)
+     .trigger(availableNow=True).start().awaitTermination())
+    return stream.sparkSession.table(name)
+
+
 @register(
     "source_json_scan",
     oracle="""
@@ -402,8 +474,6 @@ def source_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     incrementally (complete mode), drained with availableNow, and the
     result equals the batch aggregate — SURVEY §2.2's
     'streaming file source' row with its batch-equivalent oracle."""
-    name = f"replay_{_uuid.uuid4().hex[:8]}"
-    ckpt = _scratch(f"ck_{name}")
     # parquet streaming source needs nanos handling too
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = (spark.readStream
@@ -414,12 +484,7 @@ def source_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = raw.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.expr(dsum_sql("value")).alias("sum_value"))
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete")
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(name)
+    return drain_memory(agg, "complete")
 
 
 # --------------------------------------------------------------------------

@@ -357,38 +357,24 @@ def mv_stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-batch state is |types| x |touched buckets| bitmaps
     (<= 4 KiB each) regardless of batch row count; the terminal union
-    moves bitmaps, not user ids. Exactly-once via per-batch overwrite
-    + checkpoint resume, same as the decimal-partial views; scratch
-    dirs are content-keyed so repeats reuse the drained checkpoint.
+    moves bitmaps, not user ids.
     """
-    from .queries_ext import _scratch, source_fingerprint, staged_parquet
+    from .queries_ext import (_scratch, drain_partials, source_fingerprint,
+                              staged_stream)
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id")
-    work = _scratch(f"bmstream_{source_fingerprint(sf_dir)}")
-    state_dir = f"{work}/state"
-    in_dir = staged_parquet(ev, "bmstream", sf_dir, 4)
 
-    def fold_batch(batch: DataFrame, batch_id: int) -> None:
-        (batch
-         .withColumn("bkt", F.bitmap_bucket_number("user_id"))
-         .groupBy("event_type", "bkt")
-         .agg(F.bitmap_construct_agg(
-             F.bitmap_bit_position("user_id")).alias("bm"))
-         .write.mode("overwrite")
-         .parquet(f"{state_dir}/batch={batch_id}"))
+    def fold(batch: DataFrame) -> dict[str, DataFrame]:
+        return {"state": batch
+                .withColumn("bkt", F.bitmap_bucket_number("user_id"))
+                .groupBy("event_type", "bkt")
+                .agg(F.bitmap_construct_agg(
+                    F.bitmap_bit_position("user_id")).alias("bm"))}
 
-    q = (spark.readStream
-         .schema("event_id long, event_type string, user_id long")
-         .option("maxFilesPerTrigger", "1")
-         .parquet(in_dir)
-         .writeStream.foreachBatch(fold_batch)
-         .option("checkpointLocation", f"{work}/ck")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    partials = spark.read.option("basePath", state_dir).parquet(
-        f"{state_dir}/batch=*")
+    partials = drain_partials(
+        staged_stream(spark, ev, "bmstream", sf_dir, 4),
+        _scratch(f"bmstream_{source_fingerprint(sf_dir)}"), fold)["state"]
     return (partials.groupBy("event_type", "bkt")
             .agg(F.bitmap_or_agg("bm").alias("bm"))
             .groupBy("event_type")

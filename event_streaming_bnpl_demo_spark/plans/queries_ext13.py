@@ -212,7 +212,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same bound as a PageRank iteration; the edge list is
     materialized once and shrinks monotonically, so later rounds are
     cheaper, not costlier. Survivor sets are supplier keys, bounded by
-    the supplier table, and always ride broadcast.
+    the supplier table, and ride broadcast while that table fits the
+    broadcast budget (``fits_broadcast``), shuffled past it.
     """
     li = load_table(spark, sf_dir, "lineitem")
     sel = (li.filter(F.col("l_quantity") >= 45)
@@ -226,11 +227,13 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (half.union(half.select(F.col("dst").alias("src"),
                                     F.col("src").alias("dst")))
              .localCheckpoint(eager=True))
+    broadcast = fits_broadcast(sf_dir, "supplier")
     for _ in range(_KCORE_ROUNDS):
         keep = (edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
                 .filter(F.col("deg") >= _KCORE_K)
                 .select(F.col("src").alias("node")))
-        keep = F.broadcast(keep)
+        if broadcast:
+            keep = F.broadcast(keep)
         edges = (edges.join(keep, edges.src == keep.node, "left_semi")
                  .join(keep, edges.dst == keep.node, "left_semi")
                  .localCheckpoint(eager=True))

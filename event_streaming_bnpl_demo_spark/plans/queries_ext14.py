@@ -310,23 +310,16 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark here keeps the run exact; production tightens the
     watermark to its lateness SLO).
     """
-    import uuid as _uuid
-
     from ..operators.interval import interval_join
-    from .queries_ext import _scratch, staged_parquet
+    from .queries_ext import drain_memory, staged_stream
 
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("view", "purchase"))
-    in_dir = staged_parquet(
+    stream = staged_stream(
+        spark,
         ev.select("event_id", "user_id", "event_type",
                   F.col("ts").cast("timestamp").alias("ts")),
         "sivj", sf_dir, 4)
-    name = f"sivj_{_uuid.uuid4().hex[:8]}"
-    work = _scratch(f"sivj_{_uuid.uuid4().hex[:8]}")
-    stream = (spark.readStream
-              .schema("event_id bigint, user_id bigint, "
-                      "event_type string, ts timestamp")
-              .option("maxFilesPerTrigger", 1).parquet(in_dir))
     views = (stream.filter(F.col("event_type") == "view")
              .select("user_id", F.col("event_id").alias("view_id"),
                      F.col("ts").alias("v_ts"))
@@ -342,14 +335,10 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fresh-checkpoint stateful query: size the state store for the
     # keyspace, not the batch default (session.scoped_conf)
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
-        joined = interval_join(views, purch, "user_id", "v_ts", "p_ts",
-                               "1 HOUR")
-        q = (joined.writeStream.format("memory").queryName(name)
-             .outputMode("append")
-             .option("checkpointLocation", f"{work}/ck")
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    return (spark.table(name)
+        joined = drain_memory(
+            interval_join(views, purch, "user_id", "v_ts", "p_ts", "1 HOUR"),
+            "append")
+    return (joined
             .selectExpr("view_id", "p_id", "user_id",
                         "CAST(unix_seconds(p_ts) - unix_seconds(v_ts)"
                         " AS BIGINT) AS secs_after")
@@ -402,17 +391,17 @@ def stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the whole reason outer stream joins are usable at 100 TB/day.
     """
     import os
-    import uuid as _uuid
 
     from ..operators.interval import interval_join
-    from .queries_ext import _scratch, source_fingerprint, stage_once
+    from .queries_ext import (drain_memory, parquet_stream, source_fingerprint,
+                              stage_once)
 
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("view", "purchase"))
+    base = ev.select("event_id", "user_id", "event_type",
+                     F.col("ts").cast("timestamp").alias("ts"))
 
     def write_fn(tmp: str) -> None:
-        base = (ev.select("event_id", "user_id", "event_type",
-                          F.col("ts").cast("timestamp").alias("ts")))
         (base.repartitionByRange(4, "ts")
          .write.mode("overwrite").parquet(os.path.join(tmp, "d")))
         hi = base.agg(F.max("ts").alias("m")).collect()[0]["m"]
@@ -445,13 +434,8 @@ def stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(os.path.join(tmp, "s"))
 
     root = stage_once(f"sivjo_{source_fingerprint(sf_dir)}", write_fn)
-    in_dir = os.path.join(root, "in")
-    name = f"sivjo_{_uuid.uuid4().hex[:8]}"
-    work = _scratch(f"sivjo_{_uuid.uuid4().hex[:8]}")
-    stream = (spark.readStream
-              .schema("event_id bigint, user_id bigint, "
-                      "event_type string, ts timestamp")
-              .option("maxFilesPerTrigger", 1).parquet(in_dir))
+    # the sentinel file carries the same columns as ``base``
+    stream = parquet_stream(spark, os.path.join(root, "in"), base.schema)
     views = (stream.filter(F.col("event_type") == "view")
              .select("user_id", F.col("event_id").alias("view_id"),
                      F.col("ts").alias("v_ts"))
@@ -465,14 +449,10 @@ def stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import scoped_conf
 
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
-        joined = interval_join(views, purch, "user_id", "v_ts", "p_ts",
-                               "1 HOUR", how="left_outer")
-        q = (joined.writeStream.format("memory").queryName(name)
-             .outputMode("append")
-             .option("checkpointLocation", f"{work}/ck")
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    return (spark.table(name)
+        joined = drain_memory(
+            interval_join(views, purch, "user_id", "v_ts", "p_ts", "1 HOUR",
+                          how="left_outer"), "append")
+    return (joined
             .filter(F.col("user_id") >= 0)      # drop the sentinel pair
             .selectExpr("view_id", "user_id", "p_id",
                         "CAST(unix_seconds(p_ts) - unix_seconds(v_ts)"

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources import edge_layout_partitions, load_table
+from ..sources import edge_layout_partitions, fits_broadcast, load_table
 from .catalog import register
 from .queries_ext7 import _CENTS
 
@@ -221,7 +221,8 @@ def graph_mst_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_ext13_semantics.py, which makes the forest unique
     and the check exact.
 
-    Scale: see operators/mst.py — per-round label broadcasts, grouped
+    Scale: see operators/mst.py — per-round label joins (broadcast
+    while the supplier table fits the budget), grouped
     min_by per component, contracted-graph label merge whose input
     halves every round.
     """
@@ -240,5 +241,6 @@ def graph_mst_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
                          " STRING), ':', CAST(dst AS STRING))), 1, 12),"
                          " 16, 10) AS BIGINT) AS weight"))
     forest = boruvka_msf(
-        spark, edges, npart=edge_layout_partitions(spark, sf_dir, "lineitem"))
+        spark, edges, npart=edge_layout_partitions(spark, sf_dir, "lineitem"),
+        broadcast=fits_broadcast(sf_dir, "supplier"))
     return forest.orderBy("src", "dst")

@@ -507,34 +507,19 @@ def mv_stream_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     classification pass runs over the state set (|users| x |months|),
     never over raw history; a 100 TB deployment stores the state
     partitioned by month and reclassifies only users whose state
-    changed. Exactly-once via per-batch overwrite + checkpoint resume,
-    same as the bitmap/decimal-partial views.
+    changed.
     """
-    from .queries_ext import _scratch, source_fingerprint, staged_parquet
+    from .queries_ext import (_scratch, drain_partials, source_fingerprint,
+                              staged_stream)
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         (F.year("ts") * 12 + F.month("ts") - 1).cast("bigint").alias("midx"))
-    work = _scratch(f"growthstream_{source_fingerprint(sf_dir)}")
-    state_dir = f"{work}/state"
-    in_dir = staged_parquet(ev, "growthstream", sf_dir, 4)
-
-    def fold_batch(batch: DataFrame, batch_id: int) -> None:
-        (batch.select("user_id", "midx").distinct()
-         .write.mode("overwrite")
-         .parquet(f"{state_dir}/batch={batch_id}"))
-
-    q = (spark.readStream
-         .schema("event_id long, user_id long, midx long")
-         .option("maxFilesPerTrigger", "1")
-         .parquet(in_dir)
-         .writeStream.foreachBatch(fold_batch)
-         .option("checkpointLocation", f"{work}/ck")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    act = (spark.read.option("basePath", state_dir)
-           .parquet(f"{state_dir}/batch=*")
-           .select("user_id", "midx").distinct())
+    partials = drain_partials(
+        staged_stream(spark, ev, "growthstream", sf_dir, 4),
+        _scratch(f"growthstream_{source_fingerprint(sf_dir)}"),
+        lambda batch: {
+            "state": batch.select("user_id", "midx").distinct()})["state"]
+    act = partials.select("user_id", "midx").distinct()
     return _growth_from_act(act)

@@ -5,7 +5,6 @@ LSH-recall + exact-verify dedup pipeline, and a rate-source demo.
 
 from __future__ import annotations
 
-import tempfile
 import uuid as _uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -529,20 +528,16 @@ def source_rate_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate-micro-batch with a fixed row budget drained through a memory
     sink — rows-only check (synthetic timestamps are wall-clock
     dependent)."""
-    name = f"rate_{_uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_rate_")
+    from .queries_ext import drain_memory
+
     raw = (spark.readStream.format("rate-micro-batch")
            .option("rowsPerBatch", 64)
            .option("numPartitions", 4)
            .load())
     agg = raw.groupBy((F.col("value") % 8).alias("bucket")).agg(
         F.count(F.lit(1)).alias("n"))
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete")
-         .option("checkpointLocation", ckpt)
-         .trigger(once=True).start())
-    q.awaitTermination()
-    return spark.table(name)
+    # availableNow drains exactly one 64-row batch of this source
+    return drain_memory(agg, "complete")
 
 
 @register("source_socket_demo", oracle=None, tags=("source", "stream"))

@@ -163,46 +163,30 @@ def mv_stream_rule_engine(spark: SparkSession, sf_dir: str) -> DataFrame:
     view equals the batch ``dq_rule_engine`` shape over the full feed
     (which is exactly what the oracle recomputes).
 
-    Scale: per-batch state is |rules| rows regardless of batch size;
-    exactly-once via per-batch overwrite + checkpoint resume, the same
-    contract as the other mv_stream views; scratch dirs content-keyed
-    so repeats reuse the drained checkpoint.
+    Scale: per-batch state is |rules| rows regardless of batch size.
     """
-    from .queries_ext import _scratch, source_fingerprint, staged_parquet
+    from .queries_ext import (_scratch, drain_partials, source_fingerprint,
+                              staged_stream)
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value", "ts")
-    work = _scratch(f"rulestream_v1_{source_fingerprint(sf_dir)}")
-    state_dir = f"{work}/state"
-    in_dir = staged_parquet(ev, "rulestream", sf_dir, 4)
-
     checks = F.array(*[
         F.struct(F.lit(rid).alias("rule_id"),
                  F.when(F.expr(pred), F.lit(0)).otherwise(F.lit(1))
                  .alias("viol"))
         for rid, pred in _STREAM_RULES])
 
-    def fold_batch(batch: DataFrame, batch_id: int) -> None:
-        (batch
-         .select(F.explode(checks).alias("c"))
-         .groupBy("c.rule_id")
-         .agg(F.count(F.lit(1)).alias("n_checked"),
-              F.sum("c.viol").alias("n_violations"))
-         .write.mode("overwrite")
-         .parquet(f"{state_dir}/batch={batch_id}"))
+    def fold(batch: DataFrame) -> dict[str, DataFrame]:
+        return {"state": batch
+                .select(F.explode(checks).alias("c"))
+                .groupBy("c.rule_id")
+                .agg(F.count(F.lit(1)).alias("n_checked"),
+                     F.sum("c.viol").alias("n_violations"))}
 
-    q = (spark.readStream
-         .schema("event_id long, event_type string, value double, "
-                 "ts timestamp")
-         .option("maxFilesPerTrigger", "1")
-         .parquet(in_dir)
-         .writeStream.foreachBatch(fold_batch)
-         .option("checkpointLocation", f"{work}/ck")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    partials = spark.read.option("basePath", state_dir).parquet(
-        f"{state_dir}/batch=*")
+    partials = drain_partials(
+        staged_stream(spark, ev, "rulestream", sf_dir, 4),
+        _scratch(f"rulestream_v1_{source_fingerprint(sf_dir)}"),
+        fold)["state"]
     return (partials.groupBy("rule_id")
             .agg(F.sum("n_checked").alias("n_checked"),
                  F.sum("n_violations").alias("n_violations"))

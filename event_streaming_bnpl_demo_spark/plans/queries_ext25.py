@@ -110,10 +110,12 @@ def run_pit_stream(spark: SparkSession, in_dir: str, work: str) -> DataFrame:
     are picked up incrementally on the next call; already-processed
     slices are never re-read (exercised by the partial-feed resume law
     in ``tests/test_ext25_semantics.py``)."""
-    state_dir, out_dir = f"{work}/state", f"{work}/out"
+    from .queries_ext import drain_partials, parquet_stream
+
+    state_dir = f"{work}/state"
     agg_cols = ["c_all", *[f"c_{t}" for t in _TYPES], "v_cents"]
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
+    def fold(batch: DataFrame) -> dict[str, DataFrame]:
         # min (ts, event_id) — struct min orders lexicographically, so
         # the batch boundary is the composite range key, not ts alone:
         # two adjacent range slices CAN share a min ts (a slice made
@@ -121,7 +123,7 @@ def run_pit_stream(spark: SparkSession, in_dir: str, work: str) -> DataFrame:
         # silently drop the earlier slice's whole history.
         b0 = batch.agg(F.min(F.struct("ts", "event_id"))).collect()[0][0]
         if b0 is None:
-            return  # empty micro-batch: no state, no output (a NullType
+            return {}  # empty micro-batch: no state, no output (a NullType
             # slice_min_ts literal would otherwise break the write)
         bmin, bmin_eid = b0["ts"], b0["event_id"]
         have_state = bool(_glob.glob(f"{state_dir}/batch=*"))
@@ -159,27 +161,20 @@ def run_pit_stream(spark: SparkSession, in_dir: str, work: str) -> DataFrame:
                      "b_all + c_all AS n_prior_events",
                      *[f"b_{t} + c_{t} AS n_prior_{t}s" for t in _TYPES],
                      "b_cents + v_cents AS prior_value_cents"))
-        feats.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        (batch.groupBy("user_id")
-         .agg(F.count(F.lit(1)).alias("c_all"),
-              *[F.expr(f"SUM(CASE WHEN event_type = '{t}' THEN 1 ELSE 0"
-                       f" END)").alias(f"c_{t}") for t in _TYPES],
-              F.sum("vcents").alias("v_cents"))
-         .withColumn("slice_min_ts", F.lit(bmin))
-         .withColumn("slice_min_eid", F.lit(bmin_eid))
-         .write.mode("overwrite").parquet(f"{state_dir}/batch={batch_id}"))
+        state = (batch.groupBy("user_id")
+                 .agg(F.count(F.lit(1)).alias("c_all"),
+                      *[F.expr(f"SUM(CASE WHEN event_type = '{t}' THEN 1"
+                               f" ELSE 0 END)").alias(f"c_{t}")
+                        for t in _TYPES],
+                      F.sum("vcents").alias("v_cents"))
+                 .withColumn("slice_min_ts", F.lit(bmin))
+                 .withColumn("slice_min_eid", F.lit(bmin_eid)))
+        return {"out": feats, "state": state}
 
-    q = (spark.readStream
-         .schema("event_id long, user_id long, event_type string, "
-                 "ts timestamp, vcents long")
-         .option("maxFilesPerTrigger", "1")
-         .parquet(in_dir)
-         .writeStream.foreachBatch(fold)
-         .option("checkpointLocation", f"{work}/ck")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    out = spark.read.option("basePath", out_dir).parquet(f"{out_dir}/batch=*")
+    # the slice layout is staged by stage_time_slices, so the stream
+    # schema is read from the staged files' footers
+    stream = parquet_stream(spark, in_dir, spark.read.parquet(in_dir).schema)
+    out = drain_partials(stream, work, fold)["out"]
     return out.select(
         "event_id", "user_id",
         F.col("n_prior_events").cast("bigint").alias("n_prior_events"),

@@ -200,22 +200,12 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one state-store shuffle on the dedup key; state size is
     bounded by the watermark horizon, not stream history.
     """
-    import uuid as _uuid
-
-    from .queries_ext import _scratch, staged_parquet
+    from .queries_ext import drain_memory, staged_stream
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"), "event_type")
-    doubled = ev.unionAll(ev)
-    work = _scratch(f"dedup_wm_{_uuid.uuid4().hex[:8]}")
-    # single-file input -> duplicates ride in the same micro-batch;
-    # content-keyed staging reuses the write across repeat runs
-    in_dir = staged_parquet(doubled, "dedup_wm", sf_dir, 1)
-
-    name = f"dedup_wm_{_uuid.uuid4().hex[:8]}"
-    stream = (spark.readStream
-              .schema("event_id long, ts timestamp, event_type string")
-              .parquet(in_dir))
+    # single-file input -> duplicates ride in the same micro-batch
+    stream = staged_stream(spark, ev.unionAll(ev), "dedup_wm", sf_dir, 1)
     from ..session import scoped_conf
 
     # fresh-checkpoint stateful query: size the state store for the
@@ -232,18 +222,10 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     with scoped_conf(spark, {
             "spark.sql.streaming.noDataMicroBatches.enabled": "false",
             "spark.sql.shuffle.partitions": "8"}):
-        deduped = (stream.withWatermark("ts", "1 hour")
-                   .dropDuplicatesWithinWatermark(["event_id"]))
-        q = (deduped.writeStream.format("memory").queryName(name)
-             .outputMode("append")
-             .option("checkpointLocation", f"{work}/ck")
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    # Memory sink: the checkpoint belongs to the now-terminated query;
-    # drop the scratch dir instead of orphaning one per invocation.
-    import shutil
-    shutil.rmtree(work, ignore_errors=True)
-    return (spark.table(name).groupBy("event_type")
+        deduped = drain_memory(
+            stream.withWatermark("ts", "1 hour")
+            .dropDuplicatesWithinWatermark(["event_id"]), "append")
+    return (deduped.groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n_unique")))
 
 

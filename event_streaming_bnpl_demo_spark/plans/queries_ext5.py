@@ -917,41 +917,18 @@ def mv_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-batch state is |types| sketches (~KB each) regardless
     of batch row count; the terminal union moves sketches, not
-    user_ids. Exactly-once via per-batch overwrite, same as the
-    decimal-partial views.
+    user_ids.
     """
-    from .queries_ext import _scratch, source_fingerprint, staged_parquet
+    from .queries_ext import (_scratch, drain_partials, source_fingerprint,
+                              staged_stream)
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id")
-    # Deterministic content-keyed work dir (state + checkpoint), like
-    # every other staged view: repeat invocations resume the drained
-    # checkpoint (0 new files) and reuse the existing partials instead
-    # of accumulating a fresh uuid-keyed orphan per bench repeat. A
-    # changed source dir changes the fingerprint and starts clean; a
-    # run killed mid-stream resumes from the checkpoint and completes
-    # (per-batch dirs are overwrite-idempotent).
-    work = _scratch(f"hllstream_{source_fingerprint(sf_dir)}")
-    state_dir = f"{work}/state"
-    in_dir = staged_parquet(ev, "hllstream", sf_dir, 4)
-
-    def fold_batch(batch: DataFrame, batch_id: int) -> None:
-        (batch.groupBy("event_type")
-         .agg(F.hll_sketch_agg("user_id").alias("sk"))
-         .write.mode("overwrite")
-         .parquet(f"{state_dir}/batch={batch_id}"))
-
-    q = (spark.readStream
-         .schema("event_id long, event_type string, user_id long")
-         .option("maxFilesPerTrigger", "1")
-         .parquet(in_dir)
-         .writeStream.foreachBatch(fold_batch)
-         .option("checkpointLocation", f"{work}/ck")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    partials = spark.read.option("basePath", state_dir).parquet(
-        f"{state_dir}/batch=*")
+    partials = drain_partials(
+        staged_stream(spark, ev, "hllstream", sf_dir, 4),
+        _scratch(f"hllstream_{source_fingerprint(sf_dir)}"),
+        lambda batch: {"state": batch.groupBy("event_type").agg(
+            F.hll_sketch_agg("user_id").alias("sk"))})["state"]
     streamed = (partials.groupBy("event_type")
                 .agg(F.hll_sketch_estimate(
                     F.hll_union_agg("sk")).alias("est_streamed")))

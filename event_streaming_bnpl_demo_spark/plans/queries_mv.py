@@ -22,15 +22,13 @@ decimal is cast to double through the string round-trip idiom of
 
 from __future__ import annotations
 
-import shutil
-import uuid as _uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import load_table
 from .catalog import register
-from .queries_ext import _scratch, source_fingerprint, staged_parquet
+from .queries_ext import (_scratch, drain_memory, drain_partials,
+                          source_fingerprint, staged_stream)
 from .sqlcompat import dsum_sql
 
 # The exact-decimal -> double boundary used by every view below (same
@@ -54,20 +52,17 @@ def _seg_partial(orders: DataFrame, dim: DataFrame,
                  .alias("psum")))
 
 
-def nation_fold_batch(dim: DataFrame, state_dir: str):
-    """foreachBatch body of the streaming JOIN+AGG refresh: join the
-    micro-batch to the broadcast customer dim and overwrite this
-    batch's associative partial (count, exact decimal sum) per nation.
-    Factored out so the exactly-once resume test drives the SAME fold
-    the production query runs."""
-    def fold_batch(batch: DataFrame, batch_id: int) -> None:
-        (batch.join(F.broadcast(dim), batch.o_custkey == dim.c_custkey)
-         .groupBy("c_nationkey")
-         .agg(F.count(F.lit(1)).alias("pn"),
-              F.sum(F.col("o_totalprice").cast("decimal(30,2)"))
-              .alias("psum"))
-         .write.mode("overwrite").parquet(f"{state_dir}/batch={batch_id}"))
-    return fold_batch
+def nation_fold_batch(batch: DataFrame, dim: DataFrame) -> DataFrame:
+    """One micro-batch's partial of the streaming JOIN+AGG refresh: the
+    batch joined to the broadcast customer dim, folded to an
+    associative (count, exact decimal sum) per nation. Factored out so
+    the exactly-once resume test drains the SAME fold the production
+    query runs."""
+    return (batch.join(F.broadcast(dim), batch.o_custkey == dim.c_custkey)
+            .groupBy("c_nationkey")
+            .agg(F.count(F.lit(1)).alias("pn"),
+                 F.sum(F.col("o_totalprice").cast("decimal(30,2)"))
+                 .alias("psum")))
 
 
 def build_scd2_states(ev: DataFrame) -> DataFrame:
@@ -311,9 +306,6 @@ def mv_stream_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the micro-batch, which Structured Streaming's blocking
     aggregate modes cannot express incrementally without it.
 
-    Idempotence: each micro-batch overwrites its own ``batch=<id>``
-    subdirectory, so retries replace (never duplicate) partials.
-
     Scale: per-batch cost = one map-side-combined partial over the
     batch + a dim broadcast reused across batches; state is
     batches × |nations| rows, compacted by the terminal fold.
@@ -322,21 +314,10 @@ def mv_stream_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_totalprice")
     dim = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey")
-    work = _scratch(f"mvstream_{source_fingerprint(sf_dir)}")
-    state_dir = f"{work}/state"
-    in_dir = staged_parquet(o, "mvstream", sf_dir, 4)
-    fold_batch = nation_fold_batch(dim, state_dir)
-    q = (spark.readStream
-         .schema("o_orderkey long, o_custkey long, o_totalprice double")
-         .option("maxFilesPerTrigger", "1")
-         .parquet(in_dir)
-         .writeStream.foreachBatch(fold_batch)
-         .option("checkpointLocation", f"{work}/ck")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    partials = spark.read.option("basePath", state_dir).parquet(
-        f"{state_dir}/batch=*")
+    partials = drain_partials(
+        staged_stream(spark, o, "mvstream", sf_dir, 4),
+        _scratch(f"mvstream_{source_fingerprint(sf_dir)}"),
+        lambda batch: {"state": nation_fold_batch(batch, dim)})["state"]
     folded = (partials.groupBy("c_nationkey")
               .agg(F.sum("pn").alias("n_orders"),
                    F.sum("psum").alias("rev_dec")))
@@ -402,33 +383,13 @@ def stream_fanout_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value")
-    # Content-keyed work dir: repeat invocations resume the drained
-    # checkpoint and reuse the partials (no uuid orphan per bench run).
-    work = _scratch(f"fanout_{source_fingerprint(sf_dir)}")
-    state = f"{work}/state"
-    in_dir = staged_parquet(ev, "fanout", sf_dir, 4)
-
-    def fan_batch(batch: DataFrame, batch_id: int) -> None:
-        batch.persist()
-        for sink, part in fanout_partials(batch).items():
-            part.write.mode("overwrite").parquet(
-                f"{state}/{sink}/batch={batch_id}")
-        batch.unpersist()
-
-    q = (spark.readStream
-         .schema("event_id long, ts timestamp_ntz, user_id long, "
-                 "event_type string, value double")
-         .option("maxFilesPerTrigger", "1")
-         .parquet(in_dir)
-         .writeStream.foreachBatch(fan_batch)
-         .option("checkpointLocation", f"{work}/ck")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    partials = drain_partials(
+        staged_stream(spark, ev, "fanout", sf_dir, 4),
+        _scratch(f"fanout_v2_{source_fingerprint(sf_dir)}"),
+        fanout_partials)
 
     def summarize(sink: str, key: str) -> DataFrame:
-        parts = spark.read.option("basePath", f"{state}/{sink}").parquet(
-            f"{state}/{sink}/batch=*")
-        folded = parts.groupBy(key).agg(F.sum("psum").alias("gsum"))
+        folded = partials[sink].groupBy(key).agg(F.sum("psum").alias("gsum"))
         return (folded.agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("gsum").alias("tot_dec"))
@@ -504,25 +465,9 @@ def stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     states = build_scd2_states(ev).localCheckpoint(eager=True)
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "value")
-    work = _scratch(f"scd2e_{_uuid.uuid4().hex[:8]}")
-    name = f"scd2e_{_uuid.uuid4().hex[:8]}"
-    in_dir = staged_parquet(purchases, "scd2e", sf_dir, 4)
-
-    stream = (spark.readStream
-              .schema("user_id long, ts timestamp_ntz, value double")
-              .option("maxFilesPerTrigger", "1")
-              .parquet(in_dir))
-    enriched = scd2_enrich_join(stream, states)
-    q = (enriched.writeStream.format("memory").queryName(name)
-         .outputMode("append")
-         .option("checkpointLocation", f"{work}/ck")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    # Memory sink: rows live in the session, the checkpoint only holds
-    # offsets for the now-terminated query — drop the scratch dir here
-    # instead of orphaning one per invocation.
-    shutil.rmtree(work, ignore_errors=True)
-    return (spark.table(name).groupBy("state")
+    stream = staged_stream(spark, purchases, "scd2e", sf_dir, 4)
+    enriched = drain_memory(scd2_enrich_join(stream, states), "append")
+    return (enriched.groupBy("state")
             .agg(F.count(F.lit(1)).alias("n_purchases"),
                  F.expr(dsum_sql("value")).alias("total_value")))
 
@@ -778,33 +723,13 @@ def mv_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaderboard every dashboard runs, with state that never grows past
     k·batches — versus a complete-mode streaming aggregation whose
     state would hold every key seen.
-
-    Idempotence: each micro-batch overwrites its own ``batch=<id>``
-    partial, so retries replace rather than duplicate.
     """
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice")
-    work = _scratch(f"mvstopk_{source_fingerprint(sf_dir)}")
-    state_dir = f"{work}/state"
-    in_dir = staged_parquet(o, "mvstopk", sf_dir, 4)
-
-    def fold_batch(batch: DataFrame, batch_id: int) -> None:
-        (batch.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-         .limit(10)
-         .write.mode("overwrite").parquet(f"{state_dir}/batch={batch_id}"))
-
-    q = (spark.readStream
-         .schema("o_orderkey long, o_custkey long, o_totalprice double")
-         .option("maxFilesPerTrigger", "1")
-         .parquet(in_dir)
-         .writeStream.foreachBatch(fold_batch)
-         .option("checkpointLocation", f"{work}/ck")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    partials = spark.read.option("basePath", state_dir).parquet(
-        f"{state_dir}/batch=*")
-    return (partials
-            .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-            .limit(10)
+    top = F.desc("o_totalprice"), F.asc("o_orderkey")
+    partials = drain_partials(
+        staged_stream(spark, o, "mvstopk", sf_dir, 4),
+        _scratch(f"mvstopk_{source_fingerprint(sf_dir)}"),
+        lambda batch: {"state": batch.orderBy(*top).limit(10)})["state"]
+    return (partials.orderBy(*top).limit(10)
             .select("o_orderkey", "o_custkey", "o_totalprice"))

@@ -202,9 +202,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _run_stream_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the stream-static enrichment join into a memory sink and
     return (tier, n_purchases, purchase_value, n_users_approx)."""
-    import uuid as _uuid
-
-    from .queries_ext import _scratch
+    from .queries_ext import drain_memory
 
     profile = (
         load_table(spark, sf_dir, "events")
@@ -217,7 +215,6 @@ def _run_stream_static(spark: SparkSession, sf_dir: str) -> DataFrame:
              .when(F.col("avg_value") >= 90.0, "mid")
              .otherwise("low").alias("tier"))
     )
-    name = f"enrich_{_uuid.uuid4().hex[:8]}"
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     stream = (spark.readStream
               .schema("event_id long, ts long, user_id long, "
@@ -231,12 +228,7 @@ def _run_stream_static(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.expr(dsum_sql("value")).alias("purchase_value"),
                      F.approx_count_distinct("user_id")
                       .alias("n_users_approx")))
-    q = (enriched.writeStream.format("memory").queryName(name)
-         .outputMode("complete")
-         .option("checkpointLocation", _scratch(f"ck_{name}"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(name)
+    return drain_memory(enriched, "complete")
 
 
 @register("stream_static_join_approx", tags=("stream", "join", "approx"))
@@ -255,9 +247,10 @@ def stream_static_join_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 from .queries_core import ASOF_ORACLE  # noqa: E402 - after registrations
 
 
-def build_asof_stream(spark: SparkSession, in_dir: str) -> DataFrame:
-    """The streaming as-of topology, unstarted: one-file-per-trigger
-    parquet stream -> groupBy(user_id %% ASOF_BUCKETS) ->
+def build_asof_stream(events: DataFrame) -> DataFrame:
+    """The streaming as-of topology over an unstarted stream of
+    ``(user_id, event_id, event_type, ts_us)`` rows:
+    groupBy(user_id %% ASOF_BUCKETS) ->
     applyInPandasWithState(asof_update_bucketed) in UPDATE mode,
     rematching each bucket's users with ONE grouped merge_asof
     (streaming/asof_state.py). Factored out so tests can pin the
@@ -269,11 +262,7 @@ def build_asof_stream(spark: SparkSession, in_dir: str) -> DataFrame:
                                         BUCKETED_STATE_SCHEMA,
                                         asof_update_bucketed)
 
-    return (spark.readStream
-            .schema("user_id long, event_id long, event_type string, "
-                    "ts_us long")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
+    return (events
             .withColumn("bucket", F.pmod(F.col("user_id"),
                                          F.lit(ASOF_BUCKETS)))
             .groupBy("bucket")
@@ -310,20 +299,17 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Retention is unbounded (full retroactive correction needs the full
     log), so availableNow runs are exact.
     """
-    import uuid as _uuid
-
-    from .queries_ext import _scratch, staged_parquet
+    from .queries_ext import drain_memory, staged_stream
 
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("view", "purchase"))
-    work = _scratch(f"sasof_{_uuid.uuid4().hex[:8]}")
-    name = f"sasof_{_uuid.uuid4().hex[:8]}"
     # reshard to 4 parquet files == 4 micro-batches; repartition(4) on
     # no key scrambles event-time order across batches, which is the
     # point: arrival order must not matter. Content-keyed staging:
     # repeat runs (bench n=3) reuse the reshard and time only the
     # streaming query.
-    in_dir = staged_parquet(
+    stream = staged_stream(
+        spark,
         ev.select("user_id", "event_id", "event_type",
                   F.unix_micros(F.col("ts").cast("timestamp"))
                   .alias("ts_us")),
@@ -338,13 +324,7 @@ def stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # machinery-bound, not data-bound: sf1 runs 10x the rows for 1.3x
     # the wall).
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
-        matched = build_asof_stream(spark, in_dir)
-        q = (matched.writeStream.format("memory").queryName(name)
-             .outputMode("update")
-             .option("checkpointLocation", f"{work}/ck")
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    emitted = spark.table(name)
+        emitted = drain_memory(build_asof_stream(stream), "update")
     # fixpoint read: each purchase's HIGHEST-version emission. (purchase,
     # version) is unique — a purchase lives in exactly one bucket and a
     # bucket emits it at most once per micro-batch at that batch's

@@ -476,51 +476,31 @@ def stream_ts_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     trivially). The oracle is the plain batch SQL — the strongest
     possible check that incremental == recompute.
 
-    Idempotence: each micro-batch overwrites its own
-    ``batch=<id>`` subdirectory, so a retried batch replaces (never
-    duplicates) its partials — the same two-phase discipline as the
-    BNPL pipeline's foreachBatch upsert (streaming/pipeline.py).
-
     Scale: per micro-batch work is one partial aggregate of that
     batch's events (map-side combine applies); state grows as
     batches × buckets, compacted by the terminal fold — at 100 TB the
     fold target would be a partitioned table with periodic compaction
     instead of a scratch directory.
     """
-    import uuid as _uuid
+    from .queries_ext import (_scratch, drain_partials, source_fingerprint,
+                              staged_stream)
 
-    from .queries_ext import _scratch, staged_parquet
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "event_type", "value")
 
-    ev = load_table(spark, sf_dir, "events")
-    work = _scratch(f"tsroll_{_uuid.uuid4().hex[:8]}")
-    state_dir = f"{work}/state"
+    def fold(batch: DataFrame) -> dict[str, DataFrame]:
+        return {"state": batch
+                .groupBy(F.date_trunc("hour", "ts").alias("h"), "event_type")
+                .agg(F.count(F.lit(1)).alias("pn"),
+                     F.sum(F.col("value").cast("decimal(30,2)")).alias("psum"),
+                     F.min("value").alias("pmin"),
+                     F.max("value").alias("pmax"))}
+
     # reshard to 4 parquet files == 4 micro-batches (binary-exact
-    # doubles; no text round-trip); content-keyed staging reuses the
-    # write across repeat runs
-    in_dir = staged_parquet(
-        ev.select("event_id", "ts", "event_type", "value"),
-        "tsroll", sf_dir, 4)
-
-    def fold_batch(batch: DataFrame, batch_id: int) -> None:
-        (batch.groupBy(F.date_trunc("hour", "ts").alias("h"), "event_type")
-         .agg(F.count(F.lit(1)).alias("pn"),
-              F.sum(F.col("value").cast("decimal(30,2)")).alias("psum"),
-              F.min("value").alias("pmin"),
-              F.max("value").alias("pmax"))
-         .write.mode("overwrite").parquet(f"{state_dir}/batch={batch_id}"))
-
-    q = (spark.readStream
-         .schema("event_id long, ts timestamp_ntz, event_type string, "
-                 "value double")
-         .option("maxFilesPerTrigger", "1")
-         .parquet(in_dir)
-         .writeStream.foreachBatch(fold_batch)
-         .option("checkpointLocation", f"{work}/ck")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    partials = spark.read.option("basePath", state_dir).parquet(
-        f"{state_dir}/batch=*")
+    # doubles; no text round-trip)
+    partials = drain_partials(
+        staged_stream(spark, ev, "tsroll", sf_dir, 4),
+        _scratch(f"tsroll_{source_fingerprint(sf_dir)}"), fold)["state"]
     return (
         partials.groupBy("h", "event_type")
         .agg(F.sum("pn").alias("n_events"),

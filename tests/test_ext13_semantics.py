@@ -94,11 +94,13 @@ def test_kcore_peel_fixpoint_properties(edges):
         assert inside < 3 or not core, (n, inside)
 
 
-def test_kcore_spark_matches_python_reference(spark):
+def test_kcore_spark_matches_python_reference(spark, monkeypatch):
     """The catalog query's 8-round peel equals the Python fixpoint on
-    the actual smoke graph (rounds-to-converge <= 8 there)."""
+    the actual smoke graph (rounds-to-converge <= 8 there), with the
+    survivor set broadcast and shuffled."""
     from pyspark.sql import functions as F
 
+    from event_streaming_bnpl_demo_spark.plans import queries_ext13
     from event_streaming_bnpl_demo_spark.plans.queries_ext13 import (
         graph_kcore)
     from event_streaming_bnpl_demo_spark.sources import load_table
@@ -114,9 +116,12 @@ def test_kcore_spark_matches_python_reference(spark):
                       F.col("b.l_suppkey").alias("s2"))
               .distinct().collect())}
     want = _kcore_py(pairs, 3)
-    got = {r["node"]: r["core_degree"]
-           for r in graph_kcore(spark, SF_SMOKE).collect()}
-    assert got == want
+    for broadcast in (True, False):
+        monkeypatch.setattr(queries_ext13, "fits_broadcast",
+                            lambda *a, b=broadcast: b)
+        got = {r["node"]: r["core_degree"]
+               for r in graph_kcore(spark, SF_SMOKE).collect()}
+        assert got == want, broadcast
 
 
 def _kruskal_reference(spark):
@@ -164,21 +169,26 @@ def _kruskal_reference(spark):
     return want, len(nodes) - len({find(n) for n in nodes})
 
 
-def test_mst_boruvka_matches_kruskal(spark):
+def test_mst_boruvka_matches_kruskal(spark, monkeypatch):
     """The Borůvka forest equals an independent Python Kruskal under
     the identical strict (weight, src, dst) edge order — exact edge-set
     equality, not just total weight (the strict order makes the forest
-    unique even under weight ties)."""
+    unique even under weight ties) — whether the size decision
+    broadcasts the label joins or shuffles them."""
+    from event_streaming_bnpl_demo_spark.plans import queries_ext18
     from event_streaming_bnpl_demo_spark.plans.queries_ext18 import (
         graph_mst_boruvka)
 
     want, n_forest = _kruskal_reference(spark)
-    got = {(r["src"], r["dst"], r["weight"])
-           for r in graph_mst_boruvka(spark, SF_SMOKE).collect()}
-    assert got == want
-    # forest laws: |edges| = |nodes| - |components|, and acyclic by
-    # construction of the reference equality above
-    assert len(got) == n_forest
+    for broadcast in (True, False):
+        monkeypatch.setattr(queries_ext18, "fits_broadcast",
+                            lambda *a, b=broadcast: b)
+        got = {(r["src"], r["dst"], r["weight"])
+               for r in graph_mst_boruvka(spark, SF_SMOKE).collect()}
+        assert got == want, broadcast
+        # forest laws: |edges| = |nodes| - |components|, and acyclic by
+        # construction of the reference equality above
+        assert len(got) == n_forest, broadcast
 
 
 def test_mst_boruvka_contracted_merge_matches_kruskal(spark, monkeypatch):
@@ -221,7 +231,8 @@ def test_mst_boruvka_float_weights_and_exact_round_budget(spark):
     edges = spark.createDataFrame(
         [(0, 1, 0.5), (2, 3, 0.25), (1, 2, 10.75)],
         "src long, dst long, weight double")
-    forest = boruvka_msf(spark, edges, max_rounds=2, npart=2)
+    forest = boruvka_msf(spark, edges, max_rounds=2, npart=2,
+                         broadcast=True)
     assert forest.schema["weight"].dataType.simpleString() == "double"
     got = {(r["src"], r["dst"], r["weight"]) for r in forest.collect()}
     assert got == {(0, 1, 0.5), (2, 3, 0.25), (1, 2, 10.75)}
@@ -229,4 +240,4 @@ def test_mst_boruvka_float_weights_and_exact_round_budget(spark):
     # the safety net still fires for a genuinely over-budget graph
     import pytest as _pytest
     with _pytest.raises(RuntimeError, match="did not converge"):
-        boruvka_msf(spark, edges, max_rounds=1, npart=2)
+        boruvka_msf(spark, edges, max_rounds=1, npart=2, broadcast=True)

@@ -499,18 +499,20 @@ def test_stream_asof_state_store_shape(spark, tmp_path):
     emitted rows would double the per-batch shuffle at scale."""
     from pyspark.sql import functions as F
 
+    from event_streaming_bnpl_demo_spark.plans.queries_ext import \
+        parquet_stream
     from event_streaming_bnpl_demo_spark.plans.queries_stream import \
         build_asof_stream
     from event_streaming_bnpl_demo_spark.sources import load_table
 
     in_dir = str(tmp_path / "in")
-    (load_table(spark, SF_SMOKE, "events")
-     .filter(F.col("event_type").isin("view", "purchase"))
-     .select("user_id", "event_id", "event_type",
-             F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"))
-     .limit(1000).coalesce(1).write.mode("overwrite").parquet(in_dir))
+    ev = (load_table(spark, SF_SMOKE, "events")
+          .filter(F.col("event_type").isin("view", "purchase"))
+          .select("user_id", "event_id", "event_type",
+                  F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us")))
+    ev.limit(1000).coalesce(1).write.mode("overwrite").parquet(in_dir)
 
-    matched = build_asof_stream(spark, in_dir)
+    matched = build_asof_stream(parquet_stream(spark, in_dir, ev.schema))
     q = (matched.writeStream.format("memory")
          .queryName("pin_sasof").outputMode("update")
          .option("checkpointLocation", str(tmp_path / "ck"))
@@ -1483,3 +1485,35 @@ def test_split_starvation_audit_flags_one_split_multipliers(spark):
     scalar = probes.agg(F.avg("clat").alias("m"))
     q22_like = supp.join(F.broadcast(scalar), supp.slat > F.col("m"))
     assert split_starvation("q", q22_like, spark, splits_of, 32) == []
+
+
+def test_streaming_drains_live_only_in_the_drain_helpers():
+    """Every catalog view drains its stream through
+    ``queries_ext.drain_partials`` or ``drain_memory``: no other
+    function in ``plans/`` starts a ``writeStream``, awaits one, or
+    sets a checkpoint location or an ``availableNow`` trigger. The one
+    exception is ``source_socket_demo``, whose socket source runs on a
+    processingTime trigger until it is stopped."""
+    import ast
+    import pathlib
+
+    from event_streaming_bnpl_demo_spark import plans
+
+    allowed = {("queries_ext.py", "drain_partials"),
+               ("queries_ext.py", "drain_memory"),
+               ("queries_ext2.py", "source_socket_demo")}
+    found = set()
+    for path in sorted(pathlib.Path(plans.__file__).parent.glob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            owner = getattr(top, "name", "<module>")
+            for node in ast.walk(top):
+                if ((isinstance(node, ast.Attribute)
+                     and node.attr in ("writeStream", "awaitTermination"))
+                        or (isinstance(node, ast.Constant)
+                            and node.value == "checkpointLocation")
+                        or (isinstance(node, ast.keyword)
+                            and node.arg == "availableNow")):
+                    found.add((path.name, owner))
+    assert found - allowed == set()
+    assert {("queries_ext.py", "drain_partials"),
+            ("queries_ext.py", "drain_memory")} <= found

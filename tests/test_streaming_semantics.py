@@ -418,6 +418,8 @@ def _run_asof_stream(spark, tmp_path, batches: list[list[tuple]],
     file source's batch order), and drain them through the production
     as-of topology (queries_stream.build_asof_stream). Returns the
     emitted update-mode table."""
+    from event_streaming_bnpl_demo_spark.plans.queries_ext import \
+        parquet_stream
     from event_streaming_bnpl_demo_spark.plans.queries_stream import \
         build_asof_stream
 
@@ -429,7 +431,10 @@ def _run_asof_stream(spark, tmp_path, batches: list[list[tuple]],
         spark.createDataFrame(b, cols).coalesce(1).write.parquet(sub)
         for f in os.listdir(sub):
             os.utime(os.path.join(sub, f), (now - 60 + i, now - 60 + i))
-    q = (build_asof_stream(spark, in_dir + "/f*")
+    events = parquet_stream(spark, in_dir + "/f*",
+                            "user_id long, event_id long, "
+                            "event_type string, ts_us long")
+    q = (build_asof_stream(events)
          .writeStream.format("memory").queryName(name)
          .outputMode("update")
          .option("checkpointLocation", str(tmp_path / "ck"))
@@ -617,40 +622,35 @@ def test_mv_stream_refresh_resumes_exactly_once(spark, tmp_path):
     dim = load_table(spark, SF_SMOKE, "customer").select(
         "c_custkey", "c_nationkey")
     in_dir = str(tmp_path / "in")
-    state_dir = str(tmp_path / "state")
-    ck = str(tmp_path / "ck")
+    work = str(tmp_path / "work")
+    state_dir = f"{work}/state"
     parts = o.randomSplit([0.25, 0.25, 0.25, 0.25], seed=7)
 
     def write_file(i: int) -> None:
         parts[i].coalesce(1).write.mode("append").parquet(in_dir)
 
+    from event_streaming_bnpl_demo_spark.plans.queries_ext import (
+        drain_partials, parquet_stream)
     from event_streaming_bnpl_demo_spark.plans.queries_mv import \
         nation_fold_batch
 
-    fold_batch = nation_fold_batch(dim, state_dir)
-
-    def drain() -> None:
-        q = (spark.readStream
-             .schema("o_orderkey long, o_custkey long, o_totalprice double")
-             .option("maxFilesPerTrigger", "1")
-             .parquet(in_dir)
-             .writeStream.foreachBatch(fold_batch)
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+    def drain():
+        # the production drain and fold of mv_stream_join_agg, on a
+        # checkpoint that survives between calls
+        return drain_partials(
+            parquet_stream(spark, in_dir, o.schema), work,
+            lambda batch: {"state": nation_fold_batch(batch, dim)})["state"]
 
     write_file(0); write_file(1)
     drain()
     n_batches_first = len(os.listdir(state_dir))
     write_file(2); write_file(3)
-    drain()                      # fresh query, same checkpoint
+    partials = drain()           # fresh query, same checkpoint
     batches = sorted(os.listdir(state_dir))
     # resumed query continued the batch-id sequence: only NEW partials
     # were added, none of the first run's were reprocessed/overwritten
     assert len(batches) == n_batches_first + 2, batches
 
-    partials = spark.read.option("basePath", state_dir).parquet(
-        f"{state_dir}/batch=*")
     folded = (partials.groupBy("c_nationkey")
               .agg(F.sum("pn").alias("n_orders"),
                    F.sum("psum").alias("rev")))
@@ -664,6 +664,81 @@ def test_mv_stream_refresh_resumes_exactly_once(spark, tmp_path):
     want = {r["c_nationkey"]: (r["n_orders"], r["rev"])
             for r in batch.collect()}
     assert got == want
+
+
+def test_memory_sink_views_leave_nothing_in_the_temp_dir(spark):
+    """Every memory-sink view drains on Spark's temporary checkpoint,
+    which Spark deletes when the availableNow query ends cleanly: a
+    call leaves no checkpoint dir behind. Each view runs once first, so
+    its staged input and the JVM's one-off temp files exist before the
+    listing the second call is checked against."""
+    import tempfile
+
+    from event_streaming_bnpl_demo_spark.plans import all_queries
+
+    from .conftest import SF_SMOKE
+
+    tmp = tempfile.gettempdir()
+    queries = all_queries()
+    for name in ("stream_scd2_enrich", "stream_asof_join",
+                 "stream_static_join", "stream_interval_join",
+                 "stream_interval_join_outer", "stream_dedup_watermark",
+                 "source_stream_replay", "source_rate_demo"):
+        fn = queries[name].fn
+        fn(spark, SF_SMOKE).collect()
+        before = set(os.listdir(tmp))
+        assert fn(spark, SF_SMOKE).collect(), name
+        assert set(os.listdir(tmp)) - before == set(), name
+
+
+def test_partials_view_redrain_reads_no_new_rows(spark):
+    """A foreachBatch partials view keeps one content-keyed work dir:
+    a second call resumes the drained checkpoint, folds zero input
+    rows, makes no new dir and returns the same rows."""
+    import tempfile
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from event_streaming_bnpl_demo_spark.plans.queries_ext import (
+        _scratch, source_fingerprint)
+    from event_streaming_bnpl_demo_spark.plans.queries_ts import \
+        stream_ts_rollup
+
+    from .conftest import SF_SMOKE
+
+    class InputRows(StreamingQueryListener):
+        def __init__(self):
+            self.rows = []
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.rows.append(event.progress.numInputRows)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    work = _scratch(f"tsroll_{source_fingerprint(SF_SMOKE)}")
+    first = sorted(stream_ts_rollup(spark, SF_SMOKE).collect())
+    assert os.path.isdir(work)
+
+    after_first = set(os.listdir(tempfile.gettempdir()))
+    bus.waitUntilEmpty()
+    listener = InputRows()
+    spark.streams.addListener(listener)
+    try:
+        again = sorted(stream_ts_rollup(spark, SF_SMOKE).collect())
+        bus.waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    assert again == first
+    assert sum(listener.rows) == 0, listener.rows
+    assert set(os.listdir(tempfile.gettempdir())) == after_first
 
 
 def test_dynamic_gap_session_stream_matches_batch(spark, tmp_path):
