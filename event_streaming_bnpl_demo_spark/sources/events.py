@@ -27,16 +27,21 @@ from pyspark.sql import functions as F
 from ..schemas import BNPL_ENVELOPE
 
 
+#: the envelope's fields, lifted out of the parsed struct ``e``; an
+#: event without ``ingest_ts`` is stamped when it is parsed
+_ENVELOPE_FIELDS = tuple(
+    "coalesce(e.ingest_ts, current_timestamp()) AS ingest_ts"
+    if f.name == "ingest_ts" else f"e.{f.name}" for f in BNPL_ENVELOPE)
+
+
 def _parse_envelope(raw: DataFrame) -> DataFrame:
     """value:string -> typed envelope columns (dynamic-parse analog of
     consumer/consumer.go:112-119, done once, vectorized, JVM-side)."""
     return (
-        raw.select(
-            F.col("value").alias("event_data"),
-            F.from_json("value", BNPL_ENVELOPE).alias("e"),
-        )
-        .select("event_data", "e.*")
-        .withColumn("ingest_ts", F.coalesce("ingest_ts", F.current_timestamp()))
+        raw.selectExpr(
+            "value AS event_data",
+            f"from_json(value, '{BNPL_ENVELOPE.simpleString()}') AS e")
+        .selectExpr("event_data", *_ENVELOPE_FIELDS)
     )
 
 

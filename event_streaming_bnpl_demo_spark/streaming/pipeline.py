@@ -114,14 +114,11 @@ class BnplPipeline:
     @staticmethod
     def _flatten(events: DataFrame) -> DataFrame:
         """Cascade flattening: union derived promise events into the
-        batch so they materialize in the same cycle."""
+        batch so they materialize in the same cycle. A derived event's
+        document is its envelope fields as JSON, in envelope order."""
         derived = transforms.derive_promises(events)
-        derived = derived.select(
-            F.to_json(F.struct([c for c in derived.columns
-                                if c not in ("event_data",)])).alias("event_data"),
-            "*",
-        ).select(events.columns)
-        return events.unionByName(derived)
+        return events.unionByName(
+            derived.selectExpr("to_json(struct(*)) AS event_data", "*"))
 
     def _process_batch(self, micro_batch: DataFrame) -> None:
         # archive + the two projection folds touch disjoint directories
@@ -132,14 +129,18 @@ class BnplPipeline:
         # It is the cached handle, not its flattened union: each branch
         # of the union scans its input, so filling a cache of the union
         # would read and parse every file twice and make numInputRows
-        # count each line twice. The folds take the batch as delivered:
+        # count each line twice. The cache is filled by one job before
+        # the sinks start: started together, each sink's job would read
+        # and parse the files itself until the cached blocks registered.
+        # The folds take the batch as delivered:
         # duplicates cost no dedup pass, since every combiner ignores
         # them. The handle unpersists before the batch returns.
         from concurrent.futures import ThreadPoolExecutor
 
         source = micro_batch.persist()
-        events = self._flatten(source)
         try:
+            source.write.format("noop").mode("overwrite").save()
+            events = self._flatten(source)
             with ThreadPoolExecutor(max_workers=3) as ex:
                 futs = [ex.submit(self._archive, events),
                         ex.submit(self._fold, self.promises_table,

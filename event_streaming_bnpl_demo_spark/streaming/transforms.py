@@ -4,6 +4,12 @@ Streaming (one StructType registry, one transform library — SURVEY.md
 no side effects, so the identical code runs under ``spark.read`` and
 ``spark.readStream``.
 
+Each operator is built with one call from SQL expression strings
+(``selectExpr``, ``where``, ``F.expr``): one py4j round trip per
+operator instead of one per column function, which is what a
+micro-batch's plan costs the driver. Values from callers (the user id
+of :func:`user_status`) enter as ``F.lit`` columns, never as SQL text.
+
 Each projection is a pair: ``*_rows(events)``, a per-event ``select``
 into the stored state's schema, and ``combine_*(rows)``, one keyed
 ``groupBy(key).agg``. Every combiner is associative, commutative and
@@ -34,12 +40,8 @@ def archive_rows(events: DataFrame) -> DataFrame:
     """Event-log archive rows (events table, readme:65-70): stable id =
     sha of the payload (idempotent under redelivery — the reference's
     fresh-UUID-per-insert made duplicates undetectable)."""
-    return events.select(
-        F.sha2(F.col("event_data"), 256).alias("id"),
-        "event_type",
-        "event_data",
-        F.col("ingest_ts").alias("created_at"),
-    )
+    return events.selectExpr("sha2(event_data, 256) AS id", "event_type",
+                             "event_data", "ingest_ts AS created_at")
 
 
 def derive_promises(events: DataFrame) -> DataFrame:
@@ -51,36 +53,34 @@ def derive_promises(events: DataFrame) -> DataFrame:
     (consumer/consumer.go:137-138). promise_id is derived
     deterministically from the order so replays are idempotent.
     """
-    purchases = events.filter(F.col("event_type") == "PurchaseCompletedEvent")
-    return purchases.select(
-        F.lit("PaymentPromiseCreatedEvent").alias("event_type"),
-        F.col("order_id"),
-        F.col("user_id"),
-        F.col("amount").cast("long").alias("amount"),
-        F.md5(F.concat(F.lit("promise:"), F.col("order_id"))).alias("promise_id"),
-        F.lit(None).cast("string").alias("bill_id"),
-        F.date_format(
-            F.date_add(F.col("ingest_ts").cast("date"), 30),
-            "yyyy-MM-dd").alias("due_date"),
-        F.lit("月まとめ払い").alias("payment_mode"),
-        F.lit(None).cast("string").alias("issued_date"),
-        F.lit(None).cast("string").alias("paid_date"),
-        F.col("ingest_ts"),
+    return events.where("event_type = 'PurchaseCompletedEvent'").selectExpr(
+        "'PaymentPromiseCreatedEvent' AS event_type",
+        "order_id",
+        "user_id",
+        "CAST(amount AS BIGINT) AS amount",
+        "md5(concat('promise:', order_id)) AS promise_id",
+        "CAST(NULL AS STRING) AS bill_id",
+        "date_format(date_add(CAST(ingest_ts AS DATE), 30), 'yyyy-MM-dd')"
+        " AS due_date",
+        "'月まとめ払い' AS payment_mode",
+        "CAST(NULL AS STRING) AS issued_date",
+        "CAST(NULL AS STRING) AS paid_date",
+        "ingest_ts",
     )
 
 
 def promise_rows(events: DataFrame) -> DataFrame:
     """One payment_promises row per PaymentPromiseCreatedEvent, in the
     stored state's schema."""
-    promises = events.filter(F.col("event_type") == "PaymentPromiseCreatedEvent")
-    return promises.select(
-        F.col("promise_id").alias("id"),
+    promises = events.where("event_type = 'PaymentPromiseCreatedEvent'")
+    return promises.selectExpr(
+        "promise_id AS id",
         "order_id",
         "user_id",
-        F.col("amount").cast("long").alias("amount"),
-        F.to_date("due_date").alias("due_date"),
+        "CAST(amount AS BIGINT) AS amount",
+        "to_date(due_date) AS due_date",
         "payment_mode",
-        F.col("ingest_ts").alias("created_at"),
+        "ingest_ts AS created_at",
     )
 
 
@@ -89,10 +89,12 @@ def combine_promises(rows: DataFrame) -> DataFrame:
     ties broken by the remaining columns in order, NULLs first. Rows
     stamped in one batch share a ``created_at``, so without the tie
     break the winner would depend on how events fell into batches."""
-    order = ["created_at"] + [c for c in rows.columns
-                              if c not in ("id", "created_at")]
-    return (rows.groupBy("id").agg(F.min(F.struct(*order)).alias("_first"))
-            .select("id", "_first.*").select(rows.columns))
+    cols = rows.columns
+    order = ", ".join(["created_at"] + [c for c in cols
+                                        if c not in ("id", "created_at")])
+    return (rows.groupBy("id").agg(F.expr(f"min(struct({order})) AS _first"))
+            .selectExpr(*(c if c == "id" else f"_first.{c} AS {c}"
+                          for c in cols)))
 
 
 def project_promises(events: DataFrame) -> DataFrame:
@@ -107,47 +109,48 @@ def project_promises(events: DataFrame) -> DataFrame:
 #: alike, in any grouping and order, and re-folding a replayed batch or
 #: a duplicate event is a no-op.
 _BILLS_COMBINE = {
-    "promise_id": F.max, "user_id": F.max, "create_amount": F.max,
-    "any_amount": F.max, "issued_date": F.max, "paid_date": F.max,
-    "created_at": F.min,
+    "promise_id": "max", "user_id": "max", "create_amount": "max",
+    "any_amount": "max", "issued_date": "max", "paid_date": "max",
+    "created_at": "min",
 }
+
+_BILL_CREATED = "event_type = 'MemberBillCreatedEvent'"
+_BILL_PAID = "event_type = 'PaymentCompletedEvent'"
 
 
 def bill_rows(events: DataFrame) -> DataFrame:
     """One bill-state row per bill event: each column carries the event's
     value where its type sets that column, else NULL, which max/min
     ignore."""
-    created = F.col("event_type") == "MemberBillCreatedEvent"
-    paid = F.col("event_type") == "PaymentCompletedEvent"
-    return events.filter(created | paid).select(
+    return events.where(f"{_BILL_CREATED} OR {_BILL_PAID}").selectExpr(
         "bill_id",
-        F.when(created, F.col("promise_id")).alias("promise_id"),
+        f"CASE WHEN {_BILL_CREATED} THEN promise_id END AS promise_id",
         "user_id",
-        F.when(created, F.col("amount")).alias("create_amount"),
-        F.col("amount").alias("any_amount"),
-        F.when(created, F.col("issued_date")).alias("issued_date"),
-        F.when(paid, F.col("paid_date")).alias("paid_date"),
-        F.col("ingest_ts").alias("created_at"),
+        f"CASE WHEN {_BILL_CREATED} THEN amount END AS create_amount",
+        "amount AS any_amount",
+        f"CASE WHEN {_BILL_CREATED} THEN issued_date END AS issued_date",
+        f"CASE WHEN {_BILL_PAID} THEN paid_date END AS paid_date",
+        "ingest_ts AS created_at",
     )
 
 
 def combine_bills(rows: DataFrame) -> DataFrame:
     """Fold bill rows — raw or already combined — to one per bill_id."""
-    return rows.groupBy("bill_id").agg(*[
-        fn(c).alias(c) for c, fn in _BILLS_COMBINE.items()])
+    return rows.groupBy("bill_id").agg(*(
+        F.expr(f"{fn}({c}) AS {c}") for c, fn in _BILLS_COMBINE.items()))
 
 
 def bills_from_state(agg: DataFrame) -> DataFrame:
     """Finalize the member_bills projection from the bill state."""
-    return agg.select(
-        F.col("bill_id").alias("id"),
+    return agg.selectExpr(
+        "bill_id AS id",
         "promise_id",
         "user_id",
-        F.coalesce("create_amount", "any_amount").cast("long").alias("amount"),
-        F.when(F.col("paid_date").isNotNull(), "paid").otherwise("unpaid")
-         .alias("status"),
-        F.to_date("issued_date").alias("issued_date"),
-        F.to_date("paid_date").alias("paid_date"),
+        "CAST(coalesce(create_amount, any_amount) AS BIGINT) AS amount",
+        "CASE WHEN paid_date IS NOT NULL THEN 'paid' ELSE 'unpaid' END"
+        " AS status",
+        "to_date(issued_date) AS issued_date",
+        "to_date(paid_date) AS paid_date",
         "created_at",
     )
 
@@ -164,17 +167,18 @@ def project_bills(events: DataFrame) -> DataFrame:
 def user_status(promises: DataFrame, bills: DataFrame, user_id: str
                 ) -> tuple[DataFrame, DataFrame]:
     """R12+R13: the /user/:id/status query pair (main.go:213-270) —
-    filter + project on both projections, NULL-safe paid_date."""
-    p = (promises.filter(F.col("user_id") == user_id)
-         .select("order_id", "amount",
-                 F.date_format("due_date", "yyyy-MM-dd").alias("due_date"),
-                 "payment_mode", "created_at"))
-    b = (bills.filter(F.col("user_id") == user_id)
-         .select("id", "amount", "status",
-                 F.date_format("issued_date", "yyyy-MM-dd").alias("issued_date"),
-                 F.when(F.col("paid_date").isNotNull(),
-                        F.date_format("paid_date", "yyyy-MM-dd"))
-                  .alias("paid_date")))
+    filter + project on both projections, NULL-safe paid_date. The user
+    id is a literal column, so no caller string becomes SQL text."""
+    who = F.col("user_id") == F.lit(user_id)
+    p = promises.where(who).selectExpr(
+        "order_id", "amount",
+        "date_format(due_date, 'yyyy-MM-dd') AS due_date",
+        "payment_mode", "created_at")
+    b = bills.where(who).selectExpr(
+        "id", "amount", "status",
+        "date_format(issued_date, 'yyyy-MM-dd') AS issued_date",
+        "CASE WHEN paid_date IS NOT NULL"
+        " THEN date_format(paid_date, 'yyyy-MM-dd') END AS paid_date")
     return p, b
 
 

@@ -24,3 +24,15 @@ def spark():
     s = get_spark("tests", master="local[*]")
     yield s
     s.stop()
+
+
+def jobs_run_by(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` submits from this thread."""
+    sc = spark.sparkContext
+    sc.setJobGroup("jobs_run_by", "jobs_run_by")
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    return list(sc.statusTracker().getJobIdsForGroup("jobs_run_by"))

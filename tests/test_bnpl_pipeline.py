@@ -12,9 +12,12 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from event_streaming_bnpl_demo_spark.streaming import transforms
 from event_streaming_bnpl_demo_spark.streaming.pipeline import BnplPipeline
+
+from .conftest import jobs_run_by
 
 T0 = "2026-01-01T00:00:00.000Z"
 
@@ -443,3 +446,88 @@ def test_observe_quality_metrics(spark, tmp_path):
     assert got["n_rows"] == 3
     assert got["n_missing_type"] == 1
     assert got["n_negative_amount"] == 1
+
+
+def _struct(spec: str, not_null: tuple[str, ...] = ()) -> T.StructType:
+    """``"name type, ..."`` as a StructType, every field nullable but
+    those named in ``not_null``."""
+    fields = []
+    for item in spec.split(","):
+        name, typ = item.split()
+        fields.append(T.StructField(name, _TYPES[typ], name not in not_null))
+    return T.StructType(fields)
+
+
+_TYPES = {"string": T.StringType(), "bigint": T.LongType(),
+          "date": T.DateType(), "timestamp": T.TimestampType()}
+
+
+_ENVELOPE = ("event_data string, event_type string, order_id string,"
+             " user_id string, amount bigint, promise_id string,"
+             " bill_id string, due_date string, payment_mode string,"
+             " issued_date string, paid_date string, ingest_ts timestamp")
+_PROMISES = ("id string, order_id string, user_id string, amount bigint,"
+             " due_date date, payment_mode string, created_at timestamp")
+_BILL_STATE = ("bill_id string, promise_id string, user_id string,"
+               " create_amount bigint, any_amount bigint,"
+               " issued_date string, paid_date string,"
+               " created_at timestamp")
+
+
+def test_transform_output_schemas_pinned(spark, tmp_path):
+    """Each transform's output names, types, order and nullability, as
+    literals: the plans are built from expression strings, and a
+    rewrite of how one is built must not change what it returns."""
+    from event_streaming_bnpl_demo_spark.sources.events import (
+        read_event_batch)
+
+    write_events(str(tmp_path / "in"), GOLDEN + EXTRA_USER)
+    parsed = read_event_batch(spark, str(tmp_path / "in"))
+    events = BnplPipeline._flatten(parsed)
+    promises = transforms.combine_promises(transforms.promise_rows(events))
+    state = transforms.combine_bills(transforms.bill_rows(events))
+    bills = transforms.bills_from_state(state)
+    p, b = transforms.user_status(promises, bills, "u01")
+    want = {
+        "parsed": (parsed, _struct(_ENVELOPE, ("ingest_ts",))),
+        "_flatten": (events, _struct(_ENVELOPE, ("ingest_ts",))),
+        "archive_rows": (transforms.archive_rows(events), _struct(
+            "id string, event_type string, event_data string,"
+            " created_at timestamp", ("created_at",))),
+        "promise_rows": (transforms.promise_rows(events),
+                         _struct(_PROMISES, ("created_at",))),
+        "combine_promises": (promises, _struct(_PROMISES)),
+        "bill_rows": (transforms.bill_rows(events),
+                      _struct(_BILL_STATE, ("created_at",))),
+        "combine_bills": (state, _struct(_BILL_STATE)),
+        "bills_from_state": (bills, _struct(
+            "id string, promise_id string, user_id string, amount bigint,"
+            " status string, issued_date date, paid_date date,"
+            " created_at timestamp", ("status",))),
+        "user_status.promises": (p, _struct(
+            "order_id string, amount bigint, due_date string,"
+            " payment_mode string, created_at timestamp")),
+        "user_status.bills": (b, _struct(
+            "id string, amount bigint, status string, issued_date string,"
+            " paid_date string", ("status",))),
+    }
+    got = {k: df.schema for k, (df, _) in want.items()}
+    assert got == {k: schema for k, (_, schema) in want.items()}
+    # the derived promise's document lists its set fields in envelope order
+    doc = json.loads(events.where("event_type = 'PaymentPromiseCreatedEvent'"
+                                  " AND order_id = 'order-u01'"
+                                  " AND promise_id <> 'pr-001'")
+                     .first()["event_data"])
+    assert list(doc) == ["event_type", "order_id", "user_id", "amount",
+                         "promise_id", "due_date", "payment_mode",
+                         "ingest_ts"]
+
+
+def test_projection_reads_submit_no_job(spark, tmp_path):
+    """``promises()`` and ``bills()`` take the schema from the table
+    manifests: resolving them runs no schema-inference job."""
+    write_events(str(tmp_path / "in"), GOLDEN)
+    pipe = BnplPipeline(spark, str(tmp_path / "in"), str(tmp_path / "out"))
+    pipe.run_stream()
+    assert jobs_run_by(spark, lambda: (pipe.promises(), pipe.bills())) == []
+    assert_golden_state(pipe)

@@ -142,3 +142,18 @@ def test_coverage_doc_lists_every_query():
     assert (int(m.group(1)), int(m.group(2))) == (len(qs), n_oracled), (
         f"COVERAGE.md header says {m.group(0)!r}; registry has "
         f"{len(qs)} catalog queries, {n_oracled} oracled")
+
+
+def test_user_status_keeps_quotes_as_data(spark, tmp_path):
+    """A user id with a quote is a value, not SQL text: its status holds
+    its own rows and no one else's."""
+    eng = BnplEngine(spark, str(tmp_path))
+    eng.purchase("o'brien", 120)
+    eng.purchase("obrien", 80)
+    bill_id = eng.create_bill("pr-1", "o'brien", 120)
+    eng.process()
+    promises, bills = eng.user_status("o'brien")
+    assert [(r["order_id"], r["amount"]) for r in promises.collect()] == [
+        ("order-o'brien", 120)]
+    assert [(r["id"], r["status"]) for r in bills.collect()] == [
+        (bill_id, "unpaid")]

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from event_streaming_bnpl_demo_spark.operators.laketable import LakeTable
 from event_streaming_bnpl_demo_spark.sources import load_table
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, jobs_run_by
 
 
 def _orders(spark):
@@ -235,3 +235,72 @@ def test_bloom_index_refuses_mismatched_key_types(spark, tmp_path):
     assert 0 < len(cand) <= total
     got = t.read_point("o_orderstatus", "F").count()
     assert got == o.filter(F.col("o_orderstatus") == "F").count()
+
+
+def test_reads_take_the_manifest_schema_and_submit_no_job(spark, tmp_path):
+    """Every read — latest, time travel, with tombstones, pruned to no
+    file — plans from the manifest's schema: no inference job runs,
+    and files that predate a column read it as NULL."""
+    t = LakeTable(spark, str(tmp_path / "t"), stat_cols=("id",))
+    t.create(spark.range(6).selectExpr("id", "id * 10 AS v"), n_files=2)
+    t.append(spark.range(6, 9).selectExpr("id", "id * 10 AS v",
+                                          "'new' AS tag"), n_files=1)
+    t.delete_where(spark.range(2).selectExpr("CAST(id AS INT) AS id"),
+                   key_cols=["id"])
+    frames = []
+    assert jobs_run_by(spark, lambda: frames.extend(
+        [t.read(), t.read(0), t.incremental(since=0),
+         t.read_pruned({"id": (100, 200)})])) == []
+    latest, v0, inc, none = frames
+    schema = "struct<id:bigint,v:bigint,tag:string>"
+    assert latest.schema.simpleString() == schema
+    assert all(f.nullable for f in latest.schema)
+    assert v0.schema.simpleString() == "struct<id:bigint,v:bigint>"
+    assert sorted(map(tuple, latest.collect())) == (
+        [(i, i * 10, None) for i in range(2, 6)]
+        + [(i, i * 10, "new") for i in range(6, 9)])
+    assert sorted(r["id"] for r in inc.collect()) == [6, 7, 8]
+    assert none.count() == 0
+    assert t.manifest()["schema"] == latest.schema.jsonValue()
+
+
+def test_append_with_conflicting_type_raises(spark, tmp_path):
+    """A column whose type differs from the table's refuses the append
+    before any file is written: the table keeps its snapshot."""
+    t = LakeTable(spark, str(tmp_path / "t"))
+    t.create(spark.range(3).selectExpr("id", "id AS v"), n_files=1)
+    with pytest.raises(ValueError, match="'v'"):
+        t.append(spark.range(3).selectExpr("id", "CAST(id AS STRING) AS v"))
+    assert t.versions() == [0]
+    assert sorted(os.listdir(tmp_path / "t" / "data")) == [
+        "v00000-000.parquet"]
+
+
+def test_manifest_without_schema_names_the_table(spark, tmp_path):
+    """A table committed before manifests carried the schema fails
+    loudly with its root, not with a KeyError deep in a read."""
+    import json
+
+    root = str(tmp_path / "t")
+    t = LakeTable(spark, root)
+    t.create(spark.range(3), n_files=1)
+    path = os.path.join(root, "_log", "v00000.json")
+    with open(path) as fh:
+        m = json.load(fh)
+    del m["schema"]
+    with open(path, "w") as fh:
+        json.dump(m, fh)
+    with pytest.raises(ValueError, match=root):
+        t.read()
+
+
+def test_staged_tables_are_keyed_on_the_format(spark, monkeypatch):
+    """Tables staged under an older manifest layout are never reused:
+    the staging key carries ``LakeTable.FORMAT``."""
+    from event_streaming_bnpl_demo_spark.plans import queries_lake
+
+    keys = []
+    monkeypatch.setattr(queries_lake, "stage_once",
+                        lambda key, write_fn: keys.append(key) or "/x")
+    queries_lake._staged_table(spark, SF_SMOKE, "tag_v1", lambda t: None)
+    assert keys and f"_f{LakeTable.FORMAT}_" in keys[0]

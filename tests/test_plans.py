@@ -1517,3 +1517,16 @@ def test_streaming_drains_live_only_in_the_drain_helpers():
     assert found - allowed == set()
     assert {("queries_ext.py", "drain_partials"),
             ("queries_ext.py", "drain_memory")} <= found
+
+
+def test_source_schema_evolution_stages_once(spark, tmp_path, monkeypatch):
+    """The two parquet generations are staged once per source and read
+    back on every later call, not rewritten under a fresh dir."""
+    import os
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    q = QUERIES["source_schema_evolution"]
+    first = sorted(map(tuple, q.fn(spark, SF_SMOKE).collect()))
+    assert sorted(map(tuple, q.fn(spark, SF_SMOKE).collect())) == first
+    assert len([d for d in os.listdir(tmp_path) if "_evo_" in d]) == 1
